@@ -419,17 +419,4 @@ object Pipeline {
       case None => staged
     }
   }
-
-  /** E1 with the reference's ALL_DONE cleanup attached: `tempPaths`
-    * (interchange files, landing dirs) are removed whether the run
-    * succeeds or throws — the DAG's cleanup_files_task fused onto the
-    * pipeline instead of scheduled beside it. The result is eagerly
-    * materialized (localCheckpoint) BEFORE cleanup fires, since a lazy
-    * plan could still need the very files being deleted. */
-  def runWithCleanup(spark: SparkSession, pages: Dataset[(Int, String)],
-                     adsType: String, propertyType: String, admins: Seq[String],
-                     existing: Option[DataFrame], key: String = "link",
-                     tempPaths: Seq[String] = Nil): DataFrame =
-    Orchestration.withCleanup(tempPaths)(
-      run(spark, pages, adsType, propertyType, admins, existing, key).localCheckpoint())
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -9,7 +9,9 @@ import org.apache.spark.sql.expressions.Window
   * inside whole-stage codegen. Order mirrors transform_data:
   * null-key filter → keep-first dedup → numeric size extract → price
   * normalize/parse → coercing int casts, plus the badge tokenizer from
-  * the extract stage (reference src/extract.py:75-88).
+  * the extract stage (reference src/extract.py:75-88). The scalar rules
+  * are `Column` values applied in ONE projection, so a region-run pays
+  * one analysis of the cleaned plan instead of one per rewritten column.
   *
   * Pandas-vs-Spark parity decisions (SURVEY.md §7 risk list):
   *  - `str.extract` yields NaN on no-match; `regexp_extract` yields ""
@@ -38,23 +40,30 @@ object Transform {
     * Indonesian units: triliun=1e12, miliar=1e9, juta=1e6, ribu=1e3;
     * comma is the decimal separator; bare numbers pass through;
     * unparseable → NULL. */
-  def parsePrice(df: DataFrame): DataFrame =
-    df.withColumn("price_s",
-        trim(regexp_replace(regexp_replace(lower(col("price_rp")), "rp ", ""), ",", ".")))
-      .withColumn("price_d", expr(
-        """CASE
-          |  WHEN price_s IS NULL THEN NULL
-          |  WHEN contains(price_s, 'triliun') THEN try_cast(replace(price_s, ' triliun', '') AS DOUBLE) * 1000000000000
-          |  WHEN contains(price_s, 'miliar') THEN try_cast(replace(price_s, ' miliar', '') AS DOUBLE) * 1000000000
-          |  WHEN contains(price_s, 'juta') THEN try_cast(replace(price_s, ' juta', '') AS DOUBLE) * 1000000
-          |  WHEN contains(price_s, 'ribu') THEN try_cast(replace(price_s, ' ribu', '') AS DOUBLE) * 1000
-          |  ELSE try_cast(price_s AS DOUBLE) END""".stripMargin))
-      // FLOOR(x+0.5), not ROUND: same half-up result for these
-      // non-negative prices, but pure IEEE ops (Spark's ROUND on
-      // doubles allocates a BigDecimal per row and can disagree with
-      // other engines on boundary-adjacent doubles)
-      .withColumn("price_rp", expr("cast(floor(price_d + 0.5e0) AS BIGINT)"))
-      .drop("price_s", "price_d")
+  val price: Column = {
+    val s = trim(regexp_replace(regexp_replace(lower(col("price_rp")), "rp ", ""), ",", "."))
+    def scaled(unit: String, scale: Long) =
+      replace(s, lit(s" $unit"), lit("")).try_cast("double") * scale
+    val d = when(s.isNull, lit(null))
+      .when(s.contains("triliun"), scaled("triliun", 1000000000000L))
+      .when(s.contains("miliar"), scaled("miliar", 1000000000L))
+      .when(s.contains("juta"), scaled("juta", 1000000L))
+      .when(s.contains("ribu"), scaled("ribu", 1000L))
+      .otherwise(s.try_cast("double"))
+    // FLOOR(x+0.5), not ROUND: same half-up result for these
+    // non-negative prices, but pure IEEE ops (Spark's ROUND on
+    // doubles allocates a BigDecimal per row and can disagree with
+    // other engines on boundary-adjacent doubles)
+    floor(d + 0.5).cast("bigint")
+  }
+
+  /** Numeric size extract (P1, reference src/transform.py:16-22): the
+    * first digit run of a size string, coerced like P5. */
+  def sizeOf(c: String): Column = regexp_extract(col(c), "(\\d+)", 1).try_cast("int")
+
+  /** Coercing int cast (P5, reference src/transform.py:56-67): '10+',
+    * words and NULL become NULL. */
+  def intOf(c: String): Column = col(c).try_cast("int")
 
   /** Badge tokenizer (P6, reference src/extract.py:75-88): 4-regex
     * boundary splitting, normalize separators, strip, drop the first
@@ -63,34 +72,23 @@ object Transform {
     * The reference's first regex uses a lookbehind; the capture-group
     * form here is match-for-match equivalent and RE2-portable for the
     * oracle. */
-  def tokenizeBadge(df: DataFrame): DataFrame = {
+  val additionalFeatures: Column = {
     val norm = regexp_replace(regexp_replace(regexp_replace(regexp_replace(col("badge"),
       "([a-z])([A-Z])", "$1, $2"),
       "([A-Z]{2,})([A-Z][a-z])", "$1, $2"),
       "([^\\w\\s])([A-Za-z])", "$1, $2"),
       "\\s*,\\s*", ", ")
     val stripped = regexp_replace(norm, "^[, ]+|[, ]+$", "")
-    df.withColumn("additional_features", regexp_replace(stripped, "^[^,]*(, )?", ""))
-      .drop("badge")
+    regexp_replace(stripped, "^[^,]*(, )?", "")
   }
-
-  /** Numeric size extract (P1) + coercing int casts (P5,
-    * reference src/transform.py:16-22,56-67). */
-  def castNumerics(df: DataFrame): DataFrame =
-    df.withColumn("lot_size", expr("try_cast(regexp_extract(lot_size, '(\\\\d+)', 1) AS INT)"))
-      .withColumn("building_size", expr("try_cast(regexp_extract(building_size, '(\\\\d+)', 1) AS INT)"))
-      .withColumn("n_bedroom", expr("try_cast(n_bedroom AS INT)"))
-      .withColumn("n_bathroom", expr("try_cast(n_bathroom AS INT)"))
-      .withColumn("n_carport", expr("try_cast(n_carport AS INT)"))
 
   /** Full transform_data chain in the reference's order. */
-  def transform(raw: DataFrame): DataFrame = {
-    val deduped = dedupKeepFirst(dropNullKeys(raw))
-    val typed   = castNumerics(parsePrice(deduped))
-    tokenizeBadge(typed).select(
-      col("ingest_order"), col("link"), col("name"), col("price_rp"),
-      col("location"), col("lot_size"), col("building_size"),
-      col("n_bedroom"), col("n_bathroom"), col("n_carport"),
-      col("additional_features"), col("ads_type"), col("property_type"))
-  }
+  def transform(raw: DataFrame): DataFrame =
+    dedupKeepFirst(dropNullKeys(raw)).select(
+      col("ingest_order"), col("link"), col("name"), price.as("price_rp"),
+      col("location"), sizeOf("lot_size").as("lot_size"),
+      sizeOf("building_size").as("building_size"),
+      intOf("n_bedroom").as("n_bedroom"), intOf("n_bathroom").as("n_bathroom"),
+      intOf("n_carport").as("n_carport"),
+      additionalFeatures.as("additional_features"), col("ads_type"), col("property_type"))
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.util
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -11,17 +12,20 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 for the reference's paginated listing scan (reference
   * src/extract.py:119-201): one row per page `(page INT, html STRING)`,
-  * one input partition per page, fixture-backed by a directory of
-  * `page-N.html` files (offline environment — a live build would fetch
-  * the URL from [[graft.etl.Extract.pageUrl]] inside the partition
-  * reader, giving per-partition fetch parallelism with the
-  * [[graft.etl.RateLimiter]] applied per task).
+  * fixture-backed by a directory of `page-N.html` files (offline
+  * environment — a live build would fetch the URL from
+  * [[graft.etl.Extract.pageUrl]] inside the partition reader). The pages
+  * are packed into `min(pages, leaf parallelism)` contiguous input
+  * partitions of near-equal size, one task per core: reading one page is
+  * less work than a task's fixed scheduling cost. Each reader loops
+  * over its pages in order, applying the [[graft.etl.RateLimiter]] per
+  * page fetch.
   *
   * Implements `SupportsPushDownLimit`: the reference's `num_pages`
   * bound (reference configs/extract.yaml:46) and early-exit semantics
   * (src/extract.py:171-173) become a LIMIT that reaches the source, so
-  * `spark.read.format(...).load().limit(3)` plans exactly 3 page
-  * partitions instead of scanning everything and discarding — at crawl
+  * `spark.read.format(...).load().limit(3)` plans exactly 3 pages
+  * instead of scanning everything and discarding — at crawl
   * scale, the difference between 3 HTTP fetches and all of them.
   *
   * Usage: `spark.read.format("graft.sources.PageSource")
@@ -56,6 +60,21 @@ object PageSource {
       }
     }.sortBy(_._1)
   }
+
+  /** Spark's own parallelism for a leaf scan:
+    * `spark.sql.leafNodeDefaultParallelism`, else the context default. */
+  private[sources] def leafParallelism: Int = {
+    val spark = SparkSession.active
+    spark.conf.getOption("spark.sql.leafNodeDefaultParallelism").map(_.toInt)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+  }
+
+  /** `pages` in order, cut into `min(pages, slots)` contiguous groups
+    * whose sizes differ by at most one. */
+  private[sources] def pack[T](pages: Seq[T], slots: Int): Seq[Seq[T]] = {
+    val n = math.min(pages.length, slots)
+    (0 until n).map(i => pages.slice(i * pages.length / n, (i + 1) * pages.length / n))
+  }
 }
 
 class PageTable(path: String) extends Table with SupportsRead {
@@ -70,7 +89,7 @@ class PageTable(path: String) extends Table with SupportsRead {
 /** Fetch-side read options: `fetcher` names a [[graft.etl.PageFetcher]]
   * class (no-arg constructor) to run each page attempt through the
   * reference's 429-retry loop ([[graft.etl.FetchLoop]]); the sleep knobs
-  * seed the per-task [[graft.etl.RateLimiter]]. Defaults depend on the
+  * seed the [[graft.etl.RateLimiter]]. Defaults depend on the
   * fetcher: the file-backed default sleeps 0 s (no server to be polite
   * to offline), but a NAMED fetcher defaults to the reference's 1 s
   * base/floor — otherwise a live source would inherit a zero-sleep
@@ -112,58 +131,66 @@ class PageScan(path: String, limit: Int, conf: PageFetchConf) extends Scan with 
   override def toBatch: Batch = this
   override def description(): String = s"PageScan(path=$path, pageLimit=$limit)"
   override def planInputPartitions(): Array[InputPartition] = {
-    val planned = PageSource.listPages(path).take(limit)
-      .map { case (n, f) => PagePartition(n, f.getAbsolutePath): InputPartition }
-    PageSource.lastPlannedPages = planned.length
-    planned
+    val pages = PageSource.listPages(path).take(limit).map { case (n, f) => (n, f.getAbsolutePath) }
+    PageSource.lastPlannedPages = pages.length
+    PageSource.pack(pages.toSeq, PageSource.leafParallelism)
+      .map(PagePartition(_): InputPartition).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory = PageReaderFactory(conf)
 }
 
-case class PagePartition(page: Int, file: String) extends InputPartition
+/** A contiguous run of `(page, file)` pairs, read in order by one task. */
+case class PagePartition(pages: Seq[(Int, String)]) extends InputPartition
 
 /** Each partition reader drives the reference's per-page fetch loop
   * (politeness sleep → attempt → 429-backoff-retry-same-page → give up
-  * on other errors). A page whose fetch ultimately fails emits NO row
-  * (the reference appends nothing for it).
+  * on other errors) over its pages in order. A page whose fetch
+  * ultimately fails emits NO row (the reference appends nothing for
+  * it) and the reader moves on to the next page.
   *
   * Limiter scope: a NAMED (live) fetcher shares one adaptive limiter
   * per (fetcher, sleep-config) across every reader in the executor JVM
   * ([[graft.etl.SharedLimiters]]) — 429 backoff and politeness decay
   * observed on any page carry into every subsequent fetch, and fetches
   * against that host are serialized per JVM like the reference's
-  * sequential loop. The file-backed default keeps task-local state (no
+  * sequential loop. The file-backed default keeps per-page state (no
   * server to be polite to offline; full per-partition parallelism). */
 case class PageReaderFactory(conf: PageFetchConf) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val pp = p.asInstanceOf[PagePartition]
+    val pages = p.asInstanceOf[PagePartition].pages.iterator
     new PartitionReader[InternalRow] {
       private val fetcher: graft.etl.PageFetcher = conf.fetcherClass
         .map(c => Class.forName(c).getDeclaredConstructor().newInstance()
           .asInstanceOf[graft.etl.PageFetcher])
         .getOrElse(new graft.etl.FilePageFetcher)
-      private var fetched: Option[String] = None
-      private var done = false
+      private val sharedKey = conf.fetcherClass
+        .map(cls => s"$cls:${conf.baseSleep}:${conf.minSleep}:${conf.maxSleep}")
+      private var row: InternalRow = _
       private def seed = graft.etl.RateLimiter(
         baseSleep = conf.baseSleep, minSleep = conf.minSleep,
         maxSleep = conf.maxSleep).seeded
-      private def runFetch(limiter: graft.etl.RateLimiter) =
+      private def runFetch(page: Int, file: String, limiter: graft.etl.RateLimiter) =
         graft.etl.FetchLoop.fetchPage(
-          fetcher, pp.page, pp.file, limiter,
+          fetcher, page, file, limiter,
           s => if (s > 0) Thread.sleep((s * 1000).toLong))
       override def next(): Boolean = {
-        if (done) return false
-        done = true
-        fetched = conf.fetcherClass match {
-          case Some(cls) =>
-            val key = s"$cls:${conf.baseSleep}:${conf.minSleep}:${conf.maxSleep}"
-            graft.etl.SharedLimiters.withShared(key, seed)(l => runFetch(l))
-          case None => runFetch(seed)._1
+        while (pages.hasNext) {
+          val (page, file) = pages.next()
+          val fetched = sharedKey match {
+            case Some(key) =>
+              graft.etl.SharedLimiters.withShared(key, seed)(l => runFetch(page, file, l))
+            case None => runFetch(page, file, seed)._1
+          }
+          fetched match {
+            case Some(html) =>
+              row = InternalRow(page, UTF8String.fromString(html))
+              return true
+            case None => // failed fetch: this page emits no row
+          }
         }
-        fetched.isDefined
+        false
       }
-      override def get(): InternalRow =
-        InternalRow(pp.page, UTF8String.fromString(fetched.get))
+      override def get(): InternalRow = row
       override def close(): Unit = ()
     }
   }

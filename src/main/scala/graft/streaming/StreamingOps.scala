@@ -2058,18 +2058,6 @@ object StreamingOps {
     }
   }
 
-  /** The streaming wrapper: each micro-batch of admitted doc ids
-    * probes the standing prefix index and folds its verified pairs. */
-  def prefixProbe(docs: DataFrame, indexDir: String, root: String,
-                  checkpointDir: String) = {
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        prefixProbeBatch(batch.sparkSession, batch, indexDir, root)
-      }
-  }
-
   // --------------------------------------------------------------------
   // Exactly-once JDBC sink: the reference's staging-table merge
   // (etl.Load.jdbcUpsert) made redelivery-safe for foreachBatch.
@@ -2199,27 +2187,5 @@ object StreamingOps {
       .join(state("survivors").select("doc_id"), Seq("doc_id"), "left_semi")
     jdbcExactlyOnceBatch(released, batchSeq, url, stagingTable, mainTable,
       key, ledgerTable, dialect, batchSize, props)
-  }
-
-  /** The streaming wrapper for the composed drain. */
-  def dailyIngestMonitoredSink(spark: SparkSession, docs: DataFrame, quota: Int,
-                               centroids: DataFrame, stateRoot: String,
-                               checkpointDir: String,
-                               url: String, stagingTable: String,
-                               mainTable: String, key: String,
-                               ledgerTable: String,
-                               dialect: graft.etl.Load.MergeDialect = graft.etl.Load.AnsiMerge,
-                               batchSize: Int = 500,
-                               props: java.util.Properties = new java.util.Properties,
-                               tokVocab: Option[DataFrame] = None) = {
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dailyIngestMonitoredSinkBatch(spark, batch, batchId, quota, centroids,
-          stateRoot, url, stagingTable, mainTable, key, ledgerTable,
-          dialect, batchSize, props, tokVocab)
-        ()
-      }
   }
 }

@@ -3,6 +3,7 @@ package graft.etl
 import graft.SparkSpec
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Golden-row tests for the reference transform semantics
   * (reference src/transform.py, src/extract.py:75-88; FIXTURES.md A1). */
@@ -74,6 +75,20 @@ class TransformSpec extends SparkSpec {
     assert(feats("KostWIFIDapur") === "WIFI, Dapur")
     assert(feats("Villa-Pool.Spa") === "Pool., Spa")
     assert(feats("Single") === "")
+  }
+
+  test("output schema is pinned: names, order, types and nullability") {
+    val raw = Seq.empty[Extract.RawListing].toDF()
+    val s = StringType
+    val want = StructType(Seq(
+      StructField("ingest_order", LongType, nullable = false),
+      StructField("link", s), StructField("name", s),
+      StructField("price_rp", LongType), StructField("location", s),
+      StructField("lot_size", IntegerType), StructField("building_size", IntegerType),
+      StructField("n_bedroom", IntegerType), StructField("n_bathroom", IntegerType),
+      StructField("n_carport", IntegerType), StructField("additional_features", s),
+      StructField("ads_type", s), StructField("property_type", s)))
+    assert(Transform.transform(raw).schema === want)
   }
 
   test("coercing int casts: '10+' and words become NULL") {

@@ -22,8 +22,9 @@ object FlakyFetcher {
   def reset(): Unit = attempts.clear()
 }
 
-/** DataSourceV2 page source: schema, partition-per-page, and LIMIT
-  * pushdown (the reference's num_pages bound reaching the source). */
+/** DataSourceV2 page source: schema, pages packed into one partition
+  * per core, and LIMIT pushdown (the reference's num_pages bound
+  * reaching the source). */
 class PageSourceSpec extends SparkSpec {
 
   private def card(link: String, name: String, price: String): String =
@@ -47,12 +48,33 @@ class PageSourceSpec extends SparkSpec {
   private def read(dir: String) =
     spark.read.format("graft.sources.PageSource").option("path", dir).load()
 
+  private val LeafParallelism = "spark.sql.leafNodeDefaultParallelism"
+  private def withLeafParallelism[T](n: Int)(body: => T): T = {
+    spark.conf.set(LeafParallelism, n.toLong)
+    try body finally spark.conf.unset(LeafParallelism)
+  }
+
+  /** Page numbers per input partition, in partition order. */
+  private def partitions(df: org.apache.spark.sql.DataFrame): Seq[Seq[Int]] =
+    df.rdd.glom().map(_.map(_.getInt(0)).toSeq).collect().toSeq
+
   test("reads one row per page file with the declared schema") {
-    val dir = writePages(5)
+    val dir = writePages(10)
     val df = read(dir)
     assert(df.schema.fieldNames.toSeq === Seq("page", "html"))
-    assert(df.count() === 5)
-    assert(df.rdd.getNumPartitions === 5) // one partition per page fetch
+    assert(df.count() === 10)
+    // min(pages, leaf parallelism) contiguous partitions, every page
+    // exactly once in page order; without the SQL setting the leaf
+    // parallelism is the context default
+    val dflt = partitions(df)
+    assert(dflt.length === math.min(10, spark.sparkContext.defaultParallelism))
+    assert(dflt.flatten === (1 to 10))
+    withLeafParallelism(3) {
+      assert(partitions(read(dir)) === Seq(1 to 3, 4 to 6, 7 to 10))
+    }
+    withLeafParallelism(64) {
+      assert(partitions(read(dir)) === (1 to 10).map(Seq(_)))
+    }
   }
 
   test("LIMIT is pushed to the source: only k page partitions planned") {
@@ -90,6 +112,24 @@ class PageSourceSpec extends SparkSpec {
     val key = "graft.sources.FlakyFetcher:0.0:0.0:600.0"
     val shared = graft.etl.SharedLimiters.peek(key)
     assert(shared.isDefined, "named fetcher must use the shared per-JVM limiter")
+  }
+
+  test("a failed page in a packed partition drops only its own row") {
+    val dir = writePages(4)
+    FlakyFetcher.reset()
+    graft.etl.SharedLimiters.reset()
+    val df = withLeafParallelism(1) {
+      spark.read.format("graft.sources.PageSource")
+        .option("path", dir)
+        .option("fetcher", "graft.sources.FlakyFetcher")
+        .option("baseSleepSec", "0").option("minSleepSec", "0")
+        .load().localCheckpoint()
+    }
+    // all four pages share one reader: page 3's 503 emits no row and
+    // the reader goes on to page 4
+    assert(partitions(df) === Seq(Seq(1, 2, 4)))
+    assert(FlakyFetcher.attempts.get(3) === 1)
+    assert(FlakyFetcher.attempts.get(4) === 1)
   }
 
   test("feeds the extract pipeline: pages -> cards -> raw rows") {
