@@ -63,31 +63,37 @@ object Bench {
        java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath
      else found).resolve(name)
   }
-  private def priors(which: String, sfDir: String): (Map[String, Double], String) =
+  private def priors(which: String, sfDir: String, cpus: Int): (Map[String, Double], String) =
     try {
       val p = repoRootFile("bench_full.json")
       if (!java.nio.file.Files.exists(p)) (Map.empty, s"none: $p missing")
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        // priors only apply at the SAME scale factor: a dev run at a
-        // smaller SF writes the file too, and sf0.001-second priors
-        // would flag every sf0.1 cell and burn the whole retime budget
-        val sameSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt)
-          .exists(_.group(1) == sfDir)
-        if (!sameSf) (Map.empty, s"none: $p is for a different sf")
-        else {
-          val m = (s""""$which":\\{([^}]*)\\}""".r).findFirstMatchIn(txt)
-          (m.map { g =>
-            """"([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(g.group(1))
-              .map(x => x.group(1) -> x.group(2).toDouble)
-              .filter(_._2 >= 0).toMap
-          }.getOrElse(Map.empty), p.toString)
-        }
+      else priorsFrom(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"),
+                      which, sfDir, cpus) match {
+        case Right(m) => (m, p.toString)
+        case Left(why) => (Map.empty, s"none: $p is for $why")
       }
     } catch {
       case scala.util.control.NonFatal(e) =>
         (Map.empty, s"none: unreadable (${e.getClass.getSimpleName})")
     }
+
+  /** The `which` map of a bench artifact's text, or why it does not
+    * apply. Priors only apply at the SAME scale factor AND core count:
+    * a dev run at a smaller SF writes the file too, and sf0.001-second
+    * priors would flag every sf0.1 cell and burn the whole retime
+    * budget; an 8-core prior would judge a 32-core run's interference
+    * against cells that are slower for want of cores. */
+  private[graft] def priorsFrom(txt: String, which: String, sfDir: String,
+                                cpus: Int): Either[String, Map[String, Double]] =
+    if (!""""sf":"([^"]*)"""".r.findFirstMatchIn(txt).exists(_.group(1) == sfDir))
+      Left("a different sf")
+    else if (!""""cpus":(-?[0-9]+)""".r.findFirstMatchIn(txt).exists(_.group(1).toIntOption.contains(cpus)))
+      Left("different cpus")
+    else Right((s""""$which":\\{([^}]*)\\}""".r).findFirstMatchIn(txt).map { g =>
+      """"([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(g.group(1))
+        .map(x => x.group(1) -> x.group(2).toDouble)
+        .filter(_._2 >= 0).toMap
+    }.getOrElse(Map.empty))
 
   /** Fork a fresh child JVM running `Bench --only <names>` and parse
     * its full JSON line → (first-run map, the child's own
@@ -152,6 +158,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpusN = cpus.trim.toIntOption.getOrElse(-1)
     // --only q_a,q_b: filtered single sweep (the CHILD mode of the
     // first-run healing pass below, also the incremental tool's timing
     // harness). Prints the full JSON line only, never writes
@@ -164,7 +171,7 @@ object Bench {
     }
     val onlyMode = onlyNames.isDefined
     // read the quiet history BEFORE the run (this run overwrites the file)
-    val (steadyPrior, priorSource) = priors("queries_steady", sfDir)
+    val (steadyPrior, priorSource) = priors("queries_steady", sfDir, cpusN)
     // first-run quiet history (r14): the load conjunct of the
     // first-suspect predicate cannot tell EXTERNAL load from the
     // bench's OWN 32-core work — the 1-minute loadavg is ≥ the quiet
@@ -184,7 +191,7 @@ object Bench {
     // the >3×-prior test against an inflated reference, ships, and
     // becomes the next prior). Those names fall back to the
     // prior-less load conjunct.
-    val (firstPrior0, _) = priors("queries", sfDir)
+    val (firstPrior0, _) = priors("queries", sfDir, cpusN)
     val priorResidualSuspects: Set[String] =
       try {
         val p = repoRootFile("bench_full.json")
@@ -582,7 +589,7 @@ object Bench {
     val nSteadySuspect = steadySuspects.size
     val priorSrcJson =
       "\"" + priorSource.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val cond = s""""load_avg_before":${loadJson(loadBefore)},"load_avg_1m":${loadJson(loadAvg)},"max_load_1m":${loadJson(maxLoad)},"quiet_waits":$quietWaits,"midrun_waits":$midrunWaits,"retime_waits":$retimeWaits,"n_first_suspect":$nSuspect,"n_steady_suspect":$nSteadySuspect,"n_retimed":${retimedMap.size},"n_first_retimed":${firstRetimedMap.size},"child_runs":$childRuns,"steady_third_runs":$steadyThirdRuns,"prior_source":$priorSrcJson,"persistent_stage_root":${SparkEntry.stageRootIsPersistent},"cpus":${cpus.trim.toIntOption.getOrElse(-1)}"""
+    val cond = s""""load_avg_before":${loadJson(loadBefore)},"load_avg_1m":${loadJson(loadAvg)},"max_load_1m":${loadJson(maxLoad)},"quiet_waits":$quietWaits,"midrun_waits":$midrunWaits,"retime_waits":$retimeWaits,"n_first_suspect":$nSuspect,"n_steady_suspect":$nSteadySuspect,"n_retimed":${retimedMap.size},"n_first_retimed":${firstRetimedMap.size},"child_runs":$childRuns,"steady_third_runs":$steadyThirdRuns,"prior_source":$priorSrcJson,"persistent_stage_root":${SparkEntry.stageRootIsPersistent},"cpus":$cpusN"""
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","total_steady":$totalSteady,"queries":${qfirst(results)},"queries_steady":${qsteady(results)},"queries_load":$loadMap,"first_suspect":$firstSuspect,"steady_suspect":$steadySuspect,"retimed":$retimedJson,"first_retimed":$firstRetimedJson,"steady_prior":$priorJson,"cc_rounds":$roundsMap,"errors":$errs,"prewarm_failed":$prewarm,$cond,"sf":"$sfDir"}"""
     // full per-query map: first as a log line (for a reader of the whole

@@ -59,58 +59,12 @@ object SparkEntry {
     s"${stageDir(d)}/$name"
   }
 
-  /** Input fingerprint of dataset dir `d`: md5 over the sorted
-    * (relative path, length, mtime, head/tail content hash) tuples of
-    * every file under it. (path, length, mtime) alone is NOT a content
-    * signal — an mtime-preserving rewrite (`rsync -a`, `cp -p`, an
-    * object-store sync that restores timestamps) keeps all three while
-    * changing bytes, and a stale adopted index would serve wrong
-    * incremental results. The head/tail sample closes that hole for
-    * parquet inputs specifically: the footer (tail) carries the row
-    * count, column statistics and data-page offsets, so any rewrite
-    * that changes values while preserving size lands in the sampled
-    * bytes. Still cheap: two 4 KiB reads per file, no full scan. */
-  private def datasetFingerprint(d: String): String = {
-    val base = java.nio.file.Paths.get(d)
-    val sb = new StringBuilder
-    def sampleHash(p: java.nio.file.Path, size: Long): String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val ch = java.nio.channels.FileChannel.open(
-        p, java.nio.file.StandardOpenOption.READ)
-      try {
-        val head = java.nio.ByteBuffer.allocate(4096)
-        ch.read(head, 0L); head.flip(); md.update(head)
-        if (size > 4096) {
-          val tail = java.nio.ByteBuffer.allocate(4096)
-          ch.read(tail, math.max(size - 4096, 0L)); tail.flip(); md.update(tail)
-        }
-      } finally ch.close()
-      md.digest().map(b => f"$b%02x").mkString
-    }
-    if (java.nio.file.Files.isDirectory(base)) {
-      val st = java.nio.file.Files.walk(base)
-      try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map { p =>
-            val size = java.nio.file.Files.size(p)
-            s"${base.relativize(p)}:$size:" +
-              s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}:" +
-              sampleHash(p, size)
-          }
-          .toSeq.sorted.foreach(l => { sb.append(l).append('\n'); () })
-      } finally st.close()
-    }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sb.toString.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-  }
-
   /** Once per (JVM, dataset): when the stage root is PERSISTENT,
-    * compare the on-disk manifest's input fingerprint against the
-    * dataset's current one — on mismatch (or no manifest) wipe that
-    * dataset's stage dir and write a fresh manifest, so a stale index
+    * compare the on-disk manifest's input fingerprint
+    * ([[Tables.fingerprint]], the same content signal the base-table
+    * schema memo keys on) against the dataset's current one — on
+    * mismatch (or no manifest) wipe that dataset's stage dir and
+    * write a fresh manifest, so a stale index
     * can never serve a changed input across JVMs. The default tmp
     * tier skips this entirely (per-JVM lifetime + cleanupStages
     * already bound staleness there, and Bench's cold-state numbers
@@ -122,7 +76,7 @@ object SparkEntry {
         if (!validatedDatasets.contains(d)) {
           val dir = new java.io.File(stageDir(d))
           val mf = new java.io.File(dir, "_manifest.json")
-          val fp = datasetFingerprint(d)
+          val fp = Tables.fingerprint(d)
           val fresh =
             try mf.exists() && {
               val txt = new String(
@@ -402,7 +356,11 @@ object SparkEntry {
     * which is exactly why [[writeStageOnce]] drops the path's entries
     * whenever it (re)writes and [[cleanupStages]] clears the map —
     * a memo may only outlive the part files it lists if nothing
-    * rewrote them. */
+    * rewrote them. Base tables take the other trade ([[Tables.read]]):
+    * they memoize only the inferred schema, keyed on the files'
+    * content fingerprint, and re-list on every read — right for ten
+    * tables registered once per query, wrong for a many-stage query
+    * whose every stage read would pay a listing. */
   // WeakHashMap alone would NOT reclaim stopped sessions here: the
   // memoized DataFrame values strongly reference their own session
   // key (Dataset -> QueryExecution -> SparkSession), which per the

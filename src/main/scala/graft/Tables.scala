@@ -1,10 +1,23 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loader for the driver-generated star schema
   * (`/root/testdata/sf*`; see TESTDATA.md). All operators read through
   * here so scan options stay in one place.
+  *
+  * Every read goes through one JVM-wide SCHEMA MEMO ([[read]]):
+  * `spark.read.parquet` lists the path AND runs a one-task Spark job to
+  * read a footer and infer the schema on every call, and a session of
+  * repeated queries re-registers the same unchanged base tables over
+  * and over. The memo holds one entry per path — (content
+  * [[fingerprint]], parquet read conf, inferred `StructType`) — and a
+  * read whose fingerprint and conf both match is served as
+  * `spark.read.schema(cached).parquet(path)`: still a file listing, no
+  * inference job. Only the SCHEMA is cached, never the DataFrame, so
+  * every call returns a fresh relation with its own attribute ids and
+  * DataFrame-API self-joins of one table stay unambiguous.
   *
   * Scale note: at 100 TB these would be partitioned/bucketed tables
   * behind a catalog; the reads stay identical (`spark.read.parquet` →
@@ -14,7 +27,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")
@@ -38,10 +51,10 @@ object Tables {
     * the set here is a defensive fallback for externally-built
     * sessions. It is session-wide by necessity — the scan re-reads it
     * at execution time, so a set-and-restore around this call would
-    * break the returned (lazy) DataFrame. */
+    * break the returned (lazy) DataFrame. It is also part of the
+    * schema memo's key, so the set re-keys the memo rather than
+    * serving a schema inferred without it. */
   def events(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the NTZ→Timestamp branch reinterprets the naive wall-clock in the
     // SESSION zone; it is only oracle-correct (DuckDB reads the same
@@ -52,7 +65,12 @@ object Tables {
     require(tz == "UTC",
       s"events() needs spark.sql.session.timeZone=UTC (got '$tz'): " +
         "the TIMESTAMP_NTZ cast reinterprets wall-clock in the session zone")
-    val raw = s.read.parquet(s"$d/events.parquet")
+    normalizeEvents(read(s, s"$d/events.parquet"))
+  }
+  /** The events.ts normalization of [[events]] over a raw read. */
+  private[graft] def normalizeEvents(raw: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     raw.schema("ts").dataType match {
       case LongType => // nanos-as-long vintage: truncate to micros
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -67,4 +85,86 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
+
+  /** path → (fingerprint, read conf, schema); at most one entry per path. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, ((String, Seq[(String, String)]), StructType)]()
+
+  /** The one parquet read path behind every table. The memo key is
+    * the path's content [[fingerprint]] plus every SET session conf
+    * that can change what parquet inference returns: all of
+    * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` (e.g.
+    * `inferTimestampNTZ.enabled`, `nanosAsLong`) and
+    * `spark.sql.caseSensitive`. A miss infers with a plain
+    * `spark.read.parquet` and replaces the path's entry. A path that
+    * is not on the local filesystem has no fingerprint to vouch for
+    * it, so it is never memoized (every read infers). */
+  private[graft] def read(s: SparkSession, path: String): DataFrame = {
+    val key = (fingerprint(path), readConf(s))
+    Option(schemas.get(path)).filter(_._1 == key) match {
+      case Some((_, schema)) => s.read.schema(schema).parquet(path)
+      case None =>
+        val df = s.read.parquet(path)
+        if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+          schemas.put(path, (key, df.schema))
+        df
+    }
+  }
+
+  private def readConf(s: SparkSession): Seq[(String, String)] =
+    s.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }.toSeq.sorted
+
+  /** Content fingerprint of a local file or directory tree: md5 over
+    * the sorted (relative path, length, mtime, head/tail content hash)
+    * lines of every file under it. Shared by the schema memo and the
+    * persistent stage store's per-dataset manifest
+    * (`SparkEntry.ensureStageDirValid`). (path, length, mtime) alone
+    * is NOT a content signal — an mtime-preserving rewrite (`rsync -a`,
+    * `cp -p`, an object-store sync that restores timestamps) keeps all
+    * three while changing bytes, and a stale adopted index would serve
+    * wrong incremental results. The head/tail sample closes that hole
+    * for parquet inputs specifically: the footer (tail) carries the
+    * schema, row count, column statistics and data-page offsets, so
+    * any rewrite that changes values while preserving size lands in
+    * the sampled bytes. Still cheap: two 4 KiB reads per file, no full
+    * scan. A missing path fingerprints as the empty file set. */
+  private[graft] def fingerprint(path: String): String = {
+    val base = java.nio.file.Paths.get(path)
+    val sb = new StringBuilder
+    def sampleHash(p: java.nio.file.Path, size: Long): String = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val ch = java.nio.channels.FileChannel.open(
+        p, java.nio.file.StandardOpenOption.READ)
+      try {
+        val head = java.nio.ByteBuffer.allocate(4096)
+        ch.read(head, 0L); head.flip(); md.update(head)
+        if (size > 4096) {
+          val tail = java.nio.ByteBuffer.allocate(4096)
+          ch.read(tail, math.max(size - 4096, 0L)); tail.flip(); md.update(tail)
+        }
+      } finally ch.close()
+      md.digest().map(b => f"$b%02x").mkString
+    }
+    if (java.nio.file.Files.exists(base)) {
+      val st = java.nio.file.Files.walk(base)
+      try {
+        import scala.jdk.CollectionConverters._
+        st.iterator().asScala
+          .filter(java.nio.file.Files.isRegularFile(_))
+          .map { p =>
+            val size = java.nio.file.Files.size(p)
+            s"${base.relativize(p)}:$size:" +
+              s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}:" +
+              sampleHash(p, size)
+          }
+          .toSeq.sorted.foreach(l => { sb.append(l).append('\n'); () })
+      } finally st.close()
+    }
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(sb.toString.getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString
+  }
 }

@@ -29,6 +29,7 @@ object Graph {
     * integer addition. */
   def pagerank(pairs: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
+    require(iters <= 10, s"iters must be <= 10 (lazy plan depth), got $iters")
     val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
       .union(pairs.select(col("b").as("src"), col("a").as("dst")))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -39,8 +40,8 @@ object Graph {
     // whose per-round state is one bounded aggregate. A fixed small
     // iteration count needs no per-round lineage cut: the rounds
     // compose lazily into one plan (depth ∝ iters, fine for the
-    // 3-round contract; re-introduce a checkpoint cadence if iters
-    // ever grows past ~10), so the whole loop executes as ONE job —
+    // 3-round contract; the require above caps it at 10 — raising it
+    // needs a checkpoint cadence), so the whole loop executes as ONE job —
     // 6 jobs → 2 at any scale, and no per-round executor-storage
     // write of the rank iterate (guide §2.4/§5).
     val withDeg = edges.join(deg, "src").localCheckpoint()

@@ -531,8 +531,8 @@ trait SqlOpsCuration { this: SqlOpsAll =>
     * 6 208 pass ≤ 6 — gating map-side shrinks the exchange ~13× by
     * rows and ~80× by bytes (3 int64s instead of 2 ids + two 64-char
     * strings). DISTINCT-after-filter equals filter-after-DISTINCT
-    * because hamming is a function of the pair. The outer WHERE is
-    * kept so the body reads as gate-then-report (it is a no-op). */
+    * because hamming is a function of the pair. That inner WHERE is
+    * the only hamming gate; the body just reports `hm`. */
   def phashNear(d: Dialect): String =
     s"""WITH bnd AS (
        |  SELECT doc_id, phash, b, substr(phash, 1 + b * 16, 16) AS key
@@ -546,8 +546,7 @@ trait SqlOpsCuration { this: SqlOpsAll =>
        |    ON x.b = y.b AND x.key = y.key AND x.doc_id < y.doc_id
        |  WHERE ${d.hamming64("x.phash", "y.phash")} <= 6
        |)
-       |SELECT doc_a, doc_b, hamming FROM hm
-       |WHERE hamming <= 6""".stripMargin
+       |SELECT doc_a, doc_b, hamming FROM hm""".stripMargin
 
   /** Dedup-cluster quality eval: pairwise precision/recall/F1 of the
     * minhash cluster map's co-membership against the EXACT-duplicate

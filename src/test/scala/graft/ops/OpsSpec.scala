@@ -1139,6 +1139,13 @@ class OpsSpec extends SparkSpec {
     assert(actual === rank)
   }
 
+  test("Graph.pagerank rejects iters past its lazy-depth bound") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
+    assert(Graph.pagerank(pairs, 10).count() === 3)
+    intercept[IllegalArgumentException](Graph.pagerank(pairs, 11))
+  }
+
   test("whitened embeddings: 64 tagged codes per vector, near-zero per-dim mean") {
     val rows = run("q_embedding_whiten").collect()
     assert(rows.nonEmpty)
