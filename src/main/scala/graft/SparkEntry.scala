@@ -9,7 +9,8 @@ import graft.ops.{Dialect, DuckDialect, Relational, SparkDialect, SqlOps, Staged
   *
   * Every operator from SURVEY.md §2 (plus the scale extensions) is
   * registered here as a named query over `/root/testdata/sf*`, with an
-  * equivalent DuckDB SQL oracle where SQL can express it. Column names
+  * equivalent DuckDB SQL oracle: one [[registry]] row per query, from
+  * which [[queries]] and [[oracleSql]] are derived. Column names
   * are aligned between both sides (the driver sorts columns by name
   * before hashing). All float aggregation is decimal-exact then cast to
   * double so both engines emit bit-identical values.
@@ -309,12 +310,51 @@ object SparkEntry {
     readStage(s, path)
   }
 
+  /** Two-snapshot media corpus -> (doc_id, phash) via the batched
+    * aHash pass — shared by q_image_phash and q_dedup_phash_near. */
+  private def mediaPhash(s: SparkSession, d: String): DataFrame = {
+    graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
+    val corpus = s.sql(
+      s"WITH ${SqlOps.corpusCte(SparkDialect)} SELECT doc_id, text FROM corpus")
+    graft.ops.Multimodal.aHash(graft.ops.Multimodal.asMedia(corpus)).toDF()
+  }
+
+  /** The (doc_id, phash) table staged once per JVM (r14): TWO
+    * consumers (q_image_phash, q_dedup_phash_near), and the hash pass
+    * is a typed mapPartitions decode (opaque to Catalyst — no reuse,
+    * no pruning), so the near-dup band SELF-join over the unstaged
+    * view re-ran the whole decode+hash on BOTH join sides every run
+    * (steady 1.3 s, first 6.1 s at sf0.1). The mh_sig rule: a shared
+    * signature index is materialized once and every consumer scans
+    * the columnar artifact. OWNER-BILLED to q_image_phash (r15), not
+    * prewarmed: the decode IS that query's computation (its body is
+    * only a window-count over the hashes), so the ewma_f doctrine
+    * applies — one timed cell carries the build. */
+  private def mediaPhashStaged(s: SparkSession, d: String): DataFrame = {
+    val path = stagePath(d, "media_phash")
+    writeStageOnce(path)(
+      mediaPhash(s, d).write.mode("overwrite").parquet(path))
+    readStage(s, path)
+  }
+
   private def mergeMain(t: DataFrame): DataFrame =
     t.filter(col("ingest_order") % 2 === 0)
 
   private def mergeStaging(t: DataFrame): DataFrame =
     t.filter(col("ingest_order") % 3 === 0)
       .withColumn("price_rp", col("price_rp") + 1000000L)
+
+  /** SCD2 history of the staged transform: main's rows open at ts 0,
+    * staging is merged in as the batch at ts 100. */
+  private def scd2History(s: SparkSession, d: String): DataFrame = {
+    val t = transformedStaged(s, d)
+    val main = mergeMain(t)
+      .select(col("link"), col("name"), col("price_rp"))
+      .withColumn("valid_from", lit(0L))
+      .withColumn("valid_to", lit(null).cast("bigint"))
+    val staging = mergeStaging(t).select(col("link"), col("name"), col("price_rp"))
+    Load.scd2Merge(main, staging, "link", batchTs = 100L)
+  }
 
   /** Deterministic md5-half slice of `documents` standing in for "one
     * ingest batch" in q_dataset_card_delta — ONE string rendered into
@@ -403,14 +443,8 @@ object SparkEntry {
         // queries, mh_sig by minhash and clustering) is materialized
         // once per JVM and reused — exactly how a production pipeline
         // treats a signature/shingle index
-        val t0 = System.nanoTime()
         writeStageOnce(path)(
           s.sql(build(SparkDialect)).write.mode("overwrite").parquet(path))
-        // dev-only stage profiler (stderr, env-gated): which stage of a
-        // chain owns a first-run regression — never on in Bench/Verify
-        if (sys.env.contains("SPARK_GRAFT_STAGE_TIMING"))
-          System.err.println(
-            f"[stage] $name%-20s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
         readStage(s, path).createOrReplaceTempView(name)
       }
     }
@@ -661,780 +695,55 @@ object SparkEntry {
     // counts in the same readout are the live columns
     "q_ulm_vs_bpe" -> Set("all_zero:bpe_wins", "all_zero:ties"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // -- ETL parity --
-    "q_raw_listings" -> ((s, d) => Listings.raw(s, d).orderBy("ingest_order")),
-    "q_filter_nullkey" -> ((s, d) =>
-      Transform.dropNullKeys(Listings.raw(s, d))
-        .select(col("ingest_order"), col("link")).orderBy("ingest_order")),
-    "q_dedup_first" -> ((s, d) =>
-      Transform.dedupKeepFirst(Transform.dropNullKeys(Listings.raw(s, d)))
-        .select(col("link"), col("ingest_order")).orderBy("ingest_order")),
-    "q_transform_listings" -> ((s, d) => transformed(s, d).orderBy("ingest_order")),
-    "q_price_parse" -> ((s, d) =>
-      transformed(s, d).select(col("ingest_order"), col("link"), col("price_rp"))
-        .orderBy("ingest_order")),
-    "q_badge_tokenize" -> ((s, d) =>
-      transformed(s, d).select(col("ingest_order"), col("additional_features"))
-        .orderBy("ingest_order")),
-    "q_merge_upsert" -> ((s, d) => {
-      val t = transformedStaged(s, d)
-      Load.merge(mergeMain(t), mergeStaging(t), "link").orderBy("link")
-    }),
-    "q_merge_inserted_count" -> ((s, d) => {
-      val t = transformedStaged(s, d)
-      Load.insertedCount(mergeMain(t), mergeStaging(t), "link")
-    }),
-    "q_merge_scd2" -> ((s, d) => {
-      val t = transformedStaged(s, d)
-      val main = mergeMain(t)
-        .select(col("link"), col("name"), col("price_rp"))
-        .withColumn("valid_from", lit(0L))
-        .withColumn("valid_to", lit(null).cast("bigint"))
-      val staging = mergeStaging(t).select(col("link"), col("name"), col("price_rp"))
-      Load.scd2Merge(main, staging, "link", batchTs = 100L)
-        .orderBy(col("link"), col("valid_from"))
-    }),
-    // point-in-time reads over the SCD2 result: the pre-batch (ts=50)
-    // and post-batch (ts=100) states from ONE history table
-    "q_scd2_asof" -> ((s, d) => {
-      val t = transformedStaged(s, d)
-      val main = mergeMain(t)
-        .select(col("link"), col("name"), col("price_rp"))
-        .withColumn("valid_from", lit(0L))
-        .withColumn("valid_to", lit(null).cast("bigint"))
-      val staging = mergeStaging(t).select(col("link"), col("name"), col("price_rp"))
-      val scd = Load.scd2Merge(main, staging, "link", batchTs = 100L)
-      Seq(50L, 100L).map { ts =>
-        Load.scd2AsOf(scd, ts)
-          .select(lit(ts).as("asof_ts"), col("link"), col("name"), col("price_rp"))
-      }.reduce(_.unionByName(_))
-    }),
+  // ---- the query registry ----
 
-    // -- relational / analytic extensions (SURVEY.md §2.6-2.7) --
-    "q_pricing_summary" -> Relational.pricingSummary _,
-    "q_revenue_by_brand" -> Relational.revenueByBrand _,
-    "q_revenue_by_nation" -> Relational.revenueByNation _,
-    "q_semi_join" -> Relational.customersWithOrders _,
-    "q_anti_join" -> Relational.customersWithoutOrders _,
-    "q_window_rank" -> Relational.orderRankPerCustomer _,
-    "q_window_running" -> Relational.runningCustomerSpend _,
-    "q_topk_per_group" -> Relational.top3OrdersPerCustomer _,
-    "q_topk_aggregator" -> Relational.top3ViaAggregator _,
-    "q_topk_global" -> Relational.top10Orders _,
-    "q_distinct_agg" -> Relational.distinctCustomersByStatus _,
-    "q_approx_distinct" -> Relational.approxDistinctParts _,
-    "q_hll_merge" -> Relational.hllMergeUsers _,
-    "q_approx_quantiles" -> Relational.approxQuantilesOrders _,
-    "q_rollup" -> Relational.rollupRevenue _,
-    "q_cube" -> Relational.cubeRevenue _,
-    "q_window_lag" -> Relational.orderGapDays _,
-    "q_pivot" -> Relational.pivotStatusByPriority _,
-    "q_unpivot" -> Relational.unpivotStatusMetrics _,
-    "q_set_ops" -> Relational.nationSetOps _,
-    "q_union_slices" -> Relational.unionSlices _,
-    "q_above_avg" -> Relational.aboveAvgOrders _,
-    "q_agg_salted" -> ((s, d) => Relational.saltedRevenueByFlag(s, d)),
-    // the salted/unsalted pair on the key the audit proves skewed
-    // (event_type, 5 values): same plain-join oracle for both —
-    // salting must be result-invisible, and the pair is the local
-    // measurement of what the salt buys
-    "q_join_salted" -> ((s, d) => Relational.eventTypeSkewJoin(s, d, salted = true)),
-    "q_join_skew_unsalted" -> ((s, d) => Relational.eventTypeSkewJoin(s, d, salted = false)),
-    // does the salt pay on THIS data? hottest-partition share, ppm,
-    // unsalted vs salted, on the uniform join key AND the
-    // low-cardinality one
-    "q_join_salt_audit" -> sqlq(Seq("lineitem", "events"), SqlOps.joinSaltAudit),
-    "q_events_json" -> Relational.eventsJsonAgg _,
-    "q_orders_by_month" -> Relational.ordersByMonth _,
-    "q_asof_join" -> Relational.asofLastPurchase _,
-    // TPC-H classic shapes (Q3/Q10/Q14/Q15): segment-gated top-k
-    // revenue, returned-items ranking, promo share, max-revenue
-    // supplier — the deep multi-join + top-k analytic surface
-    "q_shipping_priority" -> Relational.shippingPriority _,
-    "q_returned_items" -> Relational.returnedItems _,
-    "q_promo_revenue" -> Relational.promoRevenue _,
-    "q_top_supplier" -> Relational.topSupplier _,
-    "q_order_priority_late" -> Relational.orderPriorityLateShip _,
-    "q_large_volume_customer" -> Relational.largeVolumeCustomers _,
-    // TPC-H classic shapes (Q5/Q6/Q7/Q8): region-local supplier
-    // volume, scan-pruning filter-sum, bilateral trade by year,
-    // national market share
-    "q_local_supplier_volume" -> Relational.localSupplierVolume _,
-    "q_forecast_revenue" -> Relational.forecastRevenue _,
-    "q_volume_shipping" -> Relational.volumeShipping _,
-    "q_market_share" -> Relational.marketShare _,
-    // market-basket association rules (apriori-gated brand
-    // co-occurrence within orders, support/confidence/lift)
-    "q_assoc_rules" -> sqlStaged(Seq("lineitem", "part"), SqlOps.assocRules),
-    // item-item collaborative-filtering neighborhoods (top-5 cosine
-    // neighbors per brand off the shared basket/pair stages)
-    "q_item_similarity" -> sqlStaged(Seq("lineitem", "part"), SqlOps.itemSimilarity),
-    // TPC-H classic shapes (Q9/Q13/Q17/Q19): product profit,
-    // customer order-count distribution, small-quantity revenue,
-    // disjunctive-predicate revenue
-    "q_product_profit" -> Relational.productProfit _,
-    "q_customer_distribution" -> Relational.customerDistribution _,
-    "q_small_qty_revenue" -> Relational.smallQtyRevenue _,
-    "q_disjunctive_revenue" -> Relational.disjunctiveRevenue _,
-    // TPC-H classic shapes (Q21/Q22/Q2/Q11/Q16): correlated-exists
-    // lateness, anti-join dormancy, groupwise-min offers, fraction-of-
-    // total importance, distinct-count relationship matrix
-    "q_waiting_orders" -> Relational.waitingOrders _,
-    "q_dormant_customers" -> Relational.dormantCustomers _,
-    "q_min_cost_supplier" -> Relational.minCostSupplier _,
-    "q_important_parts" -> Relational.importantParts _,
-    "q_parts_supplier_count" -> Relational.partsSupplierCount _,
-    "q_grouping_sets" -> sqlq(Seq("orders"), SqlOps.groupingSets),
-    "q_percentiles" -> sqlq(Seq("events"), SqlOps.eventPercentiles),
-    // integer-exact quantity-weighted median price per return flag
-    // (compressed-histogram window, no raw-row sort)
-    "q_weighted_median" -> sqlq(Seq("lineitem"), SqlOps.weightedMedian),
-    // Benford leading-digit audit of order totals (per-digit observed
-    // vs expected + chi-square contribution)
-    "q_benford" -> sqlq(Seq("orders"), SqlOps.benfordProfile),
-    // count-min-gated top talkers (≥2% of events per user; exact
-    // verify over the gated slice, oracle runs ungated)
-    "q_cms_topusers" -> sqlq(Seq("events"), SqlOps.cmsTopUsers),
-    // global top-20 3-step event paths ((ts, event_id)-ordered
-    // per-user sequences — the sequential-pattern profile)
-    "q_event_paths" -> sqlq(Seq("events"), SqlOps.eventPaths),
-    // calendar-spine gap fill of the daily order series with
-    // zero-fill + forward-carried last active day (freshness monitor)
-    "q_gap_fill" -> sqlq(Seq("orders"), SqlOps.gapFill),
-    // RNG-free contrastive negatives by hash-ring rotation (2 per doc,
-    // broadcast representative table, self-pairing impossible)
-    "q_negative_pairs" -> sqlq(Seq("documents"), SqlOps.negativePairs),
-    // first-signup → first-purchase latency for the clean-converter
-    // cohort (single conditional aggregate, integer seconds)
-    "q_time_to_convert" -> sqlq(Seq("events"), SqlOps.timeToConvert),
-    // declarative data-quality expectations (range/null/referential)
-    // as a (rule, violations, checked) contract report
-    "q_dq_audit" -> sqlStaged(Seq("lineitem", "orders", "customer"), SqlOps.dqAudit),
-    // empirical out-of-orderness per event type (running-MAX lag in
-    // arrival order, per-user shards) — the watermark-sizing metric
-    "q_disorder_profile" -> sqlq(Seq("events"), SqlOps.disorderProfile),
-    // two-proportion z-test between id-parity arms (conversion = a
-    // large purchase, value > 150) — the experimentation readout
-    "q_ab_test" -> sqlq(Seq("events"), SqlOps.abTest),
-    // difference-in-differences across the arm split and a fixed pivot date
-    "q_did_estimator" -> sqlq(Seq("events"), SqlOps.didEstimator),
-    // A/A null-split calibration of the same two-proportion protocol
-    // (md5-bucket arms): z-squared must sit under the chi2_1 5% bar
-    "q_aa_calibration" -> sqlq(Seq("events"), SqlOps.aaCalibration),
-    "q_ab_sprt" -> sqlq(Seq("events"), SqlOps.abSprt),
-    "q_js_shrinkage" -> sqlq(Seq("documents"), SqlOps.jsShrinkage),
-    "q_capture_recapture" -> sqlq(Seq("documents"), SqlOps.captureRecapture),
-    "q_quality_wilson" -> sqlq(Seq("documents"), SqlOps.qualityWilson),
-    "q_quality_partial_corr" -> sqlStaged(Seq("documents"), SqlOps.qualityPartialCorr),
-    "q_ngram_kneser_ney" -> sqlStaged(Seq("documents"), SqlOps.ngramKneserNey),
-    "q_dedup_lsh_skew" -> sqlStaged(Seq("documents"), SqlOps.dedupLshBucketSkew),
-    "q_dedup_minhash_calib" -> sqlStaged(Seq("documents"), SqlOps.dedupMinhashCalibration),
-    "q_langid_f1" -> sqlq(Seq("documents"), SqlOps.langidF1),
-    "q_token_burstiness" -> sqlStaged(Seq("documents"), SqlOps.tokenBurstiness),
-    "q_dedup_cascade_cost" -> sqlStaged(Seq("documents"), SqlOps.dedupCascadeCost),
-    // Wald-Wolfowitz runs test of label arrangement along doc_id —
-    // the storage-order shuffle-quality audit
-    "q_runs_test" -> sqlq(Seq("documents"), SqlOps.runsTest),
-    // correlated LATERAL top-1 (decorrelated by Catalyst into a
-    // ranked join — the per-row subquery form of top-k per group)
-    "q_lateral_latest" -> sqlq(Seq("customer", "orders"), SqlOps.lateralLatest),
-    // k-anonymity privacy audit over the (nation, segment)
-    // quasi-identifier (k=5; flagged groups are the worklist)
-    "q_k_anonymity" -> sqlq(Seq("customer"), SqlOps.kAnonymity),
-    "q_l_diversity" -> sqlq(Seq("customer"), SqlOps.lDiversity),
-    "q_t_closeness" -> sqlq(Seq("customer"), SqlOps.tCloseness),
-    // first→last shipment span per order, rolled up by priority
-    "q_order_cycle_time" -> sqlq(Seq("lineitem", "orders"), SqlOps.orderCycleTime),
-    // TPC-H Q20 shape: suppliers shipping >1.5× a part family's
-    // per-supplier average (integer-exact window threshold + dim joins)
-    "q_excess_suppliers" -> sqlq(Seq("lineitem", "part", "supplier", "nation"),
-      SqlOps.excessSuppliers),
-    // exact p05/p95 winsorized mean via a cents-histogram cumulative
-    // window (domain-ordered — no raw-row sort, boundaries broadcast)
-    "q_winsorize" -> sqlq(Seq("orders"), SqlOps.winsorize),
-    // purchase conversion by ⌊log2⌋ session-size bucket off the shared
-    // gap-sessionize spans
-    "q_session_conversion" -> sqlq(Seq("events"), SqlOps.sessionConversion),
-    // per-day peak concurrent sessions: midnight carry-in count + a
-    // day-sharded ±1 sweep (no global ordered timeline)
-    "q_concurrency_peak" -> sqlStaged(Seq("events"), SqlOps.concurrencyPeak),
-    // integer-exact 8-day half-life EWMA of daily revenue over the
-    // zero-filled day spine (powers-of-two weights, one int64 per day)
-    "q_ewma_revenue" -> sqlq(Seq("orders"), SqlOps.ewmaRevenue),
-    // multi-source BFS landmark distances on the candidate graph
-    // (4 staged frontier rounds; Pregel-as-joins shape)
-    "q_bfs_levels" -> sqlStaged(Seq("documents"), SqlOps.bfsLevels),
-    // deterministic md5-ring training shuffle: 32 shards, in-shard
-    // positions, order-sensitive modular checksum per shard
-    "q_shuffle_shards" -> sqlq(Seq("documents"), SqlOps.shuffleShards),
-    // curriculum manifest: difficulty quartile phases, md5 shards
-    "q_curriculum_order" -> sqlStaged(Seq("documents"), SqlOps.curriculumOrder),
-    // min-k% prob memorization signal off the same tf index
-    "q_mink_prob" -> sqlStaged(Seq("documents"), SqlOps.minkProb),
-    "q_window_range" -> sqlq(Seq("orders"), SqlOps.windowRangeSpend),
-    "q_window_moving_avg" -> sqlq(Seq("orders"), SqlOps.windowMovingAvg),
-    "q_percent_rank" -> sqlq(Seq("orders"), SqlOps.percentRankOrders),
-    "q_window_first_last" -> sqlq(Seq("orders"), SqlOps.windowFirstLast),
-    "q_window_dense_cume" -> sqlq(Seq("orders"), SqlOps.windowDenseCume),
-    "q_bucketize" -> sqlq(Seq("events"), SqlOps.bucketizeValues),
-    "q_mode_priority" -> sqlq(Seq("orders"), SqlOps.modePriority),
-    "q_agg_collect" -> sqlq(Seq("orders"), SqlOps.collectOrders),
-    "q_corr_exact" -> sqlq(Seq("lineitem"), SqlOps.corrQtyPrice),
-    "q_corr_matrix" -> sqlq(Seq("lineitem"), SqlOps.corrMatrix),
+  /** One registered query: how the engine runs it, and the DuckDB SQL
+    * its result is hash-checked against. [[Sql]] and [[Staged]] rows
+    * derive the oracle from the dual-dialect op the engine renders;
+    * a [[Frame]] row carries its hand-written oracle next to the code
+    * it checks. */
+  private[graft] sealed trait Query {
+    def run: (SparkSession, String) => DataFrame
+    def oracle: String
+  }
 
-    // -- dedup family (documents) --
-    "q_dedup_exact" -> sqlq(Seq("documents"), SqlOps.dedupExact),
-    "q_dedup_minhash" -> sqlStaged(Seq("documents"), SqlOps.dedupMinhash),
-    // sketch-read similarity scoring off the same staged signatures
-    "q_dedup_minhash_est" -> sqlStaged(Seq("documents"), SqlOps.dedupMinhashEst),
-    "q_dedup_ngram_jaccard" -> sqlStaged(Seq("documents"), SqlOps.dedupNgramJaccard),
-    "q_dedup_verified" -> sqlStaged(Seq("documents"), SqlOps.dedupVerified),
-    "q_dedup_lsh_eval" -> sqlStaged(Seq("documents"), SqlOps.dedupLshEval),
-    // threshold sensitivity: pair/doc counts per candidate Jaccard bar
-    "q_dedup_threshold_sweep" -> sqlStaged(Seq("documents"), SqlOps.dedupThresholdSweep),
-    // S-curve audit: empirical vs exact-rational theoretical collision
-    // rate per Jaccard decile over the deterministic sample
-    "q_lsh_scurve" -> sqlStaged(Seq("documents"), SqlOps.lshScurve),
-    // (bands, rows) optimizer: expected FN/FP mass per factorization
-    // of the 8-slice signature against the corpus's own pair histogram
-    "q_lsh_param_opt" -> sqlStaged(Seq("documents"), SqlOps.lshParamOpt),
-    "q_dedup_simhash" -> sqlq(Seq("documents"), SqlOps.dedupSimhash),
-    "q_dedup_simhash_pairs" -> sqlStaged(Seq("documents"), SqlOps.dedupSimhashPairs),
-    "q_dedup_sorted_neighborhood" -> sqlStaged(Seq("documents"), SqlOps.dedupSortedNeighborhood),
-    "q_dedup_fingerprint" -> sqlq(Seq("documents"), SqlOps.dedupFingerprint),
-    "q_dedup_levenshtein" -> sqlq(Seq("documents"), SqlOps.dedupLevenshtein),
-    "q_ntile" -> sqlq(Seq("orders"), SqlOps.orderDeciles),
-    "q_dedup_embedding_cosine" -> sqlStaged(Seq("embeddings"), SqlOps.dedupEmbeddingCosine),
-    "q_dedup_semantic" -> sqlStaged(Seq("embeddings"), SqlOps.dedupSemantic),
-    "q_ann_margin" -> sqlStaged(Seq("embeddings"), SqlOps.annMargin),
-    "q_dedup_canonical" -> sqlq(Seq("documents"), SqlOps.dedupCanonical),
-    // pairs → clusters: transitive closure of the minhash candidate
-    // pairs via iterative min-label propagation (graft.ops.Cluster)
-    "q_dedup_cluster" -> (clustersStaged _),
-    // the O(log n) large-star/small-star variant against the SAME
-    // transitive-closure oracle — both implementations gate-checked
-    "q_dedup_cluster_star" -> ((s, d) => {
-      val pairs = sqlStaged(Seq("documents"), SqlOps.dedupMinhash)(s, d)
-      graft.ops.Cluster.connectedComponentsStar(
-        pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
-    }),
-    // delta-edge cluster maintenance: merge the new-arrivals batch's
-    // candidate pairs into the staged base map via component
-    // contraction — must reproduce full CC on the union graph (same
-    // recursive-CTE oracle as the from-scratch builds), at cost ∝ delta
-    // the delta pairs come from the incremental candidate op (new
-    // signatures probing the existing band index, cost ∝ delta) —
-    // OpsSpec proves them identical to the full pair set restricted
-    // to new docs, so the union-closure oracle still applies
-    "q_dedup_cluster_delta" -> (clustersDeltaStaged _),
-    // the final dedup step: the cleaned corpus = one representative per
-    // duplicate cluster (its minimum id) plus every unclustered doc;
-    // the corpus definition is single-sourced from SqlOps.corpusCte
-    // (the same corpus the minhash pairs are built over)
-    "q_dedup_survivors" -> ((s, d) => survivorsFrom(clustersStaged(s, d), s, d)),
-    // the incremental pipeline closed end-to-end: delta candidates →
-    // delta-CC map → survivors, against the SAME survivors oracle as
-    // the full rebuild (the delta map must be closure-identical)
-    "q_dedup_survivors_delta" -> ((s, d) =>
-      survivorsFrom(clustersDeltaStaged(s, d), s, d)),
-    "q_sample_hash" -> sqlq(Seq("documents"), SqlOps.sampleHash),
-    "q_sample_stratified" -> sqlq(Seq("documents"), SqlOps.sampleStratified),
-    // Neyman-optimal budget allocation across strata (N_h * sigma_h)
-    "q_sample_neyman" -> sqlq(Seq("documents"), SqlOps.sampleNeyman),
-    "q_cap_per_source" -> sqlq(Seq("documents"), SqlOps.capPerSource),
-    "q_global_rownum" -> sqlq(Seq("documents"), SqlOps.globalRowNumber),
-    "q_sample_weighted" -> sqlq(Seq("documents"), SqlOps.sampleWeighted),
-    // shard-parallel token-budget packing (per-shard windows, no
-    // single-partition exchange) and weight-proportional corpus mixing
-    "q_pack_sequences" -> sqlq(Seq("documents"), SqlOps.packSequences),
-    // context-length sizing: naive-padding vs concat-packing bound
-    "q_pack_efficiency" -> sqlStaged(Seq("documents"), SqlOps.packEfficiency),
-    "q_mix_epochs" -> sqlq(Seq("documents"), SqlOps.mixEpochs),
-    // which sources copy from which: rollup of the staged minhash
-    // band candidates into a source×source matrix
-    "q_dedup_source_overlap" -> sqlStaged(Seq("documents"), SqlOps.dedupSourceOverlap),
-    // content-addressed anti-join of a fresh snapshot against the
-    // already-ingested corpus (the daily-ingest dedup gate)
-    "q_dedup_incremental" -> sqlq(Seq("documents"), SqlOps.dedupIncremental),
-    // incremental candidate generation: new docs probe the existing
-    // band index (cost ∝ delta), feeding the delta-CC update below
-    "q_dedup_minhash_delta" -> sqlStaged(Seq("documents"), SqlOps.dedupMinhashDelta),
-    // corpus-common (boilerplate) 3-gram fraction off the uncapped
-    // distinct shingle index — the C4/CCNet line-dedup analogue
-    "q_dedup_common_ngrams" -> sqlStaged(Seq("documents"), SqlOps.dedupCommonNgrams),
-    // one integer-exact PageRank power step over the minhash candidate
-    // graph (hub detection on the duplicate graph), and the 3-step
-    // unrolled iteration
-    // degree assortativity of the candidate graph: dup farms vs
-    // template fan-out
-    "q_graph_assortativity" -> sqlStaged(Seq("documents"), SqlOps.graphAssortativity),
-    "q_pagerank_step" -> sqlStaged(Seq("documents"), SqlOps.pagerankStep),
-    "q_pagerank_iter" -> sqlStaged(Seq("documents"), SqlOps.pagerankIter),
-    "q_textrank_keywords" -> sqlStaged(Seq("documents"), SqlOps.textrankKeywords),
-    "q_linkage_fs" -> sqlStaged(Seq("documents"), SqlOps.linkageFs),
-    "q_link_prediction" -> sqlStaged(Seq("lineitem"), SqlOps.linkPrediction),
-    "q_markov_stationary" -> sqlStaged(Seq("events"), SqlOps.markovStationary),
-    // entropy rate of the same chain, weighted by the shared pi chain
-    "q_markov_entropy" -> sqlStaged(Seq("events"), SqlOps.markovEntropyRate),
-    "q_cohort_ltv" -> sqlq(Seq("orders"), SqlOps.cohortLtv),
-    // the driver-loop form of the same 3 iterations, gated against the
-    // SAME oracle as the SQL-unrolled tree (like CC vs CC-star)
-    "q_pagerank_loop" -> ((s, d) => {
-      val pairs = sqlStaged(Seq("documents"), SqlOps.dedupMinhash)(s, d)
-      graft.ops.Graph.pagerank(
-        pairs.select(col("doc_a").as("a"), col("doc_b").as("b")), iters = 3)
-    }),
-    // deterministic synchronous label-propagation communities over the
-    // candidate graph (3 staged rounds, majority label, min tie-break)
-    "q_label_prop" -> sqlStaged(Seq("documents"), SqlOps.labelProp),
-    // 2-core of the candidate graph by staged peeling rounds (dense
-    // duplicate clusters vs incidental collisions), and the
-    // loop-until-fixpoint driver form gated against the same oracle
-    "q_kcore" -> sqlStaged(Seq("documents"), SqlOps.kcoreIter),
-    // edge-grain cohesion: the 4-truss peel (every edge in ≥2
-    // triangles at the fixpoint) — the sharper sibling of the k-core
-    "q_graph_truss" -> sqlStaged(Seq("documents"), SqlOps.trussIter),
-    "q_kcore_loop" -> ((s, d) => {
-      val pairs = sqlStaged(Seq("documents"), SqlOps.dedupMinhash)(s, d)
-      graft.ops.Graph.kcore(
-        pairs.select(col("doc_a").as("a"), col("doc_b").as("b")), k = 2)
-    }),
-    // loop-until-convergence twin of q_graph_truss, same oracle
-    "q_graph_truss_loop" -> ((s, d) => {
-      val pairs = sqlStaged(Seq("documents"), SqlOps.dedupMinhash)(s, d)
-      graft.ops.Graph.truss(
-        pairs.select(col("doc_a").as("a"), col("doc_b").as("b")), k = 4)
-    }),
-    // PPJoin-style prefix-filtered similarity self-join off the
-    // uncapped shingle index (the signature-free bounded-candidate path)
-    "q_dedup_prefix" -> sqlStaged(Seq("documents"), SqlOps.dedupPrefix),
-    "q_dedup_prefix_delta" -> sqlStaged(Seq("documents"), SqlOps.dedupPrefixDelta),
-    // duplicate-cluster size histogram off the staged cluster map —
-    // the dedup diagnostic read after every clustering run
-    "q_dedup_cluster_sizes" -> ((s, d) => {
-      val cl = clustersStaged(s, d)
-      cl.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
-        .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
-    }),
-    // the embedding-side pairs → clusters composition: cosine near-dup
-    // candidates (8-band sign-LSH gate) closed into components by the
-    // same CC operator the text side uses, against the same
-    // recursive-CTE closure oracle. Embedding near-dup chains give this
-    // graph a much larger diameter than text minhash clusters (10
-    // plain-propagation rounds at sf0.1) — but ALL THREE round-saving
-    // variants were measured here and lose at local scale, where
-    // per-round plan/codegen cost dominates the tiny dataflow: plain
-    // 10 rounds 2.5 s, pointer-doubling 7 rounds 3.3 s, star
-    // alternation 5 rounds 4.0 s. At 100 TB the ranking inverts (data
-    // volume per round dominates, round count is what matters) and
-    // this composition routes to connectedComponentsStar.
-    "q_dedup_embedding_clusters" -> ((s, d) => {
-      val pairs = sqlStaged(Seq("embeddings"), SqlOps.dedupEmbeddingCosine)(s, d)
-      graft.ops.Cluster.connectedComponents(
-          pairs.select(col("vec_a").as("a"), col("vec_b").as("b")))
-        .select(col("doc_id").as("vec_id"), col("cluster_id"))
-    }),
+  /** Runs through [[sqlq]]; the oracle is `op(DuckDialect)`. */
+  private[graft] final case class Sql(views: Seq[String], op: Dialect => String) extends Query {
+    def run: (SparkSession, String) => DataFrame = sqlq(views, op)
+    def oracle: String = op(DuckDialect)
+  }
 
-    // -- similarity search (embeddings) --
-    "q_embedding_stats" -> sqlq(Seq("embeddings"), SqlOps.embeddingStats),
-    "q_embedding_drift" -> sqlq(Seq("embeddings"), SqlOps.embeddingDrift),
-    "q_label_drift" -> sqlq(Seq("embeddings"), SqlOps.labelDrift),
-    // two-sample KS over doc lengths (en vs rest): exact int64 D
-    "q_ks_drift" -> sqlq(Seq("documents"), SqlOps.ksDrift),
-    "q_knn_bruteforce" -> sqlStaged(Seq("embeddings"), SqlOps.knnBruteForce),
-    // influence concentration: which training vectors dominate eval
-    // top-k lists (split-leakage audit from the embedding side)
-    "q_train_attribution" -> sqlStaged(Seq("embeddings"), SqlOps.trainAttribution),
-    // recall@3 of the attribution shortlist vs exact — bounds what the
-    // 2-probe IVF pair stage loses vs the cartesian it replaced
-    "q_attr_shortlist_recall" -> sqlStaged(Seq("embeddings"), SqlOps.attrShortlistRecall),
-    "q_ann_sign_lsh" -> sqlStaged(Seq("embeddings"), SqlOps.annSignLsh),
-    // recall@3 of the sign-LSH index vs exact brute force on the
-    // bounded query set — the nightly index-drift check
-    "q_ann_eval" -> sqlStaged(Seq("embeddings"), SqlOps.annEval),
-    // k-occurrence (hubness) audit of the sign-LSH kNN lists
-    "q_ann_hubness" -> sqlStaged(Seq("embeddings"), SqlOps.annHubness),
-    "q_ann_ivf" -> sqlStaged(Seq("embeddings"), SqlOps.annIvf),
-    // posting-list balance audit over the shared IVF assignment
-    "q_ivf_balance" -> sqlStaged(Seq("embeddings"), SqlOps.ivfBalance),
-    // does int8 quantization change who the top-3 neighbors are?
-    "q_ann_quant_recall" -> sqlStaged(Seq("embeddings"), SqlOps.annQuantRecall),
-    // IVF-PQ's storage half: 4 codebook ids per vector off the shared
-    // per-label component means
-    "q_ann_pq" -> sqlStaged(Seq("embeddings"), SqlOps.annPq),
-    // the PQ read path: ADC top-10 per query off the staged code table
-    // (scores 4 int lookups per vector — never touches the embeddings)
-    "q_ann_pq_search" -> sqlStaged(Seq("embeddings"), SqlOps.annPqSearch),
-    // the composed FAISS-style pipeline: IVF 2-cell probe → ADC top-20
-    // off the code table → exact-cosine refine to top-5
-    "q_ann_ivfpq" -> sqlStaged(Seq("embeddings"), SqlOps.annIvfPq),
-    "q_ann_ivfpq_eval" -> sqlStaged(Seq("embeddings"), SqlOps.annIvfPqEval),
-    // incremental IVF maintenance: assign only today's delta slice to
-    // yesterday's staged centroids, merge into the staged sufficient
-    // stats (cost ∝ delta); the oracle is the full-rebuild form
-    "q_ann_ivf_delta" -> sqlStaged(Seq("embeddings"), SqlOps.annIvfDelta),
-    // one Lloyd iteration: broadcast-argmin assignment (the staged IVF
-    // working set) + the per-cell centroid update groupBy
-    "q_kmeans_step" -> sqlStaged(Seq("embeddings"), SqlOps.kmeansStep),
+  /** Runs through [[sqlStaged]]; the oracle is `op.single(DuckDialect)`. */
+  private[graft] final case class Staged(views: Seq[String], op: StagedOp) extends Query {
+    def run: (SparkSession, String) => DataFrame = sqlStaged(views, op)
+    def oracle: String = op.single(DuckDialect)
+  }
 
-    // -- text analysis (documents) --
-    "q_text_tokens" -> sqlq(Seq("documents"), SqlOps.textTokens),
-    "q_dedup_substring" -> sqlStaged(Seq("documents"), SqlOps.dedupSubstring),
-    "q_mix_temperature" -> sqlq(Seq("documents"), SqlOps.mixTemperature),
-    "q_orders_rfm" -> sqlStaged(Seq("orders"), SqlOps.ordersRfm),
-    "q_heavy_hitters" -> sqlStaged(Seq("documents"), SqlOps.heavyHitters),
-    "q_ann_ivf_probe2" -> sqlStaged(Seq("embeddings"), SqlOps.annIvfProbe2),
-    // vector-quality gate: per-cell members farther than 4x the cell's
-    // median squared distance from their OWN centroid
-    "q_embedding_outliers" -> sqlStaged(Seq("embeddings"), SqlOps.embeddingOutliers),
-    // recall-vs-cost curve per probe depth (staged pair table)
-    "q_ann_nprobe_sweep" -> sqlStaged(Seq("embeddings"), SqlOps.annNprobeSweep),
-    // near-dup graph degree histogram (isolates / hubs)
-    "q_ann_degree_hist" -> sqlStaged(Seq("embeddings"), SqlOps.annDegreeHist),
-    "q_text_unigram_lm" -> sqlStaged(Seq("documents"), SqlOps.textUnigramLm),
-    "q_dsir_weights" -> sqlStaged(Seq("documents"), SqlOps.dsirWeights),
-    "q_search_bm25" -> sqlStaged(Seq("documents"), SqlOps.searchBm25),
-    "q_search_ndcg" -> sqlStaged(Seq("documents"), SqlOps.searchNdcg),
-    "q_search_rrf" -> sqlStaged(Seq("documents"), SqlOps.searchRrf),
-    "q_search_rbo" -> sqlStaged(Seq("documents"), SqlOps.searchRbo),
-    "q_corpus_diversity" -> sqlStaged(Seq("documents"), SqlOps.corpusDiversity),
-    "q_ship_latency_priority" -> sqlq(Seq("lineitem", "orders"), SqlOps.shipLatencyPriority),
-    // provenance entropy over the staged cluster map (the clusters-view
-    // pattern of q_dedup_cluster_eval; oracle re-derives the map via
-    // the recursive-CTE closure)
-    "q_cluster_source_entropy" -> ((s, d) => {
-      clustersStaged(s, d).createOrReplaceTempView("clusters")
-      graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
-      s.sql(SqlOps.clusterSourceEntropy(SparkDialect))
-    }),
-    "q_bpe_pairs" -> sqlStaged(Seq("documents"), SqlOps.bpePairs),
-    // the iterative BPE trainer: 3 staged merge rounds over the vocab
-    // (prewarmed — the rounds feed TWO consumers, merges + encode)
-    "q_bpe_merges" -> sqlStaged(Seq("documents"), SqlOps.bpeMerges),
-    "q_ulm_viterbi" -> sqlStaged(Seq("documents"), SqlOps.ulmViterbi),
-    "q_ulm_em_step" -> sqlStaged(Seq("documents"), SqlOps.ulmEmStep),
-    "q_ulm_em_gain" -> sqlStaged(Seq("documents"), SqlOps.ulmEmGain),
-    "q_ulm_encode" -> sqlStaged(Seq("documents"), SqlOps.ulmEncode),
-    // the FULL SentencePiece trainer loop: soft-EM expected counts
-    // over all segmentations + iterative pruning to a 64-piece vocab
-    "q_ulm_soft_em" -> sqlStaged(Seq("documents"), SqlOps.ulmSoftEm),
-    "q_ulm_prune" -> sqlStaged(Seq("documents"), SqlOps.ulmPrune64Timed),
-    "q_ulm_drift" -> sqlStaged(Seq("documents"), SqlOps.ulmDrift),
-    // tokenizer-selection A/B (both trained artifacts, one tf join);
-    // name sorts after q_ulm_viterbi so ulm_seg stays billed there
-    "q_ulm_vs_bpe" -> sqlStaged(Seq("documents"), SqlOps.ulmVsBpe),
-    // -- preference-data aggregation (RLHF data prep) --
-    "q_pref_winrate" -> sqlStaged(Seq("documents"), SqlOps.prefWinrate),
-    "q_pref_bradley_terry" -> sqlStaged(Seq("documents"), SqlOps.prefBradleyTerry),
-    // calibration of a cheap quality score against the rule battery
-    "q_filter_calibration" -> sqlq(Seq("documents"), SqlOps.filterCalibration),
-    // GRPO-style per-group advantage baseline
-    "q_reward_group_norm" -> sqlq(Seq("documents"), SqlOps.rewardGroupNorm),
-    // DPO chosen/rejected pair construction per prompt group
-    "q_pref_dpo_pairs" -> sqlq(Seq("documents"), SqlOps.prefDpoPairs),
-    // Poisson-bootstrap CI for the corpus pass-rate
-    "q_eval_bootstrap" -> sqlq(Seq("documents"), SqlOps.evalBootstrap),
-    // full Lloyd loop: per-round reassignments + centroid shift
-    "q_kmeans_loop" -> sqlStaged(Seq("embeddings"), SqlOps.kmeansLoop),
-    // simplified (centroid-based) silhouette over the final model;
-    // shares the Lloyd chain, billed to q_kmeans_loop by name order
-    "q_kmeans_silhouette" -> sqlStaged(Seq("embeddings"), SqlOps.kmeansSilhouette),
-    // external validation: purity + NMI of the final assignment
-    // against ground-truth labels (same Lloyd chain)
-    "q_kmeans_purity" -> sqlStaged(Seq("embeddings"), SqlOps.kmeansPurity),
-    // chance-corrected pair-counting validation next to purity/NMI
-    "q_kmeans_ari" -> sqlStaged(Seq("embeddings"), SqlOps.kmeansAri),
-    // DoReMi-style excess-loss domain reweighting
-    "q_mix_doremi" -> sqlStaged(Seq("documents"), SqlOps.mixDoremiOp),
-    // water-filling token-budget allocation across domains
-    "q_mix_waterfill" -> sqlq(Seq("documents"), SqlOps.mixWaterfill),
-    // split-conformal threshold for the cheap filter score
-    "q_filter_conformal" -> sqlStaged(Seq("documents"), SqlOps.filterConformal),
-    // Johnson-Lindenstrauss projection + distortion audit
-    "q_embed_jl_project" -> sqlStaged(Seq("embeddings"), SqlOps.embedJlProject),
-    "q_embed_jl_distortion" -> sqlStaged(Seq("embeddings"), SqlOps.embedJlDistortion),
-    "q_bpe_encode" -> sqlStaged(Seq("documents"), SqlOps.bpeEncode),
-    "q_text_langid" -> sqlq(Seq("documents"), SqlOps.textLangId),
-    "q_text_langid_eval" -> sqlq(Seq("documents"), SqlOps.textLangIdEval),
-    "q_text_quality" -> sqlq(Seq("documents"), SqlOps.textQuality),
-    "q_text_fingerprint" -> sqlq(Seq("documents"), SqlOps.textFingerprint),
-    "q_text_tfidf" -> sqlStaged(Seq("documents"), SqlOps.textTfIdf),
-    "q_text_bigrams" -> sqlq(Seq("documents"), SqlOps.textBigrams),
-    "q_text_bigrams_source" -> sqlq(Seq("documents"), SqlOps.topBigramsPerSource),
-    "q_text_repetition" -> sqlq(Seq("documents"), SqlOps.textRepetition),
-    "q_corpus_filter" -> sqlq(Seq("documents"), d => SqlOps.corpusFilter(d)),
-    // threshold sensitivity of the shipped 0.4 quality gate, one
-    // scoring pass against a 6-row threshold domain
-    "q_quality_sweep" -> sqlq(Seq("documents"), SqlOps.qualitySweep),
-    // does the quality score ORDER docs correctly? Mann-Whitney AUC
-    // (en vs und labels), exact integer midranks, ppm readout
-    "q_quality_auc" -> sqlq(Seq("documents"), SqlOps.qualityAuc),
-    // is the quality score just a length detector? Spearman rank
-    // correlation vs token count, exact doubled midranks
-    "q_quality_spearman" -> sqlq(Seq("documents"), SqlOps.qualitySpearman),
-    "q_quality_kendall" -> sqlStaged(Seq("documents"), SqlOps.qualityKendall),
-    // data valuation: per-source leave-one-out effect on corpus mean
-    // quality and per-doc gate pass rate (additive decomposition —
-    // one scoring pass, never |sources| re-scores)
-    "q_source_loo" -> sqlq(Seq("documents"), SqlOps.sourceLoo),
-    // the shippable artifact: survivors + redacted-content hash + shard
-    "q_release_manifest" -> sqlq(Seq("documents"), d => SqlOps.releaseManifest(d)),
-    // writer-side skew audit of the manifest's md5 shard ring
-    "q_shard_skew" -> sqlq(Seq("documents"), SqlOps.shardSkew),
-    // score-vs-language reliability deciles + expected calibration error
-    "q_quality_calibration" -> sqlq(Seq("documents"), SqlOps.qualityCalibration),
-    // Murphy decomposition of the decile-binned Brier score
-    "q_quality_brier" -> sqlq(Seq("documents"), SqlOps.qualityBrier),
-    // the one-page datasheet next to the manifest: size, mix, dup and
-    // PII facts as (metric, value) rows off staged artifacts
-    "q_dataset_card" -> sqlStaged(Seq("documents"), SqlOps.datasetCard),
-    // the card's ADDITIVE slice over a deterministic md5-half of the
-    // corpus — the exact per-batch SQL the streaming ingest card runs
-    // (DailyIngestSpec proves the rollup; this pins the fragment
-    // cross-engine on a proper subset, so a slice-insensitive bug —
-    // e.g. reading `documents` instead of `from` — cannot hide)
-    "q_dataset_card_delta" -> sqlq(Seq("documents"),
-      d => SqlOps.datasetCardAdditive(d, from = CardDeltaSlice)),
-    "q_curation_funnel" -> sqlq(Seq("documents"), SqlOps.curationFunnel),
-    "q_corpus_report" -> sqlq(Seq("documents"), SqlOps.corpusReport),
-    "q_contamination" -> sqlq(Seq("documents"), SqlOps.contamination),
-    // held-out 4-gram novelty vs the training split, per source —
-    // the memorization-side sibling of decontamination
-    "q_ngram_novelty" -> sqlq(Seq("documents"), SqlOps.ngramNovelty),
-    // the bloom-gated variant: identical rows (the oracle runs the
-    // ungated exact form — the bloom prefilter must be result-invisible)
-    "q_contamination_bloom" -> sqlStaged(Seq("documents"), SqlOps.contaminationBloom),
-    // per-source leak rollup (quarantine decisions, not per-doc drops)
-    "q_contamination_by_source" -> sqlStaged(Seq("documents"), SqlOps.contaminationBySource),
-    "q_text_ttr" -> sqlq(Seq("documents"), SqlOps.textTtr),
-    // corpus length profile (log2 buckets) and key-skew diagnostic
-    "q_length_histogram" -> sqlq(Seq("documents"), SqlOps.lengthHistogram),
-    "q_skew_profile" -> sqlq(Seq("orders"), SqlOps.skewProfile),
-    // per-language median quality cutoff and per-dimension embedding
-    // normalization stats
-    "q_quality_adaptive" -> sqlStaged(Seq("documents"), SqlOps.qualityAdaptiveFilter),
-    "q_embedding_dim_stats" -> sqlq(Seq("embeddings"), SqlOps.embeddingDimStats),
-    "q_embedding_whiten" -> sqlq(Seq("embeddings"), SqlOps.embeddingWhiten),
-    "q_pca_power_step" -> sqlq(Seq("embeddings"), SqlOps.pcaPowerStep),
-    "q_text_dup_ngrams" -> sqlq(Seq("documents"), SqlOps.textDupNgrams),
-    "q_text_entropy" -> sqlq(Seq("documents"), SqlOps.textEntropy),
-    "q_text_scrub" -> sqlq(Seq("documents"), SqlOps.textScrub),
-    // RAG/pretraining chunker: overlapping token windows per document
-    "q_chunk_documents" -> sqlq(Seq("documents"), SqlOps.chunkDocuments),
-    // int8 vector compression for the ANN index's storage tier
-    "q_embedding_quantize" -> sqlq(Seq("embeddings"), SqlOps.embeddingQuantize),
-    "q_vocab_coverage" -> sqlq(Seq("documents"), SqlOps.vocabCoverage),
-    "q_text_rolling_hash" -> ((s, d) => {
-      graft.functions.RollingHash.register(s)
-      graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
-      s.sql("SELECT doc_id, rolling_hash(text) AS rhash FROM documents")
-    }),
+  /** DataFrame code or a custom lambda, or an op checked against an
+    * independent form. The oracle is by-name, so building [[queries]]
+    * renders no DuckDB SQL. */
+  private[graft] final class Frame(val run: (SparkSession, String) => DataFrame, sql: => String)
+      extends Query {
+    def oracle: String = sql
+  }
+  private object Frame {
+    def apply(run: (SparkSession, String) => DataFrame, oracle: => String): Frame =
+      new Frame(run, oracle)
+  }
 
-    // -- event-time analytics --
-    "q_events_tumbling" -> sqlq(Seq("events"), SqlOps.eventsTumbling),
-    "q_events_sessionize" -> sqlq(Seq("events"), SqlOps.eventsSessionize),
-    "q_events_twa" -> sqlq(Seq("events"), SqlOps.eventsTimeWeightedAvg),
-    "q_survival_km" -> sqlq(Seq("events"), SqlOps.survivalKm),
-    "q_value_outliers" -> sqlq(Seq("events"), SqlOps.valueOutliers),
-    "q_range_join" -> sqlq(Seq("events"), SqlOps.rangeJoinBands),
-    "q_range_join_irregular" -> sqlq(Seq("events"), SqlOps.rangeJoinIrregular),
-    "q_events_funnel" -> sqlq(Seq("events"), SqlOps.eventsFunnel),
-    "q_orders_retention" -> sqlq(Seq("orders"), SqlOps.ordersRetention),
-    // hopping (overlapping) windows, interval union, CDC apply,
-    // snapshot diff, and per-column profiling — the data-engineering
-    // maintenance surface around the analytic core
-    "q_events_hopping" -> sqlq(Seq("events"), SqlOps.eventsHopping),
-    "q_intervals_coverage" -> sqlq(Seq("events"), SqlOps.intervalCoverage),
-    "q_interval_overlap" -> sqlq(Seq("events"), SqlOps.intervalOverlapJoin),
-    "q_changepoint" -> sqlq(Seq("orders"), SqlOps.changepointRevenue),
-    "q_ewma_forecast" -> sqlStaged(Seq("orders"), SqlOps.ewmaForecast),
-    "q_anomaly_ewma" -> sqlStaged(Seq("orders"), SqlOps.anomalyEwma),
-    "q_cdc_apply" -> sqlq(Seq("orders"), SqlOps.cdcApply),
-    "q_agg_retract" -> sqlq(Seq("orders"), SqlOps.aggRetract),
-    "q_url_canonical" -> sqlq(Seq("part"), SqlOps.urlCanonical),
-    "q_split_temporal" -> sqlq(Seq("events"), SqlOps.splitTemporal),
-    "q_snapshot_diff" -> sqlq(Seq("documents"), SqlOps.snapshotDiff),
-    "q_merkle_ranges" -> sqlq(Seq("documents"), SqlOps.merkleRanges),
-    "q_profile_orders" -> sqlStaged(Seq("orders"), SqlOps.profileOrders),
-    "q_profile_orders_approx" -> sqlq(Seq("orders"), SqlOps.profileOrdersApprox),
-    "q_anomaly_mad" -> sqlStaged(Seq("events"), SqlOps.anomalyMad),
-    "q_attribution" -> sqlq(Seq("events"), SqlOps.attributionLastTouch),
-    "q_user_growth" -> sqlq(Seq("events"), SqlOps.userGrowth),
-    "q_zipf_fit" -> sqlStaged(Seq("documents"), SqlOps.zipfFit),
-    "q_good_turing" -> sqlStaged(Seq("documents"), SqlOps.goodTuring),
-    // Chao1 unseen-vocabulary richness + Good coverage off the same counts
-    "q_chao1_richness" -> sqlStaged(Seq("documents"), SqlOps.chao1Richness),
-    // Hill tail-index of the token-frequency distribution (top-k order stats)
-    "q_hill_tail" -> sqlStaged(Seq("documents"), SqlOps.hillTail),
-    "q_simpson_diversity" -> sqlStaged(Seq("documents"), SqlOps.simpsonDiversity),
-    "q_search_phrase" -> sqlStaged(Seq("documents"), SqlOps.searchPhrase),
-    "q_shard_rebalance" -> sqlq(Seq("documents"), SqlOps.shardRebalance),
-    "q_heaps_fit" -> sqlStaged(Seq("documents"), SqlOps.heapsFit),
-    // Gopher rule battery, CCNet LM-bucketing, tokenizer fertility,
-    // histogram-sketch quantiles, and full power-iteration PCA
-    "q_gopher_rules" -> sqlq(Seq("documents"), SqlOps.gopherRules),
-    // PII release-gate audit (Luhn / octet validation; zero baseline
-    // on this PII-free fixture, planted paths in MicroOracleSpec)
-    "q_pii_scan" -> sqlStaged(Seq("documents"), SqlOps.piiScan),
-    // unbiased pass@k per task (source=task, Gopher battery=checker)
-    "q_eval_pass_at_k" -> sqlq(Seq("documents"), SqlOps.evalPassAtK),
-    "q_ccnet_buckets" -> sqlStaged(Seq("documents"), SqlOps.ccnetBuckets),
-    "q_filter_kappa" -> sqlStaged(Seq("documents"), SqlOps.filterKappa),
-    // McNemar paired test over the same two gates: is the
-    // disagreement directional or coin-flip noise?
-    "q_filter_mcnemar" -> sqlStaged(Seq("documents"), SqlOps.filterMcnemar),
-    "q_tokenizer_fertility" -> sqlStaged(Seq("documents"), SqlOps.tokenizerFertility),
-    "q_hist_quantiles" -> sqlq(Seq("events"), SqlOps.histogramQuantiles),
-    "q_pca_power_iter" -> ((s: SparkSession, d: String) => pcaPowerStaged(s, d)),
-    "q_pca_project" -> sqlStaged(Seq("embeddings"), SqlOps.pcaProject),
-    "q_pca_deflate" -> ((s: SparkSession, d: String) => pcaDeflateStaged(s, d)),
-    "q_join_bloom_gate" -> sqlq(Seq("orders", "lineitem"), SqlOps.joinBloomGate),
-    // leakage-safe split: the staged cluster map feeds the `clusters`
-    // view; the oracle re-derives it via the recursive-CTE closure
-    "q_dedup_cluster_eval" -> ((s, d) => {
-      clustersStaged(s, d).createOrReplaceTempView("clusters")
-      graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
-      s.sql(SqlOps.dedupClusterEval(SparkDialect))
-    }),
-    // modularity of three partitions of the candidate graph: the
-    // cluster map (ceiling), source provenance, singletons (floor)
-    "q_cluster_modularity" -> ((s, d) => {
-      clustersStaged(s, d).createOrReplaceTempView("clusters")
-      buildStages(Seq("documents"), SqlOps.dedupMinhash)(s, d)
-      s.sql(SqlOps.clusterModularity(SparkDialect))
-    }),
-    "q_split_leakage_safe" -> ((s, d) => {
-      clustersStaged(s, d).createOrReplaceTempView("clusters")
-      graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
-      // the assignment is materialized once (two consumers: straddle
-      // audit + rollup — inlined, each would re-run corpus⋈clusters)
-      s.sql(SqlOps.splitLeakageSafe(SparkDialect)).localCheckpoint()
-        .createOrReplaceTempView("split_a")
-      s.sql(SqlOps.splitReport(SparkDialect))
-    }),
-    // cluster-safe K-fold CV assignment + straddle/balance audit
-    "q_split_kfold" -> ((s, d) => {
-      clustersStaged(s, d).createOrReplaceTempView("clusters")
-      graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
-      s.sql(SqlOps.splitKfoldAssign(SparkDialect)).localCheckpoint()
-        .createOrReplaceTempView("kfold_a")
-      s.sql(SqlOps.splitKfoldReport(SparkDialect))
-    }),
-    // quality-gate pass rate among real duplicates vs uniques + z
-    "q_quality_vs_dup" -> ((s, d) => {
-      clustersStaged(s, d).createOrReplaceTempView("clusters")
-      graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
-      s.sql(SqlOps.qualityVsDup(SparkDialect))
-    }),
-    "q_text_bigram_lm" -> sqlStaged(Seq("documents"), SqlOps.textBigramLm),
-    // Stupid-Backoff LM: held-out half scored under train-half counts
-    "q_text_backoff_lm" -> sqlStaged(Seq("documents"), SqlOps.textBackoffLm),
-    "q_bigram_pmi" -> sqlStaged(Seq("documents"), SqlOps.bigramPmi),
-    "q_join_size_audit" -> sqlq(Seq("orders", "lineitem"), SqlOps.joinSizeAudit),
-    "q_metric_contribution" -> sqlq(Seq("lineitem", "part"), SqlOps.metricContribution),
-    "q_pareto_customers" -> sqlStaged(Seq("orders"), SqlOps.paretoCustomers),
-    "q_text_readability" -> sqlq(Seq("documents"), SqlOps.textReadability),
-    // merge-of-partials vs a direct-aggregation oracle: the equality
-    // proves the incremental-maintenance decomposition lossless
-    "q_agg_incremental" -> sqlq(Seq("orders"), SqlOps.aggIncremental),
-    // join-view delta decomposition; the oracle runs the direct join
-    "q_join_delta" -> sqlq(Seq("orders", "lineitem"), SqlOps.joinDelta),
-    // snapshot-to-snapshot source-mix KL contributions
-    "q_source_kl" -> sqlq(Seq("documents"), SqlOps.sourceKl),
-    // weekly-structure diagnostic: daily-revenue autocorrelation at
-    // lags 1..7 from exact integer moments
-    "q_acf_revenue" -> sqlq(Seq("orders"), SqlOps.acfRevenue),
-    // robust trend: median of pairwise day slopes (calendar-bounded
-    // pair set) + median-residual intercept
-    "q_theilsen_revenue" -> sqlq(Seq("orders"), SqlOps.theilSenRevenue),
-    "q_seasonality_dow" -> sqlq(Seq("orders"), SqlOps.seasonalityDow),
-    "q_ols_revenue" -> sqlq(Seq("orders"), SqlOps.olsRevenue),
-    "q_forecast_skill" -> sqlStaged(Seq("orders"), SqlOps.forecastSkill),
-    "q_dau_mau" -> sqlq(Seq("events"), SqlOps.dauMauStickiness),
-    "q_power_analysis" -> sqlq(Seq("events"), SqlOps.powerAnalysis),
-    "q_label_noise" -> sqlq(Seq("documents"), SqlOps.labelNoise),
-    "q_cramers_v" -> sqlq(Seq("documents"), SqlOps.cramersV),
-    "q_dedup_winnow" -> sqlStaged(Seq("documents"), SqlOps.dedupWinnow),
-    "q_anomaly_deseasonal" -> sqlq(Seq("orders"), SqlOps.anomalyDeseasonal),
-    "q_seasonal_strength" -> sqlq(Seq("orders"), SqlOps.seasonalStrength),
-    "q_ljung_box" -> sqlq(Seq("orders"), SqlOps.ljungBox),
-    "q_pmi_spectral" -> sqlStaged(Seq("documents"), SqlOps.pmiSpectral),
-    // the trend TEST next to the trend estimator: tie-corrected
-    // Mann-Kendall with an exact-integer 5% verdict
-    "q_mannkendall_revenue" -> sqlq(Seq("orders"), SqlOps.mannKendallRevenue),
-    // fourth approx-sketch contract: engine percentile sketch vs the
-    // exact value-cardinality rank, only the bound boolean compared
-    "q_price_percentile_approx" -> sqlq(Seq("orders"), SqlOps.pricePercentileApprox),
-    // concentration + robust trend + inequality over the same
-    // exact-cents revenue facts
-    "q_revenue_hhi" -> sqlq(Seq("orders", "customer", "nation"), SqlOps.revenueHhi),
-    "q_rolling_median_revenue" -> sqlq(Seq("orders"), SqlOps.rollingMedianRevenue),
-    // bucket-decomposed global value rank; oracle = the single window
-    "q_revenue_gini" -> sqlq(Seq("orders"), SqlOps.revenueGini),
-    // source→lang functional-dependency profile
-    "q_fd_audit" -> sqlq(Seq("documents"), SqlOps.fdAudit),
-    // containment near-dup off the same staged shingle index, and the
-    // candidate-graph triangle diagnostic off the staged band pairs
-    "q_dedup_containment" -> sqlStaged(Seq("documents"), SqlOps.dedupContainment),
-    "q_graph_triangles" -> sqlStaged(Seq("documents"), SqlOps.graphTriangles),
-    "q_fuzzy_join" -> sqlStaged(Seq("documents"), SqlOps.fuzzyJoin),
-    "q_chi_square" -> sqlq(Seq("events"), SqlOps.chiSquare),
-    "q_cusum_drift" -> sqlq(Seq("events"), SqlOps.cusumDrift),
-    "q_event_transitions" -> sqlq(Seq("events"), SqlOps.eventTransitions),
-    "q_mutual_info" -> sqlq(Seq("documents"), SqlOps.mutualInfo),
-    "q_corpus_split" -> sqlq(Seq("documents"), SqlOps.corpusSplit),
-    "q_distinct_two_phase" -> sqlq(Seq("events"), SqlOps.distinctTwoPhase),
-    "q_zorder_layout" -> sqlq(Seq("orders"), SqlOps.zorderLayout),
-    "q_trend_by_brand" -> sqlq(Seq("lineitem", "part"), SqlOps.trendByBrand),
-    "q_skyline_orders" -> sqlStaged(Seq("orders"), SqlOps.skylineOrders),
-    "q_graph_degrees" -> sqlStaged(Seq("documents"), SqlOps.graphDegrees),
+  /** name → the engine's builder for that query, derived from [[registry]]. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.run }
 
-    // -- multimodal columns --
-    "q_multimodal_meta" -> sqlq(Seq("documents"), SqlOps.multimodalMeta),
-    "q_multimodal_resize" -> sqlq(Seq("documents"), SqlOps.multimodalResize),
-    "q_multimodal_audio" -> sqlq(Seq("documents"), SqlOps.multimodalAudioWindows),
-    // 8-point DFT band energies over the same windows (host-exact twiddles)
-    "q_multimodal_spectrum" -> sqlq(Seq("documents"), SqlOps.multimodalSpectrum),
-    // batched mapPartitions decode; dims are SQL-checkable, features not
-    "q_multimodal_decode" -> ((s, d) => {
-      import s.implicits._
-      graft.ops.Multimodal
-        .decodeBatched(graft.ops.Multimodal.asMedia(graft.Tables.documents(s, d)))
-        .toDF().drop("features")
-        .orderBy("doc_id")
-    }),
-    // frame sampling of video payloads (frame bytes dropped: chunk
-    // geometry is SQL-checkable, the binary itself is not)
-    "q_multimodal_frames" -> ((s, d) =>
-      graft.ops.Multimodal
-        .sampleFrames(graft.ops.Multimodal.asMedia(graft.Tables.documents(s, d)))
-        .drop("frame")
-        .orderBy("doc_id", "frame_no")),
-    // perceptual-hash image dedup over the two-snapshot media corpus:
-    // every payload appears twice under different ids (and different
-    // claimed mimes — the hash is content-addressed, so the pair still
-    // collides). The oracle reproduces the stub byte-grid hash in pure
-    // SQL; the real-pixel 8×8 grid path is covered by MultimodalSpec.
-    "q_image_phash" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("phash")
-      mediaPhashStaged(s, d)
-        .withColumn("n_dups", count(lit(1)).over(w))
-        .withColumn("keep_id", min("doc_id").over(w))
-    }),
-    // banded hamming near-dup over the same hashes (recall-approximate
-    // bands, exact one-sided verify — the simhash pattern on images)
-    "q_dedup_phash_near" -> ((s, d) => {
-      mediaPhashStaged(s, d).createOrReplaceTempView("phash_tbl")
-      s.sql(SqlOps.phashNear(SparkDialect))
-    }),
-  )
+  /** name → the DuckDB SQL that query is checked against, derived from
+    * [[registry]]. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (n, q) => n -> q.oracle }
 
-  // ---- DuckDB oracles ----
+  // ---- DuckDB oracle fragments shared by several rows ----
 
-  private val T = ListingSql.TRANSFORMED_CTE
-  private val MERGE_CTES: String =
+  private lazy val T = ListingSql.TRANSFORMED_CTE
+  private lazy val MERGE_CTES: String =
     s"""WITH $T,
        |main AS (SELECT * FROM transformed WHERE ingest_order % 2 = 0),
        |staging AS (
@@ -1447,7 +756,7 @@ object SparkEntry {
   /** Shared SCD2-merge oracle body ([[Load.scd2Merge]]'s relational
     * twin) — reused by the merge query itself and the point-in-time
     * read, so the two cannot drift. */
-  private val SCD2_SQL: String =
+  private lazy val SCD2_SQL: String =
     s"""$MERGE_CTES,
        |m AS (SELECT link, name, price_rp, CAST(0 AS BIGINT) AS valid_from FROM main),
        |st AS (SELECT link, name, price_rp FROM staging),
@@ -1493,37 +802,10 @@ object SparkEntry {
        |),
        |clusters AS (SELECT $idCol, MIN(lbl) AS cluster_id FROM reach GROUP BY $idCol)""".stripMargin
 
-  /** Two-snapshot media corpus -> (doc_id, phash) via the batched
-    * aHash pass — shared by q_image_phash and q_dedup_phash_near. */
-  private def mediaPhash(s: SparkSession, d: String): DataFrame = {
-    graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
-    val corpus = s.sql(
-      s"WITH ${SqlOps.corpusCte(SparkDialect)} SELECT doc_id, text FROM corpus")
-    graft.ops.Multimodal.aHash(graft.ops.Multimodal.asMedia(corpus)).toDF()
-  }
-
-  /** The (doc_id, phash) table staged once per JVM (r14): TWO
-    * consumers (q_image_phash, q_dedup_phash_near), and the hash pass
-    * is a typed mapPartitions decode (opaque to Catalyst — no reuse,
-    * no pruning), so the near-dup band SELF-join over the unstaged
-    * view re-ran the whole decode+hash on BOTH join sides every run
-    * (steady 1.3 s, first 6.1 s at sf0.1). The mh_sig rule: a shared
-    * signature index is materialized once and every consumer scans
-    * the columnar artifact. OWNER-BILLED to q_image_phash (r15), not
-    * prewarmed: the decode IS that query's computation (its body is
-    * only a window-count over the hashes), so the ewma_f doctrine
-    * applies — one timed cell carries the build. */
-  private def mediaPhashStaged(s: SparkSession, d: String): DataFrame = {
-    val path = stagePath(d, "media_phash")
-    writeStageOnce(path)(
-      mediaPhash(s, d).write.mode("overwrite").parquet(path))
-    readStage(s, path)
-  }
-
   /** The pure-SQL re-derivation of the stub byte-grid aHash over the
     * two-snapshot corpus, ending in `ph(doc_id, phash)` — ONE copy
     * shared by both image-hash oracles. */
-  private val PHASH_CTES: String =
+  private lazy val PHASH_CTES: String =
     s"""WITH ${SqlOps.corpusCte(DuckDialect)},
       |t AS (SELECT doc_id, text,
       |        CASE WHEN octet_length(encode(text)) = length(text)
@@ -1553,16 +835,16 @@ object SparkEntry {
       |ph AS (SELECT doc_id, string_agg(bit, '' ORDER BY cell) AS phash
       |       FROM bits GROUP BY doc_id)""".stripMargin
 
-  private val CLUSTER_CTES: String =
+  private lazy val CLUSTER_CTES: String =
     closureCtes(SqlOps.dedupMinhash.single(DuckDialect), "doc_a", "doc_b", "doc_id")
 
-  private val CLUSTER_ORACLE: String =
+  private lazy val CLUSTER_ORACLE: String =
     s"""$CLUSTER_CTES
        |SELECT doc_id, cluster_id FROM clusters""".stripMargin
 
   /** Cleaned-corpus manifest: cluster representatives + unclustered.
     * Corpus single-sourced from [[SqlOps.corpusCte]]. */
-  private val SURVIVORS_ORACLE: String =
+  private lazy val SURVIVORS_ORACLE: String =
     s"""$CLUSTER_CTES,
        |${SqlOps.corpusCte(DuckDialect)}
        |SELECT c.doc_id FROM corpus c LEFT JOIN clusters k ON c.doc_id = k.doc_id
@@ -1572,7 +854,7 @@ object SparkEntry {
     * — ONE oracle string for both q_join_salted and
     * q_join_skew_unsalted: the salt must be result-invisible, so both
     * variants must hash-match this same plain join. */
-  private val EventSkewJoinSql: String =
+  private lazy val EventSkewJoinSql: String =
     """WITH ev AS (
       |  SELECT event_type, CAST(FLOOR(value * 1.0e2 + 5.0e-1) AS BIGINT) AS cents
       |  FROM events
@@ -1587,24 +869,170 @@ object SparkEntry {
       |GROUP BY e.event_type
       |ORDER BY e.event_type""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q_raw_listings" ->
-      s"WITH ${ListingSql.RAW_CTE} SELECT * FROM raw",
-    "q_filter_nullkey" ->
-      s"WITH ${ListingSql.RAW_CTE} SELECT ingest_order, link FROM raw WHERE link IS NOT NULL",
-    "q_dedup_first" ->
-      s"""WITH $T SELECT link, ingest_order FROM transformed""",
-    "q_transform_listings" ->
-      s"WITH $T SELECT * FROM transformed",
-    "q_price_parse" ->
-      s"WITH $T SELECT ingest_order, link, price_rp FROM transformed",
-    "q_badge_tokenize" ->
-      s"WITH $T SELECT ingest_order, additional_features FROM transformed",
-    "q_merge_upsert" ->
+  /** Every registered query, one row per name: the only place a query
+    * name is written (the allowlists above aside). A `Map(...)` literal
+    * keeps the last of two equal keys without error, so a repeated name
+    * fails here instead. */
+  private[graft] lazy val registry: Map[String, Query] = distinctRows(
+    // -- ETL parity --
+    "q_raw_listings" -> Frame((s, d) => Listings.raw(s, d).orderBy("ingest_order"),
+      s"WITH ${ListingSql.RAW_CTE} SELECT * FROM raw"),
+    "q_filter_nullkey" -> Frame(
+      (s, d) =>
+        Transform.dropNullKeys(Listings.raw(s, d))
+          .select(col("ingest_order"), col("link")).orderBy("ingest_order"),
+      s"WITH ${ListingSql.RAW_CTE} SELECT ingest_order, link FROM raw WHERE link IS NOT NULL"),
+    "q_dedup_first" -> Frame(
+      (s, d) =>
+        Transform.dedupKeepFirst(Transform.dropNullKeys(Listings.raw(s, d)))
+          .select(col("link"), col("ingest_order")).orderBy("ingest_order"),
+      s"""WITH $T SELECT link, ingest_order FROM transformed"""),
+    "q_transform_listings" -> Frame((s, d) => transformed(s, d).orderBy("ingest_order"),
+      s"WITH $T SELECT * FROM transformed"),
+    "q_price_parse" -> Frame(
+      (s, d) =>
+        transformed(s, d).select(col("ingest_order"), col("link"), col("price_rp"))
+          .orderBy("ingest_order"),
+      s"WITH $T SELECT ingest_order, link, price_rp FROM transformed"),
+    "q_badge_tokenize" -> Frame(
+      (s, d) =>
+        transformed(s, d).select(col("ingest_order"), col("additional_features"))
+          .orderBy("ingest_order"),
+      s"WITH $T SELECT ingest_order, additional_features FROM transformed"),
+    "q_merge_upsert" -> Frame(
+      (s, d) => {
+        val t = transformedStaged(s, d)
+        Load.merge(mergeMain(t), mergeStaging(t), "link").orderBy("link")
+      },
       s"""$MERGE_CTES
          |SELECT ${mergeCols.map(c => s"CASE WHEN s.link IS NOT NULL THEN s.$c ELSE m.$c END AS $c").mkString(", ")}
-         |FROM main m FULL JOIN staging s ON m.link = s.link""".stripMargin,
-    "q_unpivot" ->
+         |FROM main m FULL JOIN staging s ON m.link = s.link""".stripMargin),
+    "q_merge_inserted_count" -> Frame(
+      (s, d) => {
+        val t = transformedStaged(s, d)
+        Load.insertedCount(mergeMain(t), mergeStaging(t), "link")
+      },
+      s"""$MERGE_CTES
+         |SELECT COUNT(*) AS n_inserted FROM staging s
+         |WHERE NOT EXISTS (SELECT 1 FROM main m WHERE m.link = s.link)""".stripMargin),
+    "q_merge_scd2" -> Frame(
+      (s, d) => scd2History(s, d).orderBy(col("link"), col("valid_from")), SCD2_SQL),
+    // point-in-time reads over the SCD2 result: the pre-batch (ts=50)
+    // and post-batch (ts=100) states from ONE history table
+    "q_scd2_asof" -> Frame(
+      (s, d) => {
+        val scd = scd2History(s, d)
+        Seq(50L, 100L).map { ts =>
+          Load.scd2AsOf(scd, ts)
+            .select(lit(ts).as("asof_ts"), col("link"), col("name"), col("price_rp"))
+        }.reduce(_.unionByName(_))
+      },
+      s"""WITH scd AS (SELECT * FROM (
+         |$SCD2_SQL
+         |))
+         |SELECT CAST(50 AS BIGINT) AS asof_ts, link, name, price_rp FROM scd
+         |WHERE valid_from <= 50 AND (valid_to IS NULL OR valid_to > 50)
+         |UNION ALL
+         |SELECT CAST(100 AS BIGINT), link, name, price_rp FROM scd
+         |WHERE valid_from <= 100 AND (valid_to IS NULL OR valid_to > 100)""".stripMargin),
+
+    // -- relational / analytic extensions (SURVEY.md §2.6-2.7) --
+    "q_pricing_summary" -> Frame(Relational.pricingSummary,
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
+        |  COUNT(*) AS count_order
+        |FROM lineitem
+        |WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    "q_revenue_by_brand" -> Frame(Relational.revenueByBrand,
+      """SELECT p_brand,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
+        |  COUNT(*) AS n_items
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |GROUP BY p_brand""".stripMargin),
+    "q_revenue_by_nation" -> Frame(Relational.revenueByNation,
+      """SELECT r_name, n_name,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name""".stripMargin),
+    "q_semi_join" -> Frame(Relational.customersWithOrders,
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin),
+    "q_anti_join" -> Frame(Relational.customersWithoutOrders,
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE NOT EXISTS (SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 450000.0)""".stripMargin),
+    "q_window_rank" -> Frame(Relational.orderRankPerCustomer,
+      """SELECT o_custkey, o_orderkey,
+        |  ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS order_seq
+        |FROM orders""".stripMargin),
+    "q_window_running" -> Frame(Relational.runningCustomerSpend,
+      """SELECT o_custkey, o_orderkey,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_spend
+        |FROM orders""".stripMargin),
+    "q_topk_per_group" -> Frame(Relational.top3OrdersPerCustomer,
+      """SELECT o_custkey, o_orderkey, rk FROM (
+        |  SELECT o_custkey, o_orderkey,
+        |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rk
+        |  FROM orders) WHERE rk <= 3""".stripMargin),
+    "q_topk_aggregator" -> Frame(Relational.top3ViaAggregator,
+      """SELECT o_custkey, o_orderkey, rk FROM (
+        |  SELECT o_custkey, o_orderkey,
+        |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rk
+        |  FROM orders) WHERE rk <= 3""".stripMargin),
+    "q_topk_global" -> Frame(Relational.top10Orders,
+      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"),
+    "q_distinct_agg" -> Frame(Relational.distinctCustomersByStatus,
+      """SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_customers, COUNT(*) AS n_orders
+        |FROM orders GROUP BY o_orderstatus""".stripMargin),
+    "q_approx_distinct" -> Frame(Relational.approxDistinctParts,
+      // exact counts, plus the sketch-accuracy contract asserted in-query
+      """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
+        |  TRUE AS approx_within_5pct
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    "q_hll_merge" -> Frame(Relational.hllMergeUsers,
+      // exact weekly distincts; the sketch contracts are asserted
+      // in-query (engine-specific estimates never cross the comparator)
+      """SELECT CAST(FLOOR(epoch(ts) / 604800.0) AS BIGINT) AS week,
+        |  COUNT(DISTINCT user_id) AS exact_users,
+        |  TRUE AS merge_equals_direct, TRUE AS est_within_5pct
+        |FROM events GROUP BY CAST(FLOOR(epoch(ts) / 604800.0) AS BIGINT)""".stripMargin),
+    "q_approx_quantiles" -> Frame(Relational.approxQuantilesOrders,
+      // exact integer-cent percentiles, plus the sketch contract flag
+      """SELECT o_orderstatus,
+        |  quantile_cont(CAST(FLOOR(o_totalprice * 100 + 5.0e-1) AS BIGINT), 0.5) / 1.0e2 AS p50,
+        |  quantile_cont(CAST(FLOOR(o_totalprice * 100 + 5.0e-1) AS BIGINT), 0.99) / 1.0e2 AS p99,
+        |  TRUE AS sketch_within_1pct
+        |FROM orders GROUP BY o_orderstatus""".stripMargin),
+    "q_rollup" -> Frame(Relational.rollupRevenue,
+      """SELECT o_orderstatus, o_orderpriority,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total, COUNT(*) AS n
+        |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""".stripMargin),
+    "q_cube" -> Frame(Relational.cubeRevenue,
+      """SELECT o_orderstatus, o_orderpriority,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total, COUNT(*) AS n
+        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin),
+    "q_window_lag" -> Frame(Relational.orderGapDays,
+      """SELECT o_custkey, o_orderkey,
+        |  CAST(date_diff('day',
+        |    LAG(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
+        |    o_orderdate) AS INT) AS gap_days
+        |FROM orders""".stripMargin),
+    "q_pivot" -> Frame(Relational.pivotStatusByPriority,
+      """SELECT o_orderpriority,
+        |  COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
+        |  COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o,
+        |  COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_p
+        |FROM orders GROUP BY o_orderpriority""".stripMargin),
+    "q_unpivot" -> Frame(Relational.unpivotStatusMetrics,
       """WITH wide AS (
         |  SELECT o_orderstatus,
         |    CAST(COUNT(*) AS DOUBLE) AS n_orders,
@@ -1616,157 +1044,64 @@ object SparkEntry {
         |UNION ALL
         |SELECT o_orderstatus, 'revenue' AS metric, revenue AS value FROM wide
         |UNION ALL
-        |SELECT o_orderstatus, 'max_price' AS metric, max_price AS value FROM wide""".stripMargin,
-    "q_merge_inserted_count" ->
-      s"""$MERGE_CTES
-         |SELECT COUNT(*) AS n_inserted FROM staging s
-         |WHERE NOT EXISTS (SELECT 1 FROM main m WHERE m.link = s.link)""".stripMargin,
-    "q_merge_scd2" -> SCD2_SQL,
-    "q_scd2_asof" ->
-      s"""WITH scd AS (SELECT * FROM (
-         |$SCD2_SQL
-         |))
-         |SELECT CAST(50 AS BIGINT) AS asof_ts, link, name, price_rp FROM scd
-         |WHERE valid_from <= 50 AND (valid_to IS NULL OR valid_to > 50)
-         |UNION ALL
-         |SELECT CAST(100 AS BIGINT), link, name, price_rp FROM scd
-         |WHERE valid_from <= 100 AND (valid_to IS NULL OR valid_to > 100)""".stripMargin,
-
-    "q_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q_revenue_by_brand" ->
-      """SELECT p_brand,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_items
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand""".stripMargin,
-    "q_revenue_by_nation" ->
-      """SELECT r_name, n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-    "q_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin,
-    "q_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 450000.0)""".stripMargin,
-    "q_window_rank" ->
-      """SELECT o_custkey, o_orderkey,
-        |  ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS order_seq
-        |FROM orders""".stripMargin,
-    "q_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_spend
-        |FROM orders""".stripMargin,
-    "q_topk_per_group" ->
-      """SELECT o_custkey, o_orderkey, rk FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        |  FROM orders) WHERE rk <= 3""".stripMargin,
-    "q_topk_aggregator" ->
-      """SELECT o_custkey, o_orderkey, rk FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        |  FROM orders) WHERE rk <= 3""".stripMargin,
-    "q_topk_global" ->
-      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10",
-    "q_distinct_agg" ->
-      """SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_customers, COUNT(*) AS n_orders
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-    "q_rollup" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total, COUNT(*) AS n
-        |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q_cube" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total, COUNT(*) AS n
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q_window_lag" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(date_diff('day',
-        |    LAG(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-        |    o_orderdate) AS INT) AS gap_days
-        |FROM orders""".stripMargin,
-    "q_pivot" ->
-      """SELECT o_orderpriority,
-        |  COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
-        |  COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o,
-        |  COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_p
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    "q_set_ops" ->
+        |SELECT o_orderstatus, 'max_price' AS metric, max_price AS value FROM wide""".stripMargin),
+    "q_set_ops" -> Frame(Relational.nationSetOps,
       """SELECT nationkey, 'both' AS tag FROM
         |  (SELECT s_nationkey AS nationkey FROM supplier INTERSECT SELECT c_nationkey FROM customer)
         |UNION ALL
         |SELECT nationkey, 'customer_only' AS tag FROM
-        |  (SELECT c_nationkey AS nationkey FROM customer EXCEPT SELECT s_nationkey FROM supplier)""".stripMargin,
-    "q_union_slices" ->
+        |  (SELECT c_nationkey AS nationkey FROM customer EXCEPT SELECT s_nationkey FROM supplier)""".stripMargin),
+    "q_union_slices" -> Frame(Relational.unionSlices,
       """SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice > 300000.0
         |UNION ALL
         |SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_totalprice <= 300000.0 AND o_orderstatus = 'F'""".stripMargin,
-    "q_above_avg" ->
+        |WHERE o_totalprice <= 300000.0 AND o_orderstatus = 'F'""".stripMargin),
+    "q_above_avg" -> Frame(Relational.aboveAvgOrders,
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM orders o JOIN (
         |  SELECT o_custkey AS k,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_price
         |  FROM orders GROUP BY o_custkey) a ON o.o_custkey = a.k
-        |WHERE o.o_totalprice > a.avg_price""".stripMargin,
-
-    "q_agg_salted" ->
+        |WHERE o.o_totalprice > a.avg_price""".stripMargin),
+    "q_agg_salted" -> Frame((s, d) => Relational.saltedRevenueByFlag(s, d),
       """SELECT l_returnflag,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_items
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    // exact counts, plus the sketch-accuracy contract asserted in-query
-    "q_approx_distinct" ->
-      """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
-        |  TRUE AS approx_within_5pct
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    // exact integer-cent percentiles, plus the sketch contract flag
-    "q_approx_quantiles" ->
-      """SELECT o_orderstatus,
-        |  quantile_cont(CAST(FLOOR(o_totalprice * 100 + 5.0e-1) AS BIGINT), 0.5) / 1.0e2 AS p50,
-        |  quantile_cont(CAST(FLOOR(o_totalprice * 100 + 5.0e-1) AS BIGINT), 0.99) / 1.0e2 AS p99,
-        |  TRUE AS sketch_within_1pct
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-    // the oracle is the PLAIN join: salting must be result-invisible
-    // (same SQL for the salted form and the unsalted baseline)
-    "q_join_salted" -> EventSkewJoinSql,
-    "q_join_skew_unsalted" -> EventSkewJoinSql,
-    "q_join_salt_audit" -> SqlOps.joinSaltAudit(DuckDialect),
-
-    "q_events_json" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    // the salted/unsalted pair on the key the audit proves skewed
+    // (event_type, 5 values): same plain-join oracle for both —
+    // salting must be result-invisible, and the pair is the local
+    // measurement of what the salt buys
+    "q_join_salted" -> Frame((s, d) => Relational.eventTypeSkewJoin(s, d, salted = true),
+      // the oracle is the PLAIN join: salting must be result-invisible
+      // (same SQL for the salted form and the unsalted baseline)
+      EventSkewJoinSql),
+    "q_join_skew_unsalted" -> Frame((s, d) => Relational.eventTypeSkewJoin(s, d, salted = false),
+      EventSkewJoinSql),
+    // does the salt pay on THIS data? hottest-partition share, ppm,
+    // unsalted vs salted, on the uniform join key AND the
+    // low-cardinality one
+    "q_join_salt_audit" -> Sql(Seq("lineitem", "events"), SqlOps.joinSaltAudit),
+    "q_events_json" -> Frame(Relational.eventsJsonAgg,
       """SELECT event_type,
         |  CAST(SUM(TRY_CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
         |  COUNT(TRY_CAST(json_extract_string(props, '$.k') AS INT)) AS n_k
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_orders_by_month" ->
+        |FROM events GROUP BY event_type""".stripMargin),
+    "q_orders_by_month" -> Frame(Relational.ordersByMonth,
       """SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS y,
         |  CAST(EXTRACT(MONTH FROM o_orderdate) AS INT) AS m,
         |  COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders GROUP BY 1, 2""".stripMargin,
-    "q_asof_join" ->
+        |FROM orders GROUP BY 1, 2""".stripMargin),
+    "q_asof_join" -> Frame(Relational.asofLastPurchase,
       """WITH p AS (SELECT user_id, epoch_us(ts) AS pus FROM events WHERE event_type = 'purchase'),
         |c AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events WHERE event_type = 'click')
         |SELECT c.event_id, c.user_id, c.us, p.pus AS last_purchase_us
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.us >= p.pus""".stripMargin,
-    "q_shipping_priority" ->
+        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.us >= p.pus""".stripMargin),
+    // TPC-H classic shapes (Q3/Q10/Q14/Q15): segment-gated top-k
+    // revenue, returned-items ranking, promo share, max-revenue
+    // supplier — the deep multi-join + top-k analytic surface
+    "q_shipping_priority" -> Frame(Relational.shippingPriority,
       """WITH r AS (
         |  SELECT o_orderkey, o_orderdate,
         |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
@@ -1778,8 +1113,8 @@ object SparkEntry {
         |  GROUP BY o_orderkey, o_orderdate
         |)
         |SELECT o_orderkey, CAST(FLOOR(epoch(o_orderdate)) AS BIGINT) AS order_epoch, revenue
-        |FROM r ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q_returned_items" ->
+        |FROM r ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin),
+    "q_returned_items" -> Frame(Relational.returnedItems,
       """SELECT c_custkey, c_name, n_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS lost_revenue,
         |  COUNT(*) AS n_items
@@ -1789,8 +1124,8 @@ object SparkEntry {
         |JOIN nation ON c_nationkey = n_nationkey
         |WHERE l_returnflag = 'R'
         |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY lost_revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q_promo_revenue" ->
+        |ORDER BY lost_revenue DESC, c_custkey LIMIT 20""".stripMargin),
+    "q_promo_revenue" -> Frame(Relational.promoRevenue,
       """WITH m AS (
         |  SELECT
         |    CAST(SUM(CASE WHEN p_type = 'PROMO' THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) END) AS DOUBLE) AS promo_revenue,
@@ -1801,8 +1136,8 @@ object SparkEntry {
         |)
         |SELECT promo_revenue, total_revenue,
         |  100.0 * promo_revenue / total_revenue AS promo_pct
-        |FROM m""".stripMargin,
-    "q_top_supplier" ->
+        |FROM m""".stripMargin),
+    "q_top_supplier" -> Frame(Relational.topSupplier,
       """WITH rev AS (
         |  SELECT l_suppkey,
         |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS total_revenue
@@ -1813,8 +1148,31 @@ object SparkEntry {
         |)
         |SELECT s_suppkey, s_name, total_revenue
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)""".stripMargin,
-    "q_local_supplier_volume" ->
+        |WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)""".stripMargin),
+    "q_order_priority_late" -> Frame(Relational.orderPriorityLateShip,
+      """SELECT o_orderpriority, COUNT(*) AS n_late_orders
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1998-01-01'
+        |  AND o_orderdate <  TIMESTAMP '1998-04-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey
+        |                AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
+        |GROUP BY o_orderpriority""".stripMargin),
+    "q_large_volume_customer" -> Frame(Relational.largeVolumeCustomers,
+      """WITH big AS (
+        |  SELECT l_orderkey,
+        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
+        |  FROM lineitem GROUP BY l_orderkey
+        |  HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 250.0
+        |)
+        |SELECT c_custkey, c_name, o_orderkey, total_qty
+        |FROM big
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey""".stripMargin),
+    // TPC-H classic shapes (Q5/Q6/Q7/Q8): region-local supplier
+    // volume, scan-pruning filter-sum, bilateral trade by year,
+    // national market share
+    "q_local_supplier_volume" -> Frame(Relational.localSupplierVolume,
       """SELECT n_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM customer
@@ -1826,15 +1184,15 @@ object SparkEntry {
         |WHERE r_name = 'ASIA'
         |  AND o_orderdate >= TIMESTAMP '1997-01-01'
         |  AND o_orderdate <  TIMESTAMP '1998-01-01'
-        |GROUP BY n_name""".stripMargin,
-    "q_forecast_revenue" ->
+        |GROUP BY n_name""".stripMargin),
+    "q_forecast_revenue" -> Frame(Relational.forecastRevenue,
       """SELECT
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue_delta,
         |  COUNT(*) AS n_items
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q_volume_shipping" ->
+        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin),
+    "q_volume_shipping" -> Frame(Relational.volumeShipping,
       """SELECT supp_nation, cust_nation, l_year, CAST(SUM(vol) AS DOUBLE) AS revenue
         |FROM (
         |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -1848,8 +1206,8 @@ object SparkEntry {
         |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
         |  WHERE ((n1.n_name = 'NATION_18' AND n2.n_name = 'NATION_19')
         |      OR (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_18'))
-        |) GROUP BY 1, 2, 3""".stripMargin,
-    "q_market_share" ->
+        |) GROUP BY 1, 2, 3""".stripMargin),
+    "q_market_share" -> Frame(Relational.marketShare,
       """WITH all_orders AS (
         |  SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS o_year,
         |    CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS vol,
@@ -1868,8 +1226,17 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN vol END) AS DOUBLE) /
         |    CAST(SUM(vol) AS DOUBLE) AS mkt_share,
         |  COUNT(*) AS n_items
-        |FROM all_orders GROUP BY o_year""".stripMargin,
-    "q_product_profit" ->
+        |FROM all_orders GROUP BY o_year""".stripMargin),
+    // market-basket association rules (apriori-gated brand
+    // co-occurrence within orders, support/confidence/lift)
+    "q_assoc_rules" -> Staged(Seq("lineitem", "part"), SqlOps.assocRules),
+    // item-item collaborative-filtering neighborhoods (top-5 cosine
+    // neighbors per brand off the shared basket/pair stages)
+    "q_item_similarity" -> Staged(Seq("lineitem", "part"), SqlOps.itemSimilarity),
+    // TPC-H classic shapes (Q9/Q13/Q17/Q19): product profit,
+    // customer order-count distribution, small-quantity revenue,
+    // disjunctive-predicate revenue
+    "q_product_profit" -> Frame(Relational.productProfit,
       """SELECT n_name AS nation, CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS o_year,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
         |     - CAST(p_retailprice AS DECIMAL(18,2)) * CAST(0.5 AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS profit
@@ -1879,16 +1246,16 @@ object SparkEntry {
         |JOIN orders ON o_orderkey = l_orderkey
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE p_name LIKE '%gear%'
-        |GROUP BY 1, 2""".stripMargin,
-    "q_customer_distribution" ->
+        |GROUP BY 1, 2""".stripMargin),
+    "q_customer_distribution" -> Frame(Relational.customerDistribution,
       """WITH co AS (
         |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
         |  FROM customer LEFT JOIN orders
         |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
         |  GROUP BY c_custkey
         |)
-        |SELECT c_count, COUNT(*) AS custdist FROM co GROUP BY c_count""".stripMargin,
-    "q_small_qty_revenue" ->
+        |SELECT c_count, COUNT(*) AS custdist FROM co GROUP BY c_count""".stripMargin),
+    "q_small_qty_revenue" -> Frame(Relational.smallQtyRevenue,
       """WITH pa AS (
         |  SELECT l_partkey AS pk,
         |    0.2 * (CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)) AS qty_cut
@@ -1897,16 +1264,19 @@ object SparkEntry {
         |SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly,
         |  COUNT(*) AS n_items
         |FROM lineitem JOIN part ON p_partkey = l_partkey JOIN pa ON pk = l_partkey
-        |WHERE p_brand = 'Brand#3' AND l_quantity < qty_cut""".stripMargin,
-    "q_disjunctive_revenue" ->
+        |WHERE p_brand = 'Brand#3' AND l_quantity < qty_cut""".stripMargin),
+    "q_disjunctive_revenue" -> Frame(Relational.disjunctiveRevenue,
       """SELECT
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_items
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 11)
         |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 11 AND 25 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 26 AND 50 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "q_waiting_orders" ->
+        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 26 AND 50 AND l_quantity BETWEEN 20 AND 30)""".stripMargin),
+    // TPC-H classic shapes (Q21/Q22/Q2/Q11/Q16): correlated-exists
+    // lateness, anti-join dormancy, groupwise-min offers, fraction-of-
+    // total importance, distinct-count relationship matrix
+    "q_waiting_orders" -> Frame(Relational.waitingOrders,
       """SELECT s_name, COUNT(*) AS numwait
         |FROM supplier, lineitem l1, orders
         |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
@@ -1917,8 +1287,8 @@ object SparkEntry {
         |  AND NOT EXISTS (SELECT 1 FROM lineitem l3 JOIN orders o2 ON o2.o_orderkey = l3.l_orderkey
         |              WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
         |                AND l3.l_shipdate > o2.o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-    "q_dormant_customers" ->
+        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin),
+    "q_dormant_customers" -> Frame(Relational.dormantCustomers,
       """WITH avgbal AS (
         |  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS a
         |  FROM customer WHERE c_acctbal > 0.0 AND c_nationkey IN (1,2,3,4,5,6,7)
@@ -1929,8 +1299,8 @@ object SparkEntry {
         |WHERE c_nationkey IN (1,2,3,4,5,6,7) AND c_acctbal > a
         |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |                  AND o_orderdate >= TIMESTAMP '2000-02-01')
-        |GROUP BY c_nationkey""".stripMargin,
-    "q_min_cost_supplier" ->
+        |GROUP BY c_nationkey""".stripMargin),
+    "q_min_cost_supplier" -> Frame(Relational.minCostSupplier,
       """WITH offers AS (
         |  SELECT l_partkey AS pk, l_suppkey AS sk,
         |    MIN(CAST(FLOOR(l_extendedprice * 1.0e2 + 5.0e-1) AS BIGINT) / CAST(l_quantity AS BIGINT)) AS unit_cents
@@ -1947,8 +1317,8 @@ object SparkEntry {
         |                    JOIN supplier s2 ON s2.s_suppkey = o2.sk
         |                    JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
         |                    JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
-        |                    WHERE o2.pk = p_partkey AND r2.r_name = 'EUROPE')""".stripMargin,
-    "q_important_parts" ->
+        |                    WHERE o2.pk = p_partkey AND r2.r_name = 'EUROPE')""".stripMargin),
+    "q_important_parts" -> Frame(Relational.importantParts,
       """WITH vals AS (
         |  SELECT l_partkey AS pk,
         |    SUM(CAST(FLOOR(l_extendedprice * 1.0e2 + 5.0e-1) AS BIGINT) * CAST(l_quantity AS BIGINT)) AS val
@@ -1957,102 +1327,186 @@ object SparkEntry {
         |  GROUP BY 1
         |)
         |SELECT pk AS p_partkey, CAST(val AS BIGINT) AS part_value
-        |FROM vals WHERE val > (SELECT SUM(val) * 0.002 FROM vals)""".stripMargin,
-    "q_parts_supplier_count" ->
+        |FROM vals WHERE val > (SELECT SUM(val) * 0.002 FROM vals)""".stripMargin),
+    "q_parts_supplier_count" -> Frame(Relational.partsSupplierCount,
       """SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
         |FROM lineitem
         |JOIN part ON p_partkey = l_partkey
         |WHERE p_brand <> 'Brand#1' AND p_size IN (1, 5, 9, 13, 17, 21, 25)
         |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0.0)
-        |GROUP BY 1, 2, 3""".stripMargin,
-    "q_grouping_sets" -> SqlOps.groupingSets(DuckDialect),
-    "q_percentiles" -> SqlOps.eventPercentiles(DuckDialect),
-    "q_weighted_median" -> SqlOps.weightedMedian(DuckDialect),
-    "q_benford" -> SqlOps.benfordProfile(DuckDialect),
-    "q_cms_topusers" -> SqlOps.cmsTopUsers(DuckDialect),
-    "q_event_paths" -> SqlOps.eventPaths(DuckDialect),
-    "q_gap_fill" -> SqlOps.gapFill(DuckDialect),
-    "q_negative_pairs" -> SqlOps.negativePairs(DuckDialect),
-    "q_disorder_profile" -> SqlOps.disorderProfile(DuckDialect),
-    "q_ab_test" -> SqlOps.abTest(DuckDialect),
-    "q_did_estimator" -> SqlOps.didEstimator(DuckDialect),
-    "q_aa_calibration" -> SqlOps.aaCalibration(DuckDialect),
-    "q_ab_sprt" -> SqlOps.abSprt(DuckDialect),
-    "q_js_shrinkage" -> SqlOps.jsShrinkage(DuckDialect),
-    "q_capture_recapture" -> SqlOps.captureRecapture(DuckDialect),
-    "q_quality_wilson" -> SqlOps.qualityWilson(DuckDialect),
-    "q_quality_partial_corr" -> SqlOps.qualityPartialCorr.single(DuckDialect),
-    "q_ngram_kneser_ney" -> SqlOps.ngramKneserNey.single(DuckDialect),
-    "q_dedup_lsh_skew" -> SqlOps.dedupLshBucketSkew.single(DuckDialect),
-    "q_dedup_minhash_calib" -> SqlOps.dedupMinhashCalibration.single(DuckDialect),
-    "q_langid_f1" -> SqlOps.langidF1(DuckDialect),
-    "q_token_burstiness" -> SqlOps.tokenBurstiness.single(DuckDialect),
-    "q_dedup_cascade_cost" -> SqlOps.dedupCascadeCost.single(DuckDialect),
-    "q_runs_test" -> SqlOps.runsTest(DuckDialect),
-    "q_lateral_latest" -> SqlOps.lateralLatest(DuckDialect),
-    "q_k_anonymity" -> SqlOps.kAnonymity(DuckDialect),
-    "q_l_diversity" -> SqlOps.lDiversity(DuckDialect),
-    "q_t_closeness" -> SqlOps.tCloseness(DuckDialect),
-    "q_order_cycle_time" -> SqlOps.orderCycleTime(DuckDialect),
-    "q_excess_suppliers" -> SqlOps.excessSuppliers(DuckDialect),
-    "q_winsorize" -> SqlOps.winsorize(DuckDialect),
-    "q_session_conversion" -> SqlOps.sessionConversion(DuckDialect),
-    "q_concurrency_peak" -> SqlOps.concurrencyPeak.single(DuckDialect),
-    "q_ewma_revenue" -> SqlOps.ewmaRevenue(DuckDialect),
-    "q_bfs_levels" -> SqlOps.bfsLevels.single(DuckDialect),
-    "q_shuffle_shards" -> SqlOps.shuffleShards(DuckDialect),
-    "q_curriculum_order" -> SqlOps.curriculumOrder.single(DuckDialect),
-    "q_mink_prob" -> SqlOps.minkProb.single(DuckDialect),
-    "q_time_to_convert" -> SqlOps.timeToConvert(DuckDialect),
-    "q_dq_audit" -> SqlOps.dqAudit.single(DuckDialect),
-    "q_window_range" -> SqlOps.windowRangeSpend(DuckDialect),
-    "q_window_moving_avg" -> SqlOps.windowMovingAvg(DuckDialect),
-    "q_percent_rank" -> SqlOps.percentRankOrders(DuckDialect),
-    "q_window_first_last" -> SqlOps.windowFirstLast(DuckDialect),
-    "q_bucketize" -> SqlOps.bucketizeValues(DuckDialect),
-    "q_mode_priority" -> SqlOps.modePriority(DuckDialect),
-    "q_agg_collect" -> SqlOps.collectOrders(DuckDialect),
-    "q_corr_exact" -> SqlOps.corrQtyPrice(DuckDialect),
-    "q_corr_matrix" -> SqlOps.corrMatrix(DuckDialect),
-    "q_dedup_verified" -> SqlOps.dedupVerified.single(DuckDialect),
-    "q_dedup_lsh_eval" -> SqlOps.dedupLshEval.single(DuckDialect),
-    "q_dedup_threshold_sweep" -> SqlOps.dedupThresholdSweep.single(DuckDialect),
-    "q_lsh_scurve" -> SqlOps.lshScurve.single(DuckDialect),
-    "q_lsh_param_opt" -> SqlOps.lshParamOpt.single(DuckDialect),
-    "q_graph_assortativity" -> SqlOps.graphAssortativity.single(DuckDialect),
+        |GROUP BY 1, 2, 3""".stripMargin),
+    "q_grouping_sets" -> Sql(Seq("orders"), SqlOps.groupingSets),
+    "q_percentiles" -> Sql(Seq("events"), SqlOps.eventPercentiles),
+    // integer-exact quantity-weighted median price per return flag
+    // (compressed-histogram window, no raw-row sort)
+    "q_weighted_median" -> Sql(Seq("lineitem"), SqlOps.weightedMedian),
+    // Benford leading-digit audit of order totals (per-digit observed
+    // vs expected + chi-square contribution)
+    "q_benford" -> Sql(Seq("orders"), SqlOps.benfordProfile),
+    // count-min-gated top talkers (≥2% of events per user; exact
+    // verify over the gated slice, oracle runs ungated)
+    "q_cms_topusers" -> Sql(Seq("events"), SqlOps.cmsTopUsers),
+    // global top-20 3-step event paths ((ts, event_id)-ordered
+    // per-user sequences — the sequential-pattern profile)
+    "q_event_paths" -> Sql(Seq("events"), SqlOps.eventPaths),
+    // calendar-spine gap fill of the daily order series with
+    // zero-fill + forward-carried last active day (freshness monitor)
+    "q_gap_fill" -> Sql(Seq("orders"), SqlOps.gapFill),
+    // RNG-free contrastive negatives by hash-ring rotation (2 per doc,
+    // broadcast representative table, self-pairing impossible)
+    "q_negative_pairs" -> Sql(Seq("documents"), SqlOps.negativePairs),
+    // first-signup → first-purchase latency for the clean-converter
+    // cohort (single conditional aggregate, integer seconds)
+    "q_time_to_convert" -> Sql(Seq("events"), SqlOps.timeToConvert),
+    // declarative data-quality expectations (range/null/referential)
+    // as a (rule, violations, checked) contract report
+    "q_dq_audit" -> Staged(Seq("lineitem", "orders", "customer"), SqlOps.dqAudit),
+    // empirical out-of-orderness per event type (running-MAX lag in
+    // arrival order, per-user shards) — the watermark-sizing metric
+    "q_disorder_profile" -> Sql(Seq("events"), SqlOps.disorderProfile),
+    // two-proportion z-test between id-parity arms (conversion = a
+    // large purchase, value > 150) — the experimentation readout
+    "q_ab_test" -> Sql(Seq("events"), SqlOps.abTest),
+    // difference-in-differences across the arm split and a fixed pivot date
+    "q_did_estimator" -> Sql(Seq("events"), SqlOps.didEstimator),
+    // A/A null-split calibration of the same two-proportion protocol
+    // (md5-bucket arms): z-squared must sit under the chi2_1 5% bar
+    "q_aa_calibration" -> Sql(Seq("events"), SqlOps.aaCalibration),
+    "q_ab_sprt" -> Sql(Seq("events"), SqlOps.abSprt),
+    "q_js_shrinkage" -> Sql(Seq("documents"), SqlOps.jsShrinkage),
+    "q_capture_recapture" -> Sql(Seq("documents"), SqlOps.captureRecapture),
+    "q_quality_wilson" -> Sql(Seq("documents"), SqlOps.qualityWilson),
+    "q_quality_partial_corr" -> Staged(Seq("documents"), SqlOps.qualityPartialCorr),
+    "q_ngram_kneser_ney" -> Staged(Seq("documents"), SqlOps.ngramKneserNey),
+    "q_dedup_lsh_skew" -> Staged(Seq("documents"), SqlOps.dedupLshBucketSkew),
+    "q_dedup_minhash_calib" -> Staged(Seq("documents"), SqlOps.dedupMinhashCalibration),
+    "q_langid_f1" -> Sql(Seq("documents"), SqlOps.langidF1),
+    "q_token_burstiness" -> Staged(Seq("documents"), SqlOps.tokenBurstiness),
+    "q_dedup_cascade_cost" -> Staged(Seq("documents"), SqlOps.dedupCascadeCost),
+    // Wald-Wolfowitz runs test of label arrangement along doc_id —
+    // the storage-order shuffle-quality audit
+    "q_runs_test" -> Sql(Seq("documents"), SqlOps.runsTest),
+    // correlated LATERAL top-1 (decorrelated by Catalyst into a
+    // ranked join — the per-row subquery form of top-k per group)
+    "q_lateral_latest" -> Sql(Seq("customer", "orders"), SqlOps.lateralLatest),
+    // k-anonymity privacy audit over the (nation, segment)
+    // quasi-identifier (k=5; flagged groups are the worklist)
+    "q_k_anonymity" -> Sql(Seq("customer"), SqlOps.kAnonymity),
+    "q_l_diversity" -> Sql(Seq("customer"), SqlOps.lDiversity),
+    "q_t_closeness" -> Sql(Seq("customer"), SqlOps.tCloseness),
+    // first→last shipment span per order, rolled up by priority
+    "q_order_cycle_time" -> Sql(Seq("lineitem", "orders"), SqlOps.orderCycleTime),
+    // TPC-H Q20 shape: suppliers shipping >1.5× a part family's
+    // per-supplier average (integer-exact window threshold + dim joins)
+    "q_excess_suppliers" -> Sql(Seq("lineitem", "part", "supplier", "nation"),
+      SqlOps.excessSuppliers),
+    // exact p05/p95 winsorized mean via a cents-histogram cumulative
+    // window (domain-ordered — no raw-row sort, boundaries broadcast)
+    "q_winsorize" -> Sql(Seq("orders"), SqlOps.winsorize),
+    // purchase conversion by ⌊log2⌋ session-size bucket off the shared
+    // gap-sessionize spans
+    "q_session_conversion" -> Sql(Seq("events"), SqlOps.sessionConversion),
+    // per-day peak concurrent sessions: midnight carry-in count + a
+    // day-sharded ±1 sweep (no global ordered timeline)
+    "q_concurrency_peak" -> Staged(Seq("events"), SqlOps.concurrencyPeak),
+    // integer-exact 8-day half-life EWMA of daily revenue over the
+    // zero-filled day spine (powers-of-two weights, one int64 per day)
+    "q_ewma_revenue" -> Sql(Seq("orders"), SqlOps.ewmaRevenue),
+    // multi-source BFS landmark distances on the candidate graph
+    // (4 staged frontier rounds; Pregel-as-joins shape)
+    "q_bfs_levels" -> Staged(Seq("documents"), SqlOps.bfsLevels),
+    // deterministic md5-ring training shuffle: 32 shards, in-shard
+    // positions, order-sensitive modular checksum per shard
+    "q_shuffle_shards" -> Sql(Seq("documents"), SqlOps.shuffleShards),
+    // curriculum manifest: difficulty quartile phases, md5 shards
+    "q_curriculum_order" -> Staged(Seq("documents"), SqlOps.curriculumOrder),
+    // min-k% prob memorization signal off the same tf index
+    "q_mink_prob" -> Staged(Seq("documents"), SqlOps.minkProb),
+    "q_window_range" -> Sql(Seq("orders"), SqlOps.windowRangeSpend),
+    "q_window_moving_avg" -> Sql(Seq("orders"), SqlOps.windowMovingAvg),
+    "q_percent_rank" -> Sql(Seq("orders"), SqlOps.percentRankOrders),
+    "q_window_first_last" -> Sql(Seq("orders"), SqlOps.windowFirstLast),
+    "q_window_dense_cume" -> Sql(Seq("orders"), SqlOps.windowDenseCume),
+    "q_bucketize" -> Sql(Seq("events"), SqlOps.bucketizeValues),
+    "q_mode_priority" -> Sql(Seq("orders"), SqlOps.modePriority),
+    "q_agg_collect" -> Sql(Seq("orders"), SqlOps.collectOrders),
+    "q_corr_exact" -> Sql(Seq("lineitem"), SqlOps.corrQtyPrice),
+    "q_corr_matrix" -> Sql(Seq("lineitem"), SqlOps.corrMatrix),
 
-    "q_dedup_exact" -> SqlOps.dedupExact(DuckDialect),
-    "q_dedup_minhash" -> SqlOps.dedupMinhash.single(DuckDialect),
-    "q_dedup_minhash_est" -> SqlOps.dedupMinhashEst.single(DuckDialect),
-    "q_dedup_ngram_jaccard" -> SqlOps.dedupNgramJaccard.single(DuckDialect),
-    "q_dedup_simhash" -> SqlOps.dedupSimhash(DuckDialect),
-    "q_dedup_simhash_pairs" -> SqlOps.dedupSimhashPairs.single(DuckDialect),
-    "q_dedup_sorted_neighborhood" -> SqlOps.dedupSortedNeighborhood.single(DuckDialect),
-    "q_dedup_fingerprint" -> SqlOps.dedupFingerprint(DuckDialect),
-    "q_dedup_levenshtein" -> SqlOps.dedupLevenshtein(DuckDialect),
-    "q_ntile" -> SqlOps.orderDeciles(DuckDialect),
-    "q_dedup_embedding_cosine" -> SqlOps.dedupEmbeddingCosine.single(DuckDialect),
-    "q_dedup_semantic" -> SqlOps.dedupSemantic.single(DuckDialect),
-    "q_ann_margin" -> SqlOps.annMargin.single(DuckDialect),
-    "q_dedup_canonical" -> SqlOps.dedupCanonical(DuckDialect),
-    // transitive closure of the same candidate pairs as a recursive CTE;
-    // MIN over all reachable labels = the component minimum (shared by
-    // both CC implementations)
-    "q_dedup_cluster" -> CLUSTER_ORACLE,
-    "q_dedup_cluster_star" -> CLUSTER_ORACLE,
-    // the incremental update must land on the SAME map as a full
-    // rebuild over base ∪ delta — which is the whole pair set
-    "q_dedup_cluster_delta" -> CLUSTER_ORACLE,
-    "q_dedup_survivors" -> SURVIVORS_ORACLE,
-    "q_dedup_survivors_delta" -> SURVIVORS_ORACLE,
-    "q_sample_hash" -> SqlOps.sampleHash(DuckDialect),
-    "q_sample_stratified" -> SqlOps.sampleStratified(DuckDialect),
-    "q_sample_neyman" -> SqlOps.sampleNeyman(DuckDialect),
-    "q_cap_per_source" -> SqlOps.capPerSource(DuckDialect),
-    // deliberately NOT the two-phase rendering: the single global
-    // window is the independent ground truth the shard/offset
-    // decomposition must reproduce id-for-id
-    "q_global_rownum" ->
+    // -- dedup family (documents) --
+    "q_dedup_exact" -> Sql(Seq("documents"), SqlOps.dedupExact),
+    "q_dedup_minhash" -> Staged(Seq("documents"), SqlOps.dedupMinhash),
+    // sketch-read similarity scoring off the same staged signatures
+    "q_dedup_minhash_est" -> Staged(Seq("documents"), SqlOps.dedupMinhashEst),
+    "q_dedup_ngram_jaccard" -> Staged(Seq("documents"), SqlOps.dedupNgramJaccard),
+    "q_dedup_verified" -> Staged(Seq("documents"), SqlOps.dedupVerified),
+    "q_dedup_lsh_eval" -> Staged(Seq("documents"), SqlOps.dedupLshEval),
+    // threshold sensitivity: pair/doc counts per candidate Jaccard bar
+    "q_dedup_threshold_sweep" -> Staged(Seq("documents"), SqlOps.dedupThresholdSweep),
+    // S-curve audit: empirical vs exact-rational theoretical collision
+    // rate per Jaccard decile over the deterministic sample
+    "q_lsh_scurve" -> Staged(Seq("documents"), SqlOps.lshScurve),
+    // (bands, rows) optimizer: expected FN/FP mass per factorization
+    // of the 8-slice signature against the corpus's own pair histogram
+    "q_lsh_param_opt" -> Staged(Seq("documents"), SqlOps.lshParamOpt),
+    "q_dedup_simhash" -> Sql(Seq("documents"), SqlOps.dedupSimhash),
+    "q_dedup_simhash_pairs" -> Staged(Seq("documents"), SqlOps.dedupSimhashPairs),
+    "q_dedup_sorted_neighborhood" -> Staged(Seq("documents"), SqlOps.dedupSortedNeighborhood),
+    "q_dedup_fingerprint" -> Sql(Seq("documents"), SqlOps.dedupFingerprint),
+    "q_dedup_levenshtein" -> Sql(Seq("documents"), SqlOps.dedupLevenshtein),
+    "q_ntile" -> Sql(Seq("orders"), SqlOps.orderDeciles),
+    "q_dedup_embedding_cosine" -> Staged(Seq("embeddings"), SqlOps.dedupEmbeddingCosine),
+    "q_dedup_semantic" -> Staged(Seq("embeddings"), SqlOps.dedupSemantic),
+    "q_ann_margin" -> Staged(Seq("embeddings"), SqlOps.annMargin),
+    "q_dedup_canonical" -> Sql(Seq("documents"), SqlOps.dedupCanonical),
+    // pairs → clusters: transitive closure of the minhash candidate
+    // pairs via iterative min-label propagation (graft.ops.Cluster)
+    "q_dedup_cluster" -> Frame(clustersStaged,
+      // transitive closure of the same candidate pairs as a recursive CTE;
+      // MIN over all reachable labels = the component minimum (shared by
+      // both CC implementations)
+      CLUSTER_ORACLE),
+    // the O(log n) large-star/small-star variant against the SAME
+    // transitive-closure oracle — both implementations gate-checked
+    "q_dedup_cluster_star" -> Frame(
+      (s, d) => {
+        val pairs = sqlStaged(Seq("documents"), SqlOps.dedupMinhash)(s, d)
+        graft.ops.Cluster.connectedComponentsStar(
+          pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
+      },
+      CLUSTER_ORACLE),
+    // delta-edge cluster maintenance: merge the new-arrivals batch's
+    // candidate pairs into the staged base map via component
+    // contraction — must reproduce full CC on the union graph (same
+    // recursive-CTE oracle as the from-scratch builds), at cost ∝ delta
+    // the delta pairs come from the incremental candidate op (new
+    // signatures probing the existing band index, cost ∝ delta) —
+    // OpsSpec proves them identical to the full pair set restricted
+    // to new docs, so the union-closure oracle still applies
+    "q_dedup_cluster_delta" -> Frame(clustersDeltaStaged,
+      // the incremental update must land on the SAME map as a full
+      // rebuild over base ∪ delta — which is the whole pair set
+      CLUSTER_ORACLE),
+    // the final dedup step: the cleaned corpus = one representative per
+    // duplicate cluster (its minimum id) plus every unclustered doc;
+    // the corpus definition is single-sourced from SqlOps.corpusCte
+    // (the same corpus the minhash pairs are built over)
+    "q_dedup_survivors" -> Frame((s, d) => survivorsFrom(clustersStaged(s, d), s, d),
+      SURVIVORS_ORACLE),
+    // the incremental pipeline closed end-to-end: delta candidates →
+    // delta-CC map → survivors, against the SAME survivors oracle as
+    // the full rebuild (the delta map must be closure-identical)
+    "q_dedup_survivors_delta" -> Frame((s, d) => survivorsFrom(clustersDeltaStaged(s, d), s, d),
+      SURVIVORS_ORACLE),
+    "q_sample_hash" -> Sql(Seq("documents"), SqlOps.sampleHash),
+    "q_sample_stratified" -> Sql(Seq("documents"), SqlOps.sampleStratified),
+    // Neyman-optimal budget allocation across strata (N_h * sigma_h)
+    "q_sample_neyman" -> Sql(Seq("documents"), SqlOps.sampleNeyman),
+    "q_cap_per_source" -> Sql(Seq("documents"), SqlOps.capPerSource),
+    "q_global_rownum" -> Frame(sqlq(Seq("documents"), SqlOps.globalRowNumber),
+      // deliberately NOT the two-phase rendering: the single global
+      // window is the independent ground truth the shard/offset
+      // decomposition must reproduce id-for-id
       s"""WITH sh AS (
          |  SELECT doc_id,
          |    ((instr('0123456789abcdef', substr(md5(text), 1, 1)) - 1) * 16
@@ -2062,244 +1516,411 @@ object SparkEntry {
          |)
          |SELECT doc_id,
          |  CAST(ROW_NUMBER() OVER (ORDER BY shard, h, doc_id) AS BIGINT) AS global_id
-         |FROM sh""".stripMargin,
-    "q_sample_weighted" -> SqlOps.sampleWeighted(DuckDialect),
-    "q_pack_sequences" -> SqlOps.packSequences(DuckDialect),
-    "q_pack_efficiency" -> SqlOps.packEfficiency.single(DuckDialect),
-    "q_mix_epochs" -> SqlOps.mixEpochs(DuckDialect),
-    "q_vocab_coverage" -> SqlOps.vocabCoverage(DuckDialect),
-    "q_dedup_source_overlap" -> SqlOps.dedupSourceOverlap.single(DuckDialect),
-    "q_dedup_incremental" -> SqlOps.dedupIncremental(DuckDialect),
-    "q_dedup_minhash_delta" -> SqlOps.dedupMinhashDelta.single(DuckDialect),
-    "q_dedup_common_ngrams" -> SqlOps.dedupCommonNgrams.single(DuckDialect),
-    "q_assoc_rules" -> SqlOps.assocRules.single(DuckDialect),
-    "q_item_similarity" -> SqlOps.itemSimilarity.single(DuckDialect),
-    "q_pagerank_step" -> SqlOps.pagerankStep.single(DuckDialect),
-    "q_pagerank_iter" -> SqlOps.pagerankIter.single(DuckDialect),
-    "q_textrank_keywords" -> SqlOps.textrankKeywords.single(DuckDialect),
-    "q_linkage_fs" -> SqlOps.linkageFs.single(DuckDialect),
-    "q_link_prediction" -> SqlOps.linkPrediction.single(DuckDialect),
-    "q_markov_stationary" -> SqlOps.markovStationary.single(DuckDialect),
-    "q_markov_entropy" -> SqlOps.markovEntropyRate.single(DuckDialect),
-    "q_cohort_ltv" -> SqlOps.cohortLtv(DuckDialect),
-    "q_pagerank_loop" -> SqlOps.pagerankIter.single(DuckDialect),
-    "q_kcore" -> SqlOps.kcoreIter.single(DuckDialect),
-    "q_graph_truss" -> SqlOps.trussIter.single(DuckDialect),
-    "q_kcore_loop" -> SqlOps.kcoreIter.single(DuckDialect),
-    "q_graph_truss_loop" -> SqlOps.trussIter.single(DuckDialect),
-    "q_label_prop" -> SqlOps.labelProp.single(DuckDialect),
-    "q_dedup_prefix" -> SqlOps.dedupPrefix.single(DuckDialect),
-    "q_dedup_prefix_delta" -> SqlOps.dedupPrefixDelta.single(DuckDialect),
-    "q_embedding_whiten" -> SqlOps.embeddingWhiten(DuckDialect),
-    "q_pca_power_step" -> SqlOps.pcaPowerStep(DuckDialect),
-    "q_dedup_cluster_sizes" ->
+         |FROM sh""".stripMargin),
+    "q_sample_weighted" -> Sql(Seq("documents"), SqlOps.sampleWeighted),
+    // shard-parallel token-budget packing (per-shard windows, no
+    // single-partition exchange) and weight-proportional corpus mixing
+    "q_pack_sequences" -> Sql(Seq("documents"), SqlOps.packSequences),
+    // context-length sizing: naive-padding vs concat-packing bound
+    "q_pack_efficiency" -> Staged(Seq("documents"), SqlOps.packEfficiency),
+    "q_mix_epochs" -> Sql(Seq("documents"), SqlOps.mixEpochs),
+    // which sources copy from which: rollup of the staged minhash
+    // band candidates into a source×source matrix
+    "q_dedup_source_overlap" -> Staged(Seq("documents"), SqlOps.dedupSourceOverlap),
+    // content-addressed anti-join of a fresh snapshot against the
+    // already-ingested corpus (the daily-ingest dedup gate)
+    "q_dedup_incremental" -> Sql(Seq("documents"), SqlOps.dedupIncremental),
+    // incremental candidate generation: new docs probe the existing
+    // band index (cost ∝ delta), feeding the delta-CC update below
+    "q_dedup_minhash_delta" -> Staged(Seq("documents"), SqlOps.dedupMinhashDelta),
+    // corpus-common (boilerplate) 3-gram fraction off the uncapped
+    // distinct shingle index — the C4/CCNet line-dedup analogue
+    "q_dedup_common_ngrams" -> Staged(Seq("documents"), SqlOps.dedupCommonNgrams),
+    // one integer-exact PageRank power step over the minhash candidate
+    // graph (hub detection on the duplicate graph), and the 3-step
+    // unrolled iteration
+    // degree assortativity of the candidate graph: dup farms vs
+    // template fan-out
+    "q_graph_assortativity" -> Staged(Seq("documents"), SqlOps.graphAssortativity),
+    "q_pagerank_step" -> Staged(Seq("documents"), SqlOps.pagerankStep),
+    "q_pagerank_iter" -> Staged(Seq("documents"), SqlOps.pagerankIter),
+    "q_textrank_keywords" -> Staged(Seq("documents"), SqlOps.textrankKeywords),
+    "q_linkage_fs" -> Staged(Seq("documents"), SqlOps.linkageFs),
+    "q_link_prediction" -> Staged(Seq("lineitem"), SqlOps.linkPrediction),
+    "q_markov_stationary" -> Staged(Seq("events"), SqlOps.markovStationary),
+    // entropy rate of the same chain, weighted by the shared pi chain
+    "q_markov_entropy" -> Staged(Seq("events"), SqlOps.markovEntropyRate),
+    "q_cohort_ltv" -> Sql(Seq("orders"), SqlOps.cohortLtv),
+    // the driver-loop form of the same 3 iterations, gated against the
+    // SAME oracle as the SQL-unrolled tree (like CC vs CC-star)
+    "q_pagerank_loop" -> Frame(
+      (s, d) => {
+        val pairs = sqlStaged(Seq("documents"), SqlOps.dedupMinhash)(s, d)
+        graft.ops.Graph.pagerank(
+          pairs.select(col("doc_a").as("a"), col("doc_b").as("b")), iters = 3)
+      },
+      SqlOps.pagerankIter.single(DuckDialect)),
+    // deterministic synchronous label-propagation communities over the
+    // candidate graph (3 staged rounds, majority label, min tie-break)
+    "q_label_prop" -> Staged(Seq("documents"), SqlOps.labelProp),
+    // 2-core of the candidate graph by staged peeling rounds (dense
+    // duplicate clusters vs incidental collisions), and the
+    // loop-until-fixpoint driver form gated against the same oracle
+    "q_kcore" -> Staged(Seq("documents"), SqlOps.kcoreIter),
+    // edge-grain cohesion: the 4-truss peel (every edge in ≥2
+    // triangles at the fixpoint) — the sharper sibling of the k-core
+    "q_graph_truss" -> Staged(Seq("documents"), SqlOps.trussIter),
+    "q_kcore_loop" -> Frame(
+      (s, d) => {
+        val pairs = sqlStaged(Seq("documents"), SqlOps.dedupMinhash)(s, d)
+        graft.ops.Graph.kcore(
+          pairs.select(col("doc_a").as("a"), col("doc_b").as("b")), k = 2)
+      },
+      SqlOps.kcoreIter.single(DuckDialect)),
+    // loop-until-convergence twin of q_graph_truss, same oracle
+    "q_graph_truss_loop" -> Frame(
+      (s, d) => {
+        val pairs = sqlStaged(Seq("documents"), SqlOps.dedupMinhash)(s, d)
+        graft.ops.Graph.truss(
+          pairs.select(col("doc_a").as("a"), col("doc_b").as("b")), k = 4)
+      },
+      SqlOps.trussIter.single(DuckDialect)),
+    // PPJoin-style prefix-filtered similarity self-join off the
+    // uncapped shingle index (the signature-free bounded-candidate path)
+    "q_dedup_prefix" -> Staged(Seq("documents"), SqlOps.dedupPrefix),
+    "q_dedup_prefix_delta" -> Staged(Seq("documents"), SqlOps.dedupPrefixDelta),
+    // duplicate-cluster size histogram off the staged cluster map —
+    // the dedup diagnostic read after every clustering run
+    "q_dedup_cluster_sizes" -> Frame(
+      (s, d) => {
+        val cl = clustersStaged(s, d)
+        cl.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
+          .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
+      },
       s"""$CLUSTER_CTES,
          |cs AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM clusters GROUP BY cluster_id)
-         |SELECT cluster_size, COUNT(*) AS n_clusters FROM cs GROUP BY cluster_size""".stripMargin,
-    "q_ann_eval" -> SqlOps.annEval.single(DuckDialect),
-    "q_ann_hubness" -> SqlOps.annHubness.single(DuckDialect),
-    "q_length_histogram" -> SqlOps.lengthHistogram(DuckDialect),
-    "q_skew_profile" -> SqlOps.skewProfile(DuckDialect),
-    "q_window_dense_cume" -> SqlOps.windowDenseCume(DuckDialect),
-    "q_quality_adaptive" -> SqlOps.qualityAdaptiveFilter.single(DuckDialect),
-    "q_embedding_dim_stats" -> SqlOps.embeddingDimStats(DuckDialect),
-    "q_order_priority_late" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_late_orders
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1998-01-01'
-        |  AND o_orderdate <  TIMESTAMP '1998-04-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY o_orderpriority""".stripMargin,
-    "q_large_volume_customer" ->
-      """WITH big AS (
-        |  SELECT l_orderkey,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 250.0
-        |)
-        |SELECT c_custkey, c_name, o_orderkey, total_qty
-        |FROM big
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey""".stripMargin,
-    "q_kmeans_step" -> SqlOps.kmeansStep.single(DuckDialect),
-    "q_contamination_bloom" -> SqlOps.contaminationBloom.single(DuckDialect),
-    "q_contamination_by_source" -> SqlOps.contaminationBySource.single(DuckDialect),
-    "q_text_ttr" -> SqlOps.textTtr(DuckDialect),
-    "q_text_dup_ngrams" -> SqlOps.textDupNgrams(DuckDialect),
-    "q_text_entropy" -> SqlOps.textEntropy(DuckDialect),
-    "q_text_scrub" -> SqlOps.textScrub(DuckDialect),
-    "q_chunk_documents" -> SqlOps.chunkDocuments(DuckDialect),
-    "q_embedding_quantize" -> SqlOps.embeddingQuantize(DuckDialect),
-    "q_dedup_embedding_clusters" ->
+         |SELECT cluster_size, COUNT(*) AS n_clusters FROM cs GROUP BY cluster_size""".stripMargin),
+    // the embedding-side pairs → clusters composition: cosine near-dup
+    // candidates (8-band sign-LSH gate) closed into components by the
+    // same CC operator the text side uses, against the same
+    // recursive-CTE closure oracle. Embedding near-dup chains give this
+    // graph a much larger diameter than text minhash clusters (10
+    // plain-propagation rounds at sf0.1) — but ALL THREE round-saving
+    // variants were measured here and lose at local scale, where
+    // per-round plan/codegen cost dominates the tiny dataflow: plain
+    // 10 rounds 2.5 s, pointer-doubling 7 rounds 3.3 s, star
+    // alternation 5 rounds 4.0 s. At 100 TB the ranking inverts (data
+    // volume per round dominates, round count is what matters) and
+    // this composition routes to connectedComponentsStar.
+    "q_dedup_embedding_clusters" -> Frame(
+      (s, d) => {
+        val pairs = sqlStaged(Seq("embeddings"), SqlOps.dedupEmbeddingCosine)(s, d)
+        graft.ops.Cluster.connectedComponents(
+            pairs.select(col("vec_a").as("a"), col("vec_b").as("b")))
+          .select(col("doc_id").as("vec_id"), col("cluster_id"))
+      },
       s"""${closureCtes(SqlOps.dedupEmbeddingCosine.single(DuckDialect), "vec_a", "vec_b", "vec_id")}
-         |SELECT vec_id, cluster_id FROM clusters""".stripMargin,
-    "q_embedding_stats" -> SqlOps.embeddingStats(DuckDialect),
-    "q_embedding_drift" -> SqlOps.embeddingDrift(DuckDialect),
-    "q_label_drift" -> SqlOps.labelDrift(DuckDialect),
-    "q_ks_drift" -> SqlOps.ksDrift(DuckDialect),
-    "q_knn_bruteforce" -> SqlOps.knnBruteForce.single(DuckDialect),
-    "q_train_attribution" -> SqlOps.trainAttribution.single(DuckDialect),
-    "q_attr_shortlist_recall" -> SqlOps.attrShortlistRecall.single(DuckDialect),
-    "q_ann_sign_lsh" -> SqlOps.annSignLsh.single(DuckDialect),
-    "q_ann_ivf" -> SqlOps.annIvf.single(DuckDialect),
-    "q_ivf_balance" -> SqlOps.ivfBalance.single(DuckDialect),
-    "q_ann_quant_recall" -> SqlOps.annQuantRecall.single(DuckDialect),
-    "q_ann_pq" -> SqlOps.annPq.single(DuckDialect),
-    "q_ann_pq_search" -> SqlOps.annPqSearch.single(DuckDialect),
-    "q_ann_ivfpq" -> SqlOps.annIvfPq.single(DuckDialect),
-    "q_ann_ivfpq_eval" -> SqlOps.annIvfPqEval.single(DuckDialect),
-    // deliberately NOT the incremental rendering: the from-scratch
-    // reassign-and-aggregate pass is the independent ground truth the
-    // staged sufficient-statistics merge must reproduce cell-for-cell
-    "q_ann_ivf_delta" -> SqlOps.annIvfDeltaFull.single(DuckDialect),
-    "q_text_tokens" -> SqlOps.textTokens(DuckDialect),
-    "q_dedup_substring" -> SqlOps.dedupSubstring.single(DuckDialect),
-    "q_mix_temperature" -> SqlOps.mixTemperature(DuckDialect),
-    "q_orders_rfm" -> SqlOps.ordersRfm.single(DuckDialect),
-    "q_heavy_hitters" -> SqlOps.heavyHitters.single(DuckDialect),
-    "q_ann_ivf_probe2" -> SqlOps.annIvfProbe2.single(DuckDialect),
-    "q_embedding_outliers" -> SqlOps.embeddingOutliers.single(DuckDialect),
-    "q_ann_nprobe_sweep" -> SqlOps.annNprobeSweep.single(DuckDialect),
-    "q_ann_degree_hist" -> SqlOps.annDegreeHist.single(DuckDialect),
-    "q_text_unigram_lm" -> SqlOps.textUnigramLm.single(DuckDialect),
-    "q_dsir_weights" -> SqlOps.dsirWeights.single(DuckDialect),
-    "q_search_bm25" -> SqlOps.searchBm25.single(DuckDialect),
-    "q_search_ndcg" -> SqlOps.searchNdcg.single(DuckDialect),
-    "q_search_rrf" -> SqlOps.searchRrf.single(DuckDialect),
-    "q_search_rbo" -> SqlOps.searchRbo.single(DuckDialect),
-    "q_corpus_diversity" -> SqlOps.corpusDiversity.single(DuckDialect),
-    "q_ship_latency_priority" -> SqlOps.shipLatencyPriority(DuckDialect),
-    "q_cluster_source_entropy" ->
+         |SELECT vec_id, cluster_id FROM clusters""".stripMargin),
+
+    // -- similarity search (embeddings) --
+    "q_embedding_stats" -> Sql(Seq("embeddings"), SqlOps.embeddingStats),
+    "q_embedding_drift" -> Sql(Seq("embeddings"), SqlOps.embeddingDrift),
+    "q_label_drift" -> Sql(Seq("embeddings"), SqlOps.labelDrift),
+    // two-sample KS over doc lengths (en vs rest): exact int64 D
+    "q_ks_drift" -> Sql(Seq("documents"), SqlOps.ksDrift),
+    "q_knn_bruteforce" -> Staged(Seq("embeddings"), SqlOps.knnBruteForce),
+    // influence concentration: which training vectors dominate eval
+    // top-k lists (split-leakage audit from the embedding side)
+    "q_train_attribution" -> Staged(Seq("embeddings"), SqlOps.trainAttribution),
+    // recall@3 of the attribution shortlist vs exact — bounds what the
+    // 2-probe IVF pair stage loses vs the cartesian it replaced
+    "q_attr_shortlist_recall" -> Staged(Seq("embeddings"), SqlOps.attrShortlistRecall),
+    "q_ann_sign_lsh" -> Staged(Seq("embeddings"), SqlOps.annSignLsh),
+    // recall@3 of the sign-LSH index vs exact brute force on the
+    // bounded query set — the nightly index-drift check
+    "q_ann_eval" -> Staged(Seq("embeddings"), SqlOps.annEval),
+    // k-occurrence (hubness) audit of the sign-LSH kNN lists
+    "q_ann_hubness" -> Staged(Seq("embeddings"), SqlOps.annHubness),
+    "q_ann_ivf" -> Staged(Seq("embeddings"), SqlOps.annIvf),
+    // posting-list balance audit over the shared IVF assignment
+    "q_ivf_balance" -> Staged(Seq("embeddings"), SqlOps.ivfBalance),
+    // does int8 quantization change who the top-3 neighbors are?
+    "q_ann_quant_recall" -> Staged(Seq("embeddings"), SqlOps.annQuantRecall),
+    // IVF-PQ's storage half: 4 codebook ids per vector off the shared
+    // per-label component means
+    "q_ann_pq" -> Staged(Seq("embeddings"), SqlOps.annPq),
+    // the PQ read path: ADC top-10 per query off the staged code table
+    // (scores 4 int lookups per vector — never touches the embeddings)
+    "q_ann_pq_search" -> Staged(Seq("embeddings"), SqlOps.annPqSearch),
+    // the composed FAISS-style pipeline: IVF 2-cell probe → ADC top-20
+    // off the code table → exact-cosine refine to top-5
+    "q_ann_ivfpq" -> Staged(Seq("embeddings"), SqlOps.annIvfPq),
+    "q_ann_ivfpq_eval" -> Staged(Seq("embeddings"), SqlOps.annIvfPqEval),
+    // incremental IVF maintenance: assign only today's delta slice to
+    // yesterday's staged centroids, merge into the staged sufficient
+    // stats (cost ∝ delta); the oracle is the full-rebuild form
+    "q_ann_ivf_delta" -> Frame(sqlStaged(Seq("embeddings"), SqlOps.annIvfDelta),
+      // deliberately NOT the incremental rendering: the from-scratch
+      // reassign-and-aggregate pass is the independent ground truth the
+      // staged sufficient-statistics merge must reproduce cell-for-cell
+      SqlOps.annIvfDeltaFull.single(DuckDialect)),
+    // one Lloyd iteration: broadcast-argmin assignment (the staged IVF
+    // working set) + the per-cell centroid update groupBy
+    "q_kmeans_step" -> Staged(Seq("embeddings"), SqlOps.kmeansStep),
+
+    // -- text analysis (documents) --
+    "q_text_tokens" -> Sql(Seq("documents"), SqlOps.textTokens),
+    "q_dedup_substring" -> Staged(Seq("documents"), SqlOps.dedupSubstring),
+    "q_mix_temperature" -> Sql(Seq("documents"), SqlOps.mixTemperature),
+    "q_orders_rfm" -> Staged(Seq("orders"), SqlOps.ordersRfm),
+    "q_heavy_hitters" -> Staged(Seq("documents"), SqlOps.heavyHitters),
+    "q_ann_ivf_probe2" -> Staged(Seq("embeddings"), SqlOps.annIvfProbe2),
+    // vector-quality gate: per-cell members farther than 4x the cell's
+    // median squared distance from their OWN centroid
+    "q_embedding_outliers" -> Staged(Seq("embeddings"), SqlOps.embeddingOutliers),
+    // recall-vs-cost curve per probe depth (staged pair table)
+    "q_ann_nprobe_sweep" -> Staged(Seq("embeddings"), SqlOps.annNprobeSweep),
+    // near-dup graph degree histogram (isolates / hubs)
+    "q_ann_degree_hist" -> Staged(Seq("embeddings"), SqlOps.annDegreeHist),
+    "q_text_unigram_lm" -> Staged(Seq("documents"), SqlOps.textUnigramLm),
+    "q_dsir_weights" -> Staged(Seq("documents"), SqlOps.dsirWeights),
+    "q_search_bm25" -> Staged(Seq("documents"), SqlOps.searchBm25),
+    "q_search_ndcg" -> Staged(Seq("documents"), SqlOps.searchNdcg),
+    "q_search_rrf" -> Staged(Seq("documents"), SqlOps.searchRrf),
+    "q_search_rbo" -> Staged(Seq("documents"), SqlOps.searchRbo),
+    "q_corpus_diversity" -> Staged(Seq("documents"), SqlOps.corpusDiversity),
+    "q_ship_latency_priority" -> Sql(Seq("lineitem", "orders"), SqlOps.shipLatencyPriority),
+    // provenance entropy over the staged cluster map (the clusters-view
+    // pattern of q_dedup_cluster_eval; oracle re-derives the map via
+    // the recursive-CTE closure)
+    "q_cluster_source_entropy" -> Frame(
+      (s, d) => {
+        clustersStaged(s, d).createOrReplaceTempView("clusters")
+        graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
+        s.sql(SqlOps.clusterSourceEntropy(SparkDialect))
+      },
       s"""$CLUSTER_CTES
          |SELECT * FROM (
          |${SqlOps.clusterSourceEntropy(DuckDialect)}
-         |)""".stripMargin,
-    "q_bpe_pairs" -> SqlOps.bpePairs.single(DuckDialect),
-    "q_bpe_merges" -> SqlOps.bpeMerges.single(DuckDialect),
-    "q_ulm_viterbi" -> SqlOps.ulmViterbi.single(DuckDialect),
-    "q_ulm_em_step" -> SqlOps.ulmEmStep.single(DuckDialect),
-    "q_ulm_em_gain" -> SqlOps.ulmEmGain.single(DuckDialect),
-    "q_ulm_encode" -> SqlOps.ulmEncode.single(DuckDialect),
-    "q_ulm_soft_em" -> SqlOps.ulmSoftEm.single(DuckDialect),
-    "q_ulm_prune" -> SqlOps.ulmPrune64Timed.single(DuckDialect),
-    "q_ulm_drift" -> SqlOps.ulmDrift.single(DuckDialect),
-    "q_ulm_vs_bpe" -> SqlOps.ulmVsBpe.single(DuckDialect),
-    "q_pref_winrate" -> SqlOps.prefWinrate.single(DuckDialect),
-    "q_pref_bradley_terry" -> SqlOps.prefBradleyTerry.single(DuckDialect),
-    "q_filter_calibration" -> SqlOps.filterCalibration(DuckDialect),
-    "q_reward_group_norm" -> SqlOps.rewardGroupNorm(DuckDialect),
-    "q_pref_dpo_pairs" -> SqlOps.prefDpoPairs(DuckDialect),
-    "q_eval_bootstrap" -> SqlOps.evalBootstrap(DuckDialect),
-    "q_kmeans_loop" -> SqlOps.kmeansLoop.single(DuckDialect),
-    "q_kmeans_silhouette" -> SqlOps.kmeansSilhouette.single(DuckDialect),
-    "q_kmeans_purity" -> SqlOps.kmeansPurity.single(DuckDialect),
-    "q_kmeans_ari" -> SqlOps.kmeansAri.single(DuckDialect),
-    "q_mix_doremi" -> SqlOps.mixDoremiOp.single(DuckDialect),
-    "q_mix_waterfill" -> SqlOps.mixWaterfill(DuckDialect),
-    "q_filter_conformal" -> SqlOps.filterConformal.single(DuckDialect),
-    "q_embed_jl_project" -> SqlOps.embedJlProject.single(DuckDialect),
-    "q_embed_jl_distortion" -> SqlOps.embedJlDistortion.single(DuckDialect),
-    "q_bpe_encode" -> SqlOps.bpeEncode.single(DuckDialect),
-    "q_text_langid" -> SqlOps.textLangId(DuckDialect),
-    "q_text_langid_eval" -> SqlOps.textLangIdEval(DuckDialect),
-    "q_text_quality" -> SqlOps.textQuality(DuckDialect),
-    "q_text_fingerprint" -> SqlOps.textFingerprint(DuckDialect),
-    "q_text_tfidf" -> SqlOps.textTfIdf.single(DuckDialect),
-    "q_text_bigrams" -> SqlOps.textBigrams(DuckDialect),
-    "q_text_bigrams_source" -> SqlOps.topBigramsPerSource(DuckDialect),
-    "q_text_repetition" -> SqlOps.textRepetition(DuckDialect),
-    "q_corpus_filter" -> SqlOps.corpusFilter(DuckDialect),
-    "q_quality_sweep" -> SqlOps.qualitySweep(DuckDialect),
-    "q_quality_auc" -> SqlOps.qualityAuc(DuckDialect),
-    "q_quality_spearman" -> SqlOps.qualitySpearman(DuckDialect),
-    "q_quality_kendall" -> SqlOps.qualityKendall.single(DuckDialect),
-    "q_source_loo" -> SqlOps.sourceLoo(DuckDialect),
-    "q_release_manifest" -> SqlOps.releaseManifest(DuckDialect),
-    "q_shard_skew" -> SqlOps.shardSkew(DuckDialect),
-    "q_quality_calibration" -> SqlOps.qualityCalibration(DuckDialect),
-    "q_quality_brier" -> SqlOps.qualityBrier(DuckDialect),
-    "q_dataset_card" -> SqlOps.datasetCard.single(DuckDialect),
-    "q_dataset_card_delta" ->
-      SqlOps.datasetCardAdditive(DuckDialect, from = CardDeltaSlice),
-    "q_curation_funnel" -> SqlOps.curationFunnel(DuckDialect),
-    "q_corpus_report" -> SqlOps.corpusReport(DuckDialect),
-    "q_contamination" -> SqlOps.contamination(DuckDialect),
-    "q_ngram_novelty" -> SqlOps.ngramNovelty(DuckDialect),
-    // empty-text guard: list_reduce on an empty list ERRORS in DuckDB,
-    // while the Spark expression returns 0 — the CASE keeps the oracle
-    // total on datasets containing an empty document
-    "q_text_rolling_hash" ->
+         |)""".stripMargin),
+    "q_bpe_pairs" -> Staged(Seq("documents"), SqlOps.bpePairs),
+    // the iterative BPE trainer: 3 staged merge rounds over the vocab
+    // (prewarmed — the rounds feed TWO consumers, merges + encode)
+    "q_bpe_merges" -> Staged(Seq("documents"), SqlOps.bpeMerges),
+    "q_ulm_viterbi" -> Staged(Seq("documents"), SqlOps.ulmViterbi),
+    "q_ulm_em_step" -> Staged(Seq("documents"), SqlOps.ulmEmStep),
+    "q_ulm_em_gain" -> Staged(Seq("documents"), SqlOps.ulmEmGain),
+    "q_ulm_encode" -> Staged(Seq("documents"), SqlOps.ulmEncode),
+    // the FULL SentencePiece trainer loop: soft-EM expected counts
+    // over all segmentations + iterative pruning to a 64-piece vocab
+    "q_ulm_soft_em" -> Staged(Seq("documents"), SqlOps.ulmSoftEm),
+    "q_ulm_prune" -> Staged(Seq("documents"), SqlOps.ulmPrune64Timed),
+    "q_ulm_drift" -> Staged(Seq("documents"), SqlOps.ulmDrift),
+    // tokenizer-selection A/B (both trained artifacts, one tf join);
+    // name sorts after q_ulm_viterbi so ulm_seg stays billed there
+    "q_ulm_vs_bpe" -> Staged(Seq("documents"), SqlOps.ulmVsBpe),
+    // -- preference-data aggregation (RLHF data prep) --
+    "q_pref_winrate" -> Staged(Seq("documents"), SqlOps.prefWinrate),
+    "q_pref_bradley_terry" -> Staged(Seq("documents"), SqlOps.prefBradleyTerry),
+    // calibration of a cheap quality score against the rule battery
+    "q_filter_calibration" -> Sql(Seq("documents"), SqlOps.filterCalibration),
+    // GRPO-style per-group advantage baseline
+    "q_reward_group_norm" -> Sql(Seq("documents"), SqlOps.rewardGroupNorm),
+    // DPO chosen/rejected pair construction per prompt group
+    "q_pref_dpo_pairs" -> Sql(Seq("documents"), SqlOps.prefDpoPairs),
+    // Poisson-bootstrap CI for the corpus pass-rate
+    "q_eval_bootstrap" -> Sql(Seq("documents"), SqlOps.evalBootstrap),
+    // full Lloyd loop: per-round reassignments + centroid shift
+    "q_kmeans_loop" -> Staged(Seq("embeddings"), SqlOps.kmeansLoop),
+    // simplified (centroid-based) silhouette over the final model;
+    // shares the Lloyd chain, billed to q_kmeans_loop by name order
+    "q_kmeans_silhouette" -> Staged(Seq("embeddings"), SqlOps.kmeansSilhouette),
+    // external validation: purity + NMI of the final assignment
+    // against ground-truth labels (same Lloyd chain)
+    "q_kmeans_purity" -> Staged(Seq("embeddings"), SqlOps.kmeansPurity),
+    // chance-corrected pair-counting validation next to purity/NMI
+    "q_kmeans_ari" -> Staged(Seq("embeddings"), SqlOps.kmeansAri),
+    // DoReMi-style excess-loss domain reweighting
+    "q_mix_doremi" -> Staged(Seq("documents"), SqlOps.mixDoremiOp),
+    // water-filling token-budget allocation across domains
+    "q_mix_waterfill" -> Sql(Seq("documents"), SqlOps.mixWaterfill),
+    // split-conformal threshold for the cheap filter score
+    "q_filter_conformal" -> Staged(Seq("documents"), SqlOps.filterConformal),
+    // Johnson-Lindenstrauss projection + distortion audit
+    "q_embed_jl_project" -> Staged(Seq("embeddings"), SqlOps.embedJlProject),
+    "q_embed_jl_distortion" -> Staged(Seq("embeddings"), SqlOps.embedJlDistortion),
+    "q_bpe_encode" -> Staged(Seq("documents"), SqlOps.bpeEncode),
+    "q_text_langid" -> Sql(Seq("documents"), SqlOps.textLangId),
+    "q_text_langid_eval" -> Sql(Seq("documents"), SqlOps.textLangIdEval),
+    "q_text_quality" -> Sql(Seq("documents"), SqlOps.textQuality),
+    "q_text_fingerprint" -> Sql(Seq("documents"), SqlOps.textFingerprint),
+    "q_text_tfidf" -> Staged(Seq("documents"), SqlOps.textTfIdf),
+    "q_text_bigrams" -> Sql(Seq("documents"), SqlOps.textBigrams),
+    "q_text_bigrams_source" -> Sql(Seq("documents"), SqlOps.topBigramsPerSource),
+    "q_text_repetition" -> Sql(Seq("documents"), SqlOps.textRepetition),
+    "q_corpus_filter" -> Sql(Seq("documents"), d => SqlOps.corpusFilter(d)),
+    // threshold sensitivity of the shipped 0.4 quality gate, one
+    // scoring pass against a 6-row threshold domain
+    "q_quality_sweep" -> Sql(Seq("documents"), SqlOps.qualitySweep),
+    // does the quality score ORDER docs correctly? Mann-Whitney AUC
+    // (en vs und labels), exact integer midranks, ppm readout
+    "q_quality_auc" -> Sql(Seq("documents"), SqlOps.qualityAuc),
+    // is the quality score just a length detector? Spearman rank
+    // correlation vs token count, exact doubled midranks
+    "q_quality_spearman" -> Sql(Seq("documents"), SqlOps.qualitySpearman),
+    "q_quality_kendall" -> Staged(Seq("documents"), SqlOps.qualityKendall),
+    // data valuation: per-source leave-one-out effect on corpus mean
+    // quality and per-doc gate pass rate (additive decomposition —
+    // one scoring pass, never |sources| re-scores)
+    "q_source_loo" -> Sql(Seq("documents"), SqlOps.sourceLoo),
+    // the shippable artifact: survivors + redacted-content hash + shard
+    "q_release_manifest" -> Sql(Seq("documents"), d => SqlOps.releaseManifest(d)),
+    // writer-side skew audit of the manifest's md5 shard ring
+    "q_shard_skew" -> Sql(Seq("documents"), SqlOps.shardSkew),
+    // score-vs-language reliability deciles + expected calibration error
+    "q_quality_calibration" -> Sql(Seq("documents"), SqlOps.qualityCalibration),
+    // Murphy decomposition of the decile-binned Brier score
+    "q_quality_brier" -> Sql(Seq("documents"), SqlOps.qualityBrier),
+    // the one-page datasheet next to the manifest: size, mix, dup and
+    // PII facts as (metric, value) rows off staged artifacts
+    "q_dataset_card" -> Staged(Seq("documents"), SqlOps.datasetCard),
+    // the card's ADDITIVE slice over a deterministic md5-half of the
+    // corpus — the exact per-batch SQL the streaming ingest card runs
+    // (DailyIngestSpec proves the rollup; this pins the fragment
+    // cross-engine on a proper subset, so a slice-insensitive bug —
+    // e.g. reading `documents` instead of `from` — cannot hide)
+    "q_dataset_card_delta" -> Sql(Seq("documents"),
+      d => SqlOps.datasetCardAdditive(d, from = CardDeltaSlice)),
+    "q_curation_funnel" -> Sql(Seq("documents"), SqlOps.curationFunnel),
+    "q_corpus_report" -> Sql(Seq("documents"), SqlOps.corpusReport),
+    "q_contamination" -> Sql(Seq("documents"), SqlOps.contamination),
+    // held-out 4-gram novelty vs the training split, per source —
+    // the memorization-side sibling of decontamination
+    "q_ngram_novelty" -> Sql(Seq("documents"), SqlOps.ngramNovelty),
+    // the bloom-gated variant: identical rows (the oracle runs the
+    // ungated exact form — the bloom prefilter must be result-invisible)
+    "q_contamination_bloom" -> Staged(Seq("documents"), SqlOps.contaminationBloom),
+    // per-source leak rollup (quarantine decisions, not per-doc drops)
+    "q_contamination_by_source" -> Staged(Seq("documents"), SqlOps.contaminationBySource),
+    "q_text_ttr" -> Sql(Seq("documents"), SqlOps.textTtr),
+    // corpus length profile (log2 buckets) and key-skew diagnostic
+    "q_length_histogram" -> Sql(Seq("documents"), SqlOps.lengthHistogram),
+    "q_skew_profile" -> Sql(Seq("orders"), SqlOps.skewProfile),
+    // per-language median quality cutoff and per-dimension embedding
+    // normalization stats
+    "q_quality_adaptive" -> Staged(Seq("documents"), SqlOps.qualityAdaptiveFilter),
+    "q_embedding_dim_stats" -> Sql(Seq("embeddings"), SqlOps.embeddingDimStats),
+    "q_embedding_whiten" -> Sql(Seq("embeddings"), SqlOps.embeddingWhiten),
+    "q_pca_power_step" -> Sql(Seq("embeddings"), SqlOps.pcaPowerStep),
+    "q_text_dup_ngrams" -> Sql(Seq("documents"), SqlOps.textDupNgrams),
+    "q_text_entropy" -> Sql(Seq("documents"), SqlOps.textEntropy),
+    "q_text_scrub" -> Sql(Seq("documents"), SqlOps.textScrub),
+    // RAG/pretraining chunker: overlapping token windows per document
+    "q_chunk_documents" -> Sql(Seq("documents"), SqlOps.chunkDocuments),
+    // int8 vector compression for the ANN index's storage tier
+    "q_embedding_quantize" -> Sql(Seq("embeddings"), SqlOps.embeddingQuantize),
+    "q_vocab_coverage" -> Sql(Seq("documents"), SqlOps.vocabCoverage),
+    "q_text_rolling_hash" -> Frame(
+      (s, d) => {
+        graft.functions.RollingHash.register(s)
+        graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
+        s.sql("SELECT doc_id, rolling_hash(text) AS rhash FROM documents")
+      },
+      // empty-text guard: list_reduce on an empty list ERRORS in DuckDB,
+      // while the Spark expression returns 0 — the CASE keeps the oracle
+      // total on datasets containing an empty document
       """SELECT doc_id,
         |  CASE WHEN length(text) = 0 THEN 0 ELSE list_reduce(
         |    list_transform(range(1, length(text) + 1),
         |      i -> CAST(ascii(substr(text, i, 1)) AS BIGINT)),
         |    (acc, c) -> (acc * 31 + c) % 1000000007) END AS rhash
-        |FROM documents""".stripMargin,
-    "q_events_tumbling" -> SqlOps.eventsTumbling(DuckDialect),
-    "q_events_sessionize" -> SqlOps.eventsSessionize(DuckDialect),
-    "q_events_twa" -> SqlOps.eventsTimeWeightedAvg(DuckDialect),
-    "q_survival_km" -> SqlOps.survivalKm(DuckDialect),
-    "q_value_outliers" -> SqlOps.valueOutliers(DuckDialect),
-    "q_range_join" -> SqlOps.rangeJoinBands(DuckDialect),
-    "q_range_join_irregular" -> SqlOps.rangeJoinIrregular(DuckDialect),
-    "q_events_funnel" -> SqlOps.eventsFunnel(DuckDialect),
-    "q_orders_retention" -> SqlOps.ordersRetention(DuckDialect),
-    "q_events_hopping" -> SqlOps.eventsHopping(DuckDialect),
-    "q_intervals_coverage" -> SqlOps.intervalCoverage(DuckDialect),
-    "q_interval_overlap" -> SqlOps.intervalOverlapJoin(DuckDialect),
-    "q_changepoint" -> SqlOps.changepointRevenue(DuckDialect),
-    "q_ewma_forecast" -> SqlOps.ewmaForecast.single(DuckDialect),
-    "q_anomaly_ewma" -> SqlOps.anomalyEwma.single(DuckDialect),
-    "q_cdc_apply" -> SqlOps.cdcApply(DuckDialect),
-    "q_agg_retract" -> SqlOps.aggRetract(DuckDialect),
-    "q_url_canonical" -> SqlOps.urlCanonical(DuckDialect),
-    "q_split_temporal" -> SqlOps.splitTemporal(DuckDialect),
-    "q_snapshot_diff" -> SqlOps.snapshotDiff(DuckDialect),
-    "q_merkle_ranges" -> SqlOps.merkleRanges(DuckDialect),
-    "q_profile_orders" -> SqlOps.profileOrders.single(DuckDialect),
-    "q_profile_orders_approx" -> SqlOps.profileOrdersApprox(DuckDialect),
-    "q_anomaly_mad" -> SqlOps.anomalyMad.single(DuckDialect),
-    "q_attribution" -> SqlOps.attributionLastTouch(DuckDialect),
-    "q_user_growth" -> SqlOps.userGrowth(DuckDialect),
-    // exact weekly distincts; the sketch contracts are asserted
-    // in-query (engine-specific estimates never cross the comparator)
-    "q_hll_merge" ->
-      """SELECT CAST(FLOOR(epoch(ts) / 604800.0) AS BIGINT) AS week,
-        |  COUNT(DISTINCT user_id) AS exact_users,
-        |  TRUE AS merge_equals_direct, TRUE AS est_within_5pct
-        |FROM events GROUP BY CAST(FLOOR(epoch(ts) / 604800.0) AS BIGINT)""".stripMargin,
-    "q_zipf_fit" -> SqlOps.zipfFit.single(DuckDialect),
-    "q_good_turing" -> SqlOps.goodTuring.single(DuckDialect),
-    "q_chao1_richness" -> SqlOps.chao1Richness.single(DuckDialect),
-    "q_hill_tail" -> SqlOps.hillTail.single(DuckDialect),
-    "q_simpson_diversity" -> SqlOps.simpsonDiversity.single(DuckDialect),
-    "q_search_phrase" -> SqlOps.searchPhrase.single(DuckDialect),
-    "q_shard_rebalance" -> SqlOps.shardRebalance(DuckDialect),
-    "q_heaps_fit" -> SqlOps.heapsFit.single(DuckDialect),
-    "q_gopher_rules" -> SqlOps.gopherRules(DuckDialect),
-    "q_pii_scan" -> SqlOps.piiScan.single(DuckDialect),
-    "q_eval_pass_at_k" -> SqlOps.evalPassAtK(DuckDialect),
-    "q_ccnet_buckets" -> SqlOps.ccnetBuckets.single(DuckDialect),
-    "q_filter_kappa" -> SqlOps.filterKappa.single(DuckDialect),
-    "q_filter_mcnemar" -> SqlOps.filterMcnemar.single(DuckDialect),
-    "q_tokenizer_fertility" -> SqlOps.tokenizerFertility.single(DuckDialect),
-    "q_hist_quantiles" -> SqlOps.histogramQuantiles(DuckDialect),
-    "q_pca_power_iter" -> SqlOps.pcaPowerTimed.single(DuckDialect),
-    "q_pca_project" -> SqlOps.pcaProject.single(DuckDialect),
-    "q_pca_deflate" -> SqlOps.pcaDeflate.single(DuckDialect),
-    "q_join_bloom_gate" -> SqlOps.joinBloomGate(DuckDialect),
-    "q_dedup_cluster_eval" ->
+        |FROM documents""".stripMargin),
+
+    // -- event-time analytics --
+    "q_events_tumbling" -> Sql(Seq("events"), SqlOps.eventsTumbling),
+    "q_events_sessionize" -> Sql(Seq("events"), SqlOps.eventsSessionize),
+    "q_events_twa" -> Sql(Seq("events"), SqlOps.eventsTimeWeightedAvg),
+    "q_survival_km" -> Sql(Seq("events"), SqlOps.survivalKm),
+    "q_value_outliers" -> Sql(Seq("events"), SqlOps.valueOutliers),
+    "q_range_join" -> Sql(Seq("events"), SqlOps.rangeJoinBands),
+    "q_range_join_irregular" -> Sql(Seq("events"), SqlOps.rangeJoinIrregular),
+    "q_events_funnel" -> Sql(Seq("events"), SqlOps.eventsFunnel),
+    "q_orders_retention" -> Sql(Seq("orders"), SqlOps.ordersRetention),
+    // hopping (overlapping) windows, interval union, CDC apply,
+    // snapshot diff, and per-column profiling — the data-engineering
+    // maintenance surface around the analytic core
+    "q_events_hopping" -> Sql(Seq("events"), SqlOps.eventsHopping),
+    "q_intervals_coverage" -> Sql(Seq("events"), SqlOps.intervalCoverage),
+    "q_interval_overlap" -> Sql(Seq("events"), SqlOps.intervalOverlapJoin),
+    "q_changepoint" -> Sql(Seq("orders"), SqlOps.changepointRevenue),
+    "q_ewma_forecast" -> Staged(Seq("orders"), SqlOps.ewmaForecast),
+    "q_anomaly_ewma" -> Staged(Seq("orders"), SqlOps.anomalyEwma),
+    "q_cdc_apply" -> Sql(Seq("orders"), SqlOps.cdcApply),
+    "q_agg_retract" -> Sql(Seq("orders"), SqlOps.aggRetract),
+    "q_url_canonical" -> Sql(Seq("part"), SqlOps.urlCanonical),
+    "q_split_temporal" -> Sql(Seq("events"), SqlOps.splitTemporal),
+    "q_snapshot_diff" -> Sql(Seq("documents"), SqlOps.snapshotDiff),
+    "q_merkle_ranges" -> Sql(Seq("documents"), SqlOps.merkleRanges),
+    "q_profile_orders" -> Staged(Seq("orders"), SqlOps.profileOrders),
+    "q_profile_orders_approx" -> Sql(Seq("orders"), SqlOps.profileOrdersApprox),
+    "q_anomaly_mad" -> Staged(Seq("events"), SqlOps.anomalyMad),
+    "q_attribution" -> Sql(Seq("events"), SqlOps.attributionLastTouch),
+    "q_user_growth" -> Sql(Seq("events"), SqlOps.userGrowth),
+    "q_zipf_fit" -> Staged(Seq("documents"), SqlOps.zipfFit),
+    "q_good_turing" -> Staged(Seq("documents"), SqlOps.goodTuring),
+    // Chao1 unseen-vocabulary richness + Good coverage off the same counts
+    "q_chao1_richness" -> Staged(Seq("documents"), SqlOps.chao1Richness),
+    // Hill tail-index of the token-frequency distribution (top-k order stats)
+    "q_hill_tail" -> Staged(Seq("documents"), SqlOps.hillTail),
+    "q_simpson_diversity" -> Staged(Seq("documents"), SqlOps.simpsonDiversity),
+    "q_search_phrase" -> Staged(Seq("documents"), SqlOps.searchPhrase),
+    "q_shard_rebalance" -> Sql(Seq("documents"), SqlOps.shardRebalance),
+    "q_heaps_fit" -> Staged(Seq("documents"), SqlOps.heapsFit),
+    // Gopher rule battery, CCNet LM-bucketing, tokenizer fertility,
+    // histogram-sketch quantiles, and full power-iteration PCA
+    "q_gopher_rules" -> Sql(Seq("documents"), SqlOps.gopherRules),
+    // PII release-gate audit (Luhn / octet validation; zero baseline
+    // on this PII-free fixture, planted paths in MicroOracleSpec)
+    "q_pii_scan" -> Staged(Seq("documents"), SqlOps.piiScan),
+    // unbiased pass@k per task (source=task, Gopher battery=checker)
+    "q_eval_pass_at_k" -> Sql(Seq("documents"), SqlOps.evalPassAtK),
+    "q_ccnet_buckets" -> Staged(Seq("documents"), SqlOps.ccnetBuckets),
+    "q_filter_kappa" -> Staged(Seq("documents"), SqlOps.filterKappa),
+    // McNemar paired test over the same two gates: is the
+    // disagreement directional or coin-flip noise?
+    "q_filter_mcnemar" -> Staged(Seq("documents"), SqlOps.filterMcnemar),
+    "q_tokenizer_fertility" -> Staged(Seq("documents"), SqlOps.tokenizerFertility),
+    "q_hist_quantiles" -> Sql(Seq("events"), SqlOps.histogramQuantiles),
+    "q_pca_power_iter" -> Frame(pcaPowerStaged,
+      SqlOps.pcaPowerTimed.single(DuckDialect)),
+    "q_pca_project" -> Staged(Seq("embeddings"), SqlOps.pcaProject),
+    "q_pca_deflate" -> Frame(pcaDeflateStaged,
+      SqlOps.pcaDeflate.single(DuckDialect)),
+    "q_join_bloom_gate" -> Sql(Seq("orders", "lineitem"), SqlOps.joinBloomGate),
+    // leakage-safe split: the staged cluster map feeds the `clusters`
+    // view; the oracle re-derives it via the recursive-CTE closure
+    "q_dedup_cluster_eval" -> Frame(
+      (s, d) => {
+        clustersStaged(s, d).createOrReplaceTempView("clusters")
+        graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
+        s.sql(SqlOps.dedupClusterEval(SparkDialect))
+      },
       s"""$CLUSTER_CTES
          |SELECT * FROM (
          |${SqlOps.dedupClusterEval(DuckDialect)}
-         |)""".stripMargin,
-    // the minhash stage CTEs are rendered ONCE at top level and the
-    // recursive closure reads `mh_cand` directly (CLUSTER_CTES nests
-    // its own copy of the stage WITH, which would duplicate the
-    // mh_sig alias) — body and closure provably share one edge set
-    "q_cluster_modularity" ->
+         |)""".stripMargin),
+    // modularity of three partitions of the candidate graph: the
+    // cluster map (ceiling), source provenance, singletons (floor)
+    "q_cluster_modularity" -> Frame(
+      (s, d) => {
+        clustersStaged(s, d).createOrReplaceTempView("clusters")
+        buildStages(Seq("documents"), SqlOps.dedupMinhash)(s, d)
+        s.sql(SqlOps.clusterModularity(SparkDialect))
+      },
+      // the minhash stage CTEs are rendered ONCE at top level and the
+      // recursive closure reads `mh_cand` directly (CLUSTER_CTES nests
+      // its own copy of the stage WITH, which would duplicate the
+      // mh_sig alias) — body and closure provably share one edge set
       s"""WITH RECURSIVE ${SqlOps.dedupMinhash.stages.map { case (n, b) =>
              s"$n AS ${DuckDialect.cteMaterialize}(\n${b(DuckDialect)}\n)" }
            .mkString(",\n")},
@@ -2307,64 +1928,111 @@ object SparkEntry {
            .stripPrefix("WITH RECURSIVE ")}
          |SELECT * FROM (
          |${SqlOps.clusterModularity(DuckDialect)}
-         |)""".stripMargin,
-    "q_split_leakage_safe" ->
+         |)""".stripMargin),
+    "q_split_leakage_safe" -> Frame(
+      (s, d) => {
+        clustersStaged(s, d).createOrReplaceTempView("clusters")
+        graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
+        // the assignment is materialized once (two consumers: straddle
+        // audit + rollup — inlined, each would re-run corpus⋈clusters)
+        s.sql(SqlOps.splitLeakageSafe(SparkDialect)).localCheckpoint()
+          .createOrReplaceTempView("split_a")
+        s.sql(SqlOps.splitReport(SparkDialect))
+      },
       s"""$CLUSTER_CTES,
          |split_a AS ${DuckDialect.cteMaterialize}(
          |${SqlOps.splitLeakageSafe(DuckDialect)}
          |)
          |SELECT * FROM (
          |${SqlOps.splitReport(DuckDialect)}
-         |)""".stripMargin,
-    "q_split_kfold" ->
+         |)""".stripMargin),
+    // cluster-safe K-fold CV assignment + straddle/balance audit
+    "q_split_kfold" -> Frame(
+      (s, d) => {
+        clustersStaged(s, d).createOrReplaceTempView("clusters")
+        graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
+        s.sql(SqlOps.splitKfoldAssign(SparkDialect)).localCheckpoint()
+          .createOrReplaceTempView("kfold_a")
+        s.sql(SqlOps.splitKfoldReport(SparkDialect))
+      },
       s"""$CLUSTER_CTES,
          |kfold_a AS ${DuckDialect.cteMaterialize}(
          |${SqlOps.splitKfoldAssign(DuckDialect)}
          |)
          |SELECT * FROM (
          |${SqlOps.splitKfoldReport(DuckDialect)}
-         |)""".stripMargin,
-    "q_quality_vs_dup" ->
+         |)""".stripMargin),
+    // quality-gate pass rate among real duplicates vs uniques + z
+    "q_quality_vs_dup" -> Frame(
+      (s, d) => {
+        clustersStaged(s, d).createOrReplaceTempView("clusters")
+        graft.Tables(s, d, "documents").createOrReplaceTempView("documents")
+        s.sql(SqlOps.qualityVsDup(SparkDialect))
+      },
       s"""$CLUSTER_CTES
          |SELECT * FROM (
          |${SqlOps.qualityVsDup(DuckDialect)}
-         |)""".stripMargin,
-    "q_text_bigram_lm" -> SqlOps.textBigramLm.single(DuckDialect),
-    "q_text_backoff_lm" -> SqlOps.textBackoffLm.single(DuckDialect),
-    "q_bigram_pmi" -> SqlOps.bigramPmi.single(DuckDialect),
-    "q_join_size_audit" -> SqlOps.joinSizeAudit(DuckDialect),
-    "q_metric_contribution" -> SqlOps.metricContribution(DuckDialect),
-    "q_pareto_customers" -> SqlOps.paretoCustomers.single(DuckDialect),
-    "q_text_readability" -> SqlOps.textReadability(DuckDialect),
-    // the DIRECT join: equality proves the four-quadrant delta
-    // decomposition lossless
-    "q_join_delta" ->
+         |)""".stripMargin),
+    "q_text_bigram_lm" -> Staged(Seq("documents"), SqlOps.textBigramLm),
+    // Stupid-Backoff LM: held-out half scored under train-half counts
+    "q_text_backoff_lm" -> Staged(Seq("documents"), SqlOps.textBackoffLm),
+    "q_bigram_pmi" -> Staged(Seq("documents"), SqlOps.bigramPmi),
+    "q_join_size_audit" -> Sql(Seq("orders", "lineitem"), SqlOps.joinSizeAudit),
+    "q_metric_contribution" -> Sql(Seq("lineitem", "part"), SqlOps.metricContribution),
+    "q_pareto_customers" -> Staged(Seq("orders"), SqlOps.paretoCustomers),
+    "q_text_readability" -> Sql(Seq("documents"), SqlOps.textReadability),
+    // merge-of-partials vs a direct-aggregation oracle: the equality
+    // proves the incremental-maintenance decomposition lossless
+    "q_agg_incremental" -> Frame(sqlq(Seq("orders"), SqlOps.aggIncremental),
+      // deliberately NOT the merge rendering: the direct aggregate over
+      // all orders is the independent ground truth the partial-state
+      // merge must reproduce
+      """SELECT year(o_orderdate) * 100 + month(o_orderdate) AS month_key,
+        |  CAST(SUM(CAST(FLOOR(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT)) AS BIGINT) AS revenue_cents,
+        |  COUNT(*) AS n_orders
+        |FROM orders GROUP BY year(o_orderdate) * 100 + month(o_orderdate)""".stripMargin),
+    // join-view delta decomposition; the oracle runs the direct join
+    "q_join_delta" -> Frame(sqlq(Seq("orders", "lineitem"), SqlOps.joinDelta),
+      // the DIRECT join: equality proves the four-quadrant delta
+      // decomposition lossless
       """SELECT o_orderpriority, COUNT(*) AS n_items,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-    "q_source_kl" -> SqlOps.sourceKl(DuckDialect),
-    "q_acf_revenue" -> SqlOps.acfRevenue(DuckDialect),
-    "q_theilsen_revenue" -> SqlOps.theilSenRevenue(DuckDialect),
-    "q_seasonality_dow" -> SqlOps.seasonalityDow(DuckDialect),
-    "q_ols_revenue" -> SqlOps.olsRevenue(DuckDialect),
-    "q_forecast_skill" -> SqlOps.forecastSkill.single(DuckDialect),
-    "q_dau_mau" -> SqlOps.dauMauStickiness(DuckDialect),
-    "q_power_analysis" -> SqlOps.powerAnalysis(DuckDialect),
-    "q_label_noise" -> SqlOps.labelNoise(DuckDialect),
-    "q_cramers_v" -> SqlOps.cramersV(DuckDialect),
-    "q_dedup_winnow" -> SqlOps.dedupWinnow.single(DuckDialect),
-    "q_anomaly_deseasonal" -> SqlOps.anomalyDeseasonal(DuckDialect),
-    "q_seasonal_strength" -> SqlOps.seasonalStrength(DuckDialect),
-    "q_ljung_box" -> SqlOps.ljungBox(DuckDialect),
-    "q_pmi_spectral" -> SqlOps.pmiSpectral.single(DuckDialect),
-    "q_mannkendall_revenue" -> SqlOps.mannKendallRevenue(DuckDialect),
-    "q_price_percentile_approx" -> SqlOps.pricePercentileApprox(DuckDialect),
-    "q_revenue_hhi" -> SqlOps.revenueHhi(DuckDialect),
-    "q_rolling_median_revenue" -> SqlOps.rollingMedianRevenue(DuckDialect),
-    // the single global-window form: equality proves the
-    // bucket-decomposed rank exact
-    "q_revenue_gini" ->
+        |GROUP BY o_orderpriority""".stripMargin),
+    // snapshot-to-snapshot source-mix KL contributions
+    "q_source_kl" -> Sql(Seq("documents"), SqlOps.sourceKl),
+    // weekly-structure diagnostic: daily-revenue autocorrelation at
+    // lags 1..7 from exact integer moments
+    "q_acf_revenue" -> Sql(Seq("orders"), SqlOps.acfRevenue),
+    // robust trend: median of pairwise day slopes (calendar-bounded
+    // pair set) + median-residual intercept
+    "q_theilsen_revenue" -> Sql(Seq("orders"), SqlOps.theilSenRevenue),
+    "q_seasonality_dow" -> Sql(Seq("orders"), SqlOps.seasonalityDow),
+    "q_ols_revenue" -> Sql(Seq("orders"), SqlOps.olsRevenue),
+    "q_forecast_skill" -> Staged(Seq("orders"), SqlOps.forecastSkill),
+    "q_dau_mau" -> Sql(Seq("events"), SqlOps.dauMauStickiness),
+    "q_power_analysis" -> Sql(Seq("events"), SqlOps.powerAnalysis),
+    "q_label_noise" -> Sql(Seq("documents"), SqlOps.labelNoise),
+    "q_cramers_v" -> Sql(Seq("documents"), SqlOps.cramersV),
+    "q_dedup_winnow" -> Staged(Seq("documents"), SqlOps.dedupWinnow),
+    "q_anomaly_deseasonal" -> Sql(Seq("orders"), SqlOps.anomalyDeseasonal),
+    "q_seasonal_strength" -> Sql(Seq("orders"), SqlOps.seasonalStrength),
+    "q_ljung_box" -> Sql(Seq("orders"), SqlOps.ljungBox),
+    "q_pmi_spectral" -> Staged(Seq("documents"), SqlOps.pmiSpectral),
+    // the trend TEST next to the trend estimator: tie-corrected
+    // Mann-Kendall with an exact-integer 5% verdict
+    "q_mannkendall_revenue" -> Sql(Seq("orders"), SqlOps.mannKendallRevenue),
+    // fourth approx-sketch contract: engine percentile sketch vs the
+    // exact value-cardinality rank, only the bound boolean compared
+    "q_price_percentile_approx" -> Sql(Seq("orders"), SqlOps.pricePercentileApprox),
+    // concentration + robust trend + inequality over the same
+    // exact-cents revenue facts
+    "q_revenue_hhi" -> Sql(Seq("orders", "customer", "nation"), SqlOps.revenueHhi),
+    "q_rolling_median_revenue" -> Sql(Seq("orders"), SqlOps.rollingMedianRevenue),
+    // bucket-decomposed global value rank; oracle = the single window
+    "q_revenue_gini" -> Frame(sqlq(Seq("orders"), SqlOps.revenueGini),
+      // the single global-window form: equality proves the
+      // bucket-decomposed rank exact
       """WITH cust AS (
         |  SELECT o_custkey,
         |    CAST(SUM(CAST(FLOOR(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT)) AS BIGINT) AS cents
@@ -2386,56 +2054,93 @@ object SparkEntry {
         |       ELSE FLOOR((2.0e0 * CAST(rx AS DOUBLE) - (CAST(n AS DOUBLE) + 1.0e0) * t)
         |                  / (CAST(n AS DOUBLE) * t) * 1.0e6 + 5.0e-1) / 1.0e6
         |  END AS gini
-        |FROM s""".stripMargin,
-    "q_fd_audit" -> SqlOps.fdAudit(DuckDialect),
-    // deliberately NOT the merge rendering: the direct aggregate over
-    // all orders is the independent ground truth the partial-state
-    // merge must reproduce
-    "q_agg_incremental" ->
-      """SELECT year(o_orderdate) * 100 + month(o_orderdate) AS month_key,
-        |  CAST(SUM(CAST(FLOOR(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  COUNT(*) AS n_orders
-        |FROM orders GROUP BY year(o_orderdate) * 100 + month(o_orderdate)""".stripMargin,
-    "q_dedup_containment" -> SqlOps.dedupContainment.single(DuckDialect),
-    "q_graph_triangles" -> SqlOps.graphTriangles.single(DuckDialect),
-    "q_fuzzy_join" -> SqlOps.fuzzyJoin.single(DuckDialect),
-    "q_chi_square" -> SqlOps.chiSquare(DuckDialect),
-    "q_cusum_drift" -> SqlOps.cusumDrift(DuckDialect),
-    "q_event_transitions" -> SqlOps.eventTransitions(DuckDialect),
-    "q_mutual_info" -> SqlOps.mutualInfo(DuckDialect),
-    "q_corpus_split" -> SqlOps.corpusSplit(DuckDialect),
-    "q_distinct_two_phase" -> SqlOps.distinctTwoPhase(DuckDialect),
-    "q_zorder_layout" -> SqlOps.zorderLayout(DuckDialect),
-    "q_trend_by_brand" -> SqlOps.trendByBrand(DuckDialect),
-    "q_skyline_orders" -> SqlOps.skylineOrders.single(DuckDialect),
-    "q_graph_degrees" -> SqlOps.graphDegrees.single(DuckDialect),
-    "q_multimodal_meta" -> SqlOps.multimodalMeta(DuckDialect),
-    "q_multimodal_resize" -> SqlOps.multimodalResize(DuckDialect),
-    "q_multimodal_audio" -> SqlOps.multimodalAudioWindows(DuckDialect),
-    "q_multimodal_spectrum" -> SqlOps.multimodalSpectrum(DuckDialect),
-    "q_multimodal_frames" ->
-      """SELECT doc_id,
-        |  CAST(unnest(range(0,
-        |    CAST(CEIL(CAST(octet_length(encode(text)) AS DOUBLE) / 64) AS BIGINT), 4)) AS INT) AS frame_no
-        |FROM documents WHERE doc_id % 3 = 2""".stripMargin,
-    "q_image_phash" ->
-      s"""$PHASH_CTES
-        |SELECT doc_id, phash,
-        |  CAST(COUNT(*) OVER (PARTITION BY phash) AS BIGINT) AS n_dups,
-        |  MIN(doc_id) OVER (PARTITION BY phash) AS keep_id
-        |FROM ph""".stripMargin,
-    "q_dedup_phash_near" ->
-      s"""$PHASH_CTES,
-        |phash_tbl AS (SELECT doc_id, phash FROM ph)
-        |SELECT * FROM (
-        |${SqlOps.phashNear(DuckDialect)}
-        |)""".stripMargin,
-    "q_multimodal_decode" ->
+        |FROM s""".stripMargin),
+    // source→lang functional-dependency profile
+    "q_fd_audit" -> Sql(Seq("documents"), SqlOps.fdAudit),
+    // containment near-dup off the same staged shingle index, and the
+    // candidate-graph triangle diagnostic off the staged band pairs
+    "q_dedup_containment" -> Staged(Seq("documents"), SqlOps.dedupContainment),
+    "q_graph_triangles" -> Staged(Seq("documents"), SqlOps.graphTriangles),
+    "q_fuzzy_join" -> Staged(Seq("documents"), SqlOps.fuzzyJoin),
+    "q_chi_square" -> Sql(Seq("events"), SqlOps.chiSquare),
+    "q_cusum_drift" -> Sql(Seq("events"), SqlOps.cusumDrift),
+    "q_event_transitions" -> Sql(Seq("events"), SqlOps.eventTransitions),
+    "q_mutual_info" -> Sql(Seq("documents"), SqlOps.mutualInfo),
+    "q_corpus_split" -> Sql(Seq("documents"), SqlOps.corpusSplit),
+    "q_distinct_two_phase" -> Sql(Seq("events"), SqlOps.distinctTwoPhase),
+    "q_zorder_layout" -> Sql(Seq("orders"), SqlOps.zorderLayout),
+    "q_trend_by_brand" -> Sql(Seq("lineitem", "part"), SqlOps.trendByBrand),
+    "q_skyline_orders" -> Staged(Seq("orders"), SqlOps.skylineOrders),
+    "q_graph_degrees" -> Staged(Seq("documents"), SqlOps.graphDegrees),
+
+    // -- multimodal columns --
+    "q_multimodal_meta" -> Sql(Seq("documents"), SqlOps.multimodalMeta),
+    "q_multimodal_resize" -> Sql(Seq("documents"), SqlOps.multimodalResize),
+    "q_multimodal_audio" -> Sql(Seq("documents"), SqlOps.multimodalAudioWindows),
+    // 8-point DFT band energies over the same windows (host-exact twiddles)
+    "q_multimodal_spectrum" -> Sql(Seq("documents"), SqlOps.multimodalSpectrum),
+    // batched mapPartitions decode; dims are SQL-checkable, features not
+    "q_multimodal_decode" -> Frame(
+      (s, d) => {
+        import s.implicits._
+        graft.ops.Multimodal
+          .decodeBatched(graft.ops.Multimodal.asMedia(graft.Tables.documents(s, d)))
+          .toDF().drop("features")
+          .orderBy("doc_id")
+      },
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) % 317 + 16 AS INT) AS width,
         |  CAST(octet_length(encode(text)) % 211 + 16 AS INT) AS height,
         |  CAST(octet_length(encode(text)) % 3 + 1 AS INT) AS channels,
         |  CAST(octet_length(encode(text)) AS INT) AS n_bytes
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
+    // frame sampling of video payloads (frame bytes dropped: chunk
+    // geometry is SQL-checkable, the binary itself is not)
+    "q_multimodal_frames" -> Frame(
+      (s, d) =>
+        graft.ops.Multimodal
+          .sampleFrames(graft.ops.Multimodal.asMedia(graft.Tables.documents(s, d)))
+          .drop("frame")
+          .orderBy("doc_id", "frame_no"),
+      """SELECT doc_id,
+        |  CAST(unnest(range(0,
+        |    CAST(CEIL(CAST(octet_length(encode(text)) AS DOUBLE) / 64) AS BIGINT), 4)) AS INT) AS frame_no
+        |FROM documents WHERE doc_id % 3 = 2""".stripMargin),
+    // perceptual-hash image dedup over the two-snapshot media corpus:
+    // every payload appears twice under different ids (and different
+    // claimed mimes — the hash is content-addressed, so the pair still
+    // collides). The oracle reproduces the stub byte-grid hash in pure
+    // SQL; the real-pixel 8×8 grid path is covered by MultimodalSpec.
+    "q_image_phash" -> Frame(
+      (s, d) => {
+        import org.apache.spark.sql.expressions.Window
+        val w = Window.partitionBy("phash")
+        mediaPhashStaged(s, d)
+          .withColumn("n_dups", count(lit(1)).over(w))
+          .withColumn("keep_id", min("doc_id").over(w))
+      },
+      s"""$PHASH_CTES
+        |SELECT doc_id, phash,
+        |  CAST(COUNT(*) OVER (PARTITION BY phash) AS BIGINT) AS n_dups,
+        |  MIN(doc_id) OVER (PARTITION BY phash) AS keep_id
+        |FROM ph""".stripMargin),
+    // banded hamming near-dup over the same hashes (recall-approximate
+    // bands, exact one-sided verify — the simhash pattern on images)
+    "q_dedup_phash_near" -> Frame(
+      (s, d) => {
+        mediaPhashStaged(s, d).createOrReplaceTempView("phash_tbl")
+        s.sql(SqlOps.phashNear(SparkDialect))
+      },
+      s"""$PHASH_CTES,
+        |phash_tbl AS (SELECT doc_id, phash FROM ph)
+        |SELECT * FROM (
+        |${SqlOps.phashNear(DuckDialect)}
+        |)""".stripMargin),
   )
+
+  private def distinctRows(rows: (String, Query)*): Map[String, Query] = {
+    val dups = rows.groupBy(_._1).collect { case (n, rs) if rs.size > 1 => n }
+    require(dups.isEmpty, s"query names registered twice: ${dups.mkString(", ")}")
+    rows.toMap
+  }
 }

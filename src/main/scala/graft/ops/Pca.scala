@@ -192,10 +192,6 @@ object PcaLoop {
       val sDf = spark.sql(matvec).persist()
       val sView = s"__pca_loop_s_$scratchTag"
       sDf.createOrReplaceTempView(sView)
-      def t0 = System.nanoTime()
-      val tm = sys.env.contains("SPARK_GRAFT_STAGE_TIMING")
-      def lap(tag: String, from: Long): Unit = if (tm)
-        System.err.println(f"[pcaloop] r$r $tag%-8s ${(System.nanoTime() - from) / 1e9}%6.2fs")
       try {
         // the rescale divisor dm = 1 + (max|sv| − 1) DIV tqS rides as
         // a 1-row aggregate SUBQUERY over the persisted matvec (r15)
@@ -207,7 +203,6 @@ object PcaLoop {
         // per-invocation constant so the SQL text — and therefore the
         // whole-stage codegen source — is STILL identical across
         // rounds (the property the VALUES form existed for).
-        val tVm = t0
         w = spark.sql(
           s"""SELECT CAST(c.pos AS BIGINT) AS pos,
              |  CAST(SUM(c.cv * ${fd("s.sv", "d.dm")}) AS BIGINT) AS w
@@ -219,7 +214,6 @@ object PcaLoop {
              |) d
              |GROUP BY c.pos""".stripMargin)
           .collect().map(row => (row.getLong(0), row.getLong(1)))
-        lap("vecmat", tVm)
       } finally {
         spark.catalog.dropTempView(sView)
         sDf.unpersist()

@@ -1,32 +1,32 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.ops.{SparkDialect, SqlOps, StagedOp}
+import graft.SparkEntry
+import graft.ops.SparkDialect
 
-/** Dev utility: stage-by-stage timing of a StagedOp pipeline,
+/** Dev utility: stage-by-stage timing of one registered staged query,
   * materializing every stage exactly as SparkEntry.sqlStaged does so
   * the body timing profiles the real query.
   *
-  * Usage: runMain graft.tools.Prof [sfDir] [opName]
-  * where opName ∈ jaccard | minhash | simhash_pairs | ivf | cosine | knn | lsh
+  * Usage: runMain graft.tools.Prof [sfDir] [queryName]
+  * where queryName is a `Staged` row of [[SparkEntry.registry]]
+  * (default q_dedup_ngram_jaccard); any other name exits with status 2.
   */
 object Prof {
-  val ops: Map[String, (String, StagedOp)] = Map(
-    "jaccard" -> ("documents" -> SqlOps.dedupNgramJaccard),
-    "minhash" -> ("documents" -> SqlOps.dedupMinhash),
-    "simhash_pairs" -> ("documents" -> SqlOps.dedupSimhashPairs),
-    "ivf" -> ("embeddings" -> SqlOps.annIvf),
-    "cosine" -> ("embeddings" -> SqlOps.dedupEmbeddingCosine),
-    "knn" -> ("embeddings" -> SqlOps.knnBruteForce),
-    "lsh" -> ("embeddings" -> SqlOps.annSignLsh))
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val (view, op) = ops(if (args.length > 1) args(1) else "jaccard")
+    val name = if (args.length > 1) args(1) else "q_dedup_ngram_jaccard"
+    val (views, op) = SparkEntry.registry.get(name) match {
+      case Some(SparkEntry.Staged(v, o)) => (v, o)
+      case other =>
+        System.err.println(
+          if (other.isEmpty) s"Prof: no registered query named $name"
+          else s"Prof: $name is not a staged query; Prof profiles only the stages of a Staged row")
+        sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val spark = graft.GraftSession.local(cpus)
     graft.functions.GraftFunctions.registerAll(spark)
-    graft.Tables(spark, sfDir, view).createOrReplaceTempView(view)
+    views.foreach(v => graft.Tables(spark, sfDir, v).createOrReplaceTempView(v))
 
     def timed(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
@@ -35,18 +35,18 @@ object Prof {
     }
 
     // untimed warmup so JVM/codegen startup doesn't land on stage 1
-    spark.sql(s"SELECT COUNT(*) FROM $view").count()
+    views.foreach(v => spark.sql(s"SELECT COUNT(*) FROM $v").count())
     val explain = sys.env.contains("PROF_EXPLAIN")
-    op.stages.foreach { case (name, build) =>
-      val path = s"/tmp/prof_stage/$name"
+    op.stages.foreach { case (stage, build) =>
+      val path = s"/tmp/prof_stage/$stage"
       val df = spark.sql(build(SparkDialect))
-      if (explain) { println(s"==== stage $name plan ===="); df.explain("formatted") }
-      timed(s"stage $name count")(df.count())
-      timed(s"stage $name count2")(spark.sql(build(SparkDialect)).count())
-      timed(s"stage $name write") {
+      if (explain) { println(s"==== stage $stage plan ===="); df.explain("formatted") }
+      timed(s"stage $stage count")(df.count())
+      timed(s"stage $stage count2")(spark.sql(build(SparkDialect)).count())
+      timed(s"stage $stage write") {
         df.write.mode("overwrite").parquet(path); 0L
       }
-      spark.read.parquet(path).createOrReplaceTempView(name)
+      spark.read.parquet(path).createOrReplaceTempView(stage)
     }
     val body = spark.sql(op.body(SparkDialect))
     timed("full body")(body.count())

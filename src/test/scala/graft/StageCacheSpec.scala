@@ -45,20 +45,29 @@ class StageCacheSpec extends SparkSpec {
     // linkPrediction reused labelProp's 'lp_edges' for a different
     // graph: the LPA tests read the part co-purchase edges). Every
     // StagedOp member of SqlOps is enumerated by reflection; a name may
-    // recur ONLY with the byte-identical builder rendering.
+    // recur ONLY with the byte-identical builder rendering, in each
+    // dialect.
     val ops = graft.ops.SqlOps.getClass.getMethods.toSeq
       .filter(m => m.getReturnType == classOf[graft.ops.StagedOp] &&
         m.getParameterCount == 0)
       .map(m => m.getName -> m.invoke(graft.ops.SqlOps).asInstanceOf[graft.ops.StagedOp])
     assert(ops.size > 30, s"reflection must see the StagedOp surface, got ${ops.size}")
-    val byName = ops.flatMap { case (op, s) =>
+    val reflected = ops.flatMap(_._2.stages.map(_._1)).toSet
+    val registered = SparkEntry.registry.values.collect {
+      case SparkEntry.Staged(_, op) => op.stages.map(_._1)
+    }.flatten.toSet
+    assert((registered -- reflected).isEmpty,
+      s"stages of registered Staged queries that reflection missed: ${registered -- reflected}")
+    val defs = ops.flatMap { case (op, s) =>
       s.stages.map { case (name, build) =>
-        (name, build(graft.ops.SparkDialect), op)
+        (name, build(graft.ops.SparkDialect), build(graft.ops.DuckDialect), op)
       }
-    }.groupBy(_._1)
+    }
+    val byName = defs.groupBy(_._1)
+    info(s"${ops.size} StagedOps, ${defs.size} stage definitions, ${byName.size} stage names")
     val clashes = byName.collect {
-      case (name, defs) if defs.map(_._2).distinct.size > 1 =>
-        s"$name claimed with different SQL by: ${defs.map(_._3).distinct.mkString(", ")}"
+      case (name, ds) if ds.map(_._2).distinct.size > 1 || ds.map(_._3).distinct.size > 1 =>
+        s"$name claimed with different SQL by: ${ds.map(_._4).distinct.mkString(", ")}"
     }
     assert(clashes.isEmpty, clashes.mkString("\n"))
   }

@@ -20,10 +20,9 @@ class OpsSpec extends SparkSpec {
 
   test("every query with an oracle has matching column names") {
     // column ALIGNMENT (names present in SQL text) is checked by the
-    // driver; here just assert every oracle key is a registered query
-    SparkEntry.oracleSql.keys.foreach { k =>
-      assert(SparkEntry.queries.contains(k), s"oracle for unknown query $k")
-    }
+    // oracle compare (tools/check_oracle.py); here every query must have
+    // an oracle and every oracle a query
+    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
   }
 
   test("exact dedup finds every planted duplicate") {
