@@ -41,9 +41,6 @@ object Bench {
     * own quiet history — >3× the prior flags the cell regardless of
     * cpu utilization, and the prior rides along in the artifact so a
     * cross-round reader sees the reference value, not just a flag.
-    * The file is machine-generated by this object (one line, no
-    * nesting inside the two maps), so a regex pull of `"name":num`
-    * pairs from the named map is exact.
     *
     * Resolved against the REPO ROOT (nearest ancestor of the CWD
     * holding build.sbt), not the bare CWD: a Bench launched from
@@ -63,37 +60,61 @@ object Bench {
        java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath
      else found).resolve(name)
   }
-  private def priors(which: String, sfDir: String, cpus: Int): (Map[String, Double], String) =
+  /** What the last committed artifact offers this run, all read from
+    * one parse of it: the first-run and steady quiet priors, and the
+    * prior run's own residual `first_suspect` set (cells no retime
+    * could clear, which must not serve as quiet truth). */
+  private[graft] final case class Priors(first: Map[String, Double],
+                                         steady: Map[String, Double],
+                                         suspects: Set[String])
+  private val noPriors = Priors(Map.empty, Map.empty, Set.empty)
+
+  private def priors(sfDir: String, cpus: Int): (Priors, String) =
     try {
       val p = repoRootFile("bench_full.json")
-      if (!java.nio.file.Files.exists(p)) (Map.empty, s"none: $p missing")
+      if (!java.nio.file.Files.exists(p)) (noPriors, s"none: $p missing")
       else priorsFrom(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"),
-                      which, sfDir, cpus) match {
-        case Right(m) => (m, p.toString)
-        case Left(why) => (Map.empty, s"none: $p is for $why")
+                      sfDir, cpus) match {
+        case Right(pr) => (pr, p.toString)
+        case Left(why) => (noPriors, s"none: $p is for $why")
       }
     } catch {
       case scala.util.control.NonFatal(e) =>
-        (Map.empty, s"none: unreadable (${e.getClass.getSimpleName})")
+        (noPriors, s"none: unreadable (${e.getClass.getSimpleName})")
     }
 
-  /** The `which` map of a bench artifact's text, or why it does not
-    * apply. Priors only apply at the SAME scale factor AND core count:
-    * a dev run at a smaller SF writes the file too, and sf0.001-second
-    * priors would flag every sf0.1 cell and burn the whole retime
-    * budget; an 8-core prior would judge a 32-core run's interference
-    * against cells that are slower for want of cores. */
-  private[graft] def priorsFrom(txt: String, which: String, sfDir: String,
-                                cpus: Int): Either[String, Map[String, Double]] =
-    if (!""""sf":"([^"]*)"""".r.findFirstMatchIn(txt).exists(_.group(1) == sfDir))
+  /** The priors in a bench artifact's text, or why they do not apply.
+    * Priors — the maps and the suspect set alike — only apply at the
+    * SAME scale factor AND core count: a dev run at a smaller SF writes
+    * the file too, and sf0.001-second priors would flag every sf0.1
+    * cell and burn the whole retime budget; an 8-core prior would judge
+    * a 32-core run's interference against cells that are slower for
+    * want of cores. Failed (-1) cells are no prior. */
+  private[graft] def priorsFrom(txt: String, sfDir: String,
+                                cpus: Int): Either[String, Priors] = {
+    val root = json.readTree(txt)
+    def cells(key: String) = jsonNumbers(root.path(key)).filter(_._2 >= 0)
+    if (!(root.path("sf").isTextual && root.path("sf").asText == sfDir))
       Left("a different sf")
-    else if (!""""cpus":(-?[0-9]+)""".r.findFirstMatchIn(txt).exists(_.group(1).toIntOption.contains(cpus)))
+    else if (!(root.path("cpus").isIntegralNumber && root.path("cpus").asLong == cpus))
       Left("different cpus")
-    else Right((s""""$which":\\{([^}]*)\\}""".r).findFirstMatchIn(txt).map { g =>
-      """"([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(g.group(1))
-        .map(x => x.group(1) -> x.group(2).toDouble)
-        .filter(_._2 >= 0).toMap
-    }.getOrElse(Map.empty))
+    else Right(Priors(cells("queries"), cells("queries_steady"),
+      jsonStrings(root.path("first_suspect"))))
+  }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+  /** The numeric members of a JSON object (nulls and a missing object
+    * give none). */
+  private def jsonNumbers(o: com.fasterxml.jackson.databind.JsonNode): Map[String, Double] = {
+    import scala.jdk.CollectionConverters._
+    o.properties().asScala.iterator.map(e => e.getKey -> e.getValue)
+      .collect { case (k, v) if v.isNumber => k -> v.asDouble }.toMap
+  }
+  /** The strings of a JSON array. */
+  private def jsonStrings(a: com.fasterxml.jackson.databind.JsonNode): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    a.elements().asScala.map(_.asText).toSet
+  }
 
   /** Fork a fresh child JVM running `Bench --only <names>` and parse
     * its full JSON line → (first-run map, the child's own
@@ -136,19 +157,9 @@ object Bench {
         txt.linesIterator
           .filter(l => l.startsWith("{") && l.contains("\"queries\":"))
           .toSeq.lastOption.map { line =>
-            // bench-generated JSON: no nesting inside the named maps,
-            // so the regex pull is exact (same argument as priors)
-            def jmap(key: String): Map[String, Double] =
-              (s""""$key":\\{([^}]*)\\}""".r).findFirstMatchIn(line).map { g =>
-                """"([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(g.group(1))
-                  .map(x => x.group(1) -> x.group(2).toDouble).toMap
-              }.getOrElse(Map.empty)
-            val suspects = (""""first_suspect":\[([^\]]*)\]""".r)
-              .findFirstMatchIn(line)
-              .map(g => """"([^"]+)"""".r.findAllMatchIn(g.group(1))
-                .map(_.group(1)).toSet)
-              .getOrElse(Set.empty[String])
-            (jmap("queries"), suspects, jmap("queries_load"))
+            val root = json.readTree(line)
+            (jsonNumbers(root.path("queries")), jsonStrings(root.path("first_suspect")),
+              jsonNumbers(root.path("queries_load")))
           }
       }
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -171,7 +182,8 @@ object Bench {
     }
     val onlyMode = onlyNames.isDefined
     // read the quiet history BEFORE the run (this run overwrites the file)
-    val (steadyPrior, priorSource) = priors("queries_steady", sfDir, cpusN)
+    val (prior, priorSource) = priors(sfDir, cpusN)
+    val steadyPrior = prior.steady
     // first-run quiet history (r14): the load conjunct of the
     // first-suspect predicate cannot tell EXTERNAL load from the
     // bench's OWN 32-core work — the 1-minute loadavg is ≥ the quiet
@@ -191,20 +203,7 @@ object Bench {
     // the >3×-prior test against an inflated reference, ships, and
     // becomes the next prior). Those names fall back to the
     // prior-less load conjunct.
-    val (firstPrior0, _) = priors("queries", sfDir, cpusN)
-    val priorResidualSuspects: Set[String] =
-      try {
-        val p = repoRootFile("bench_full.json")
-        if (!java.nio.file.Files.exists(p)) Set.empty
-        else {
-          val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          (""""first_suspect":\[([^\]]*)\]""".r).findFirstMatchIn(txt)
-            .map(g => """"([^"]+)"""".r.findAllMatchIn(g.group(1))
-              .map(_.group(1)).toSet)
-            .getOrElse(Set.empty)
-        }
-      } catch { case scala.util.control.NonFatal(_) => Set.empty }
-    val firstPrior = firstPrior0 -- priorResidualSuspects
+    val firstPrior = prior.first -- prior.suspects
     if (steadyPrior.isEmpty)
       System.err.println(
         s"[bench] steady quiet-history priors EMPTY ($priorSource) — " +
@@ -237,14 +236,17 @@ object Bench {
     }
     val loadBefore = loadAvg
     // deterministic starting state: r5 vs r6 totals differed partly on
-    // leftover /tmp/graft_stage dirs from PREVIOUS JVMs — a warm
-    // leftover turns a stage-building query into a parquet read, a cold
-    // one bills the build to it; delete the stage root so every bench
-    // run starts from the same (cold, then explicitly prewarmed) state
+    // leftover stage dirs from PREVIOUS JVMs — a warm leftover turns a
+    // stage-building query into a parquet read, a cold one bills the
+    // build to it; clear this JVM's stages so every bench run starts
+    // from the same (cold, then explicitly prewarmed) state
     SparkEntry.cleanupStages()
     // Untimed warmup: JVM/codegen/shuffle-infra startup otherwise lands
     // on whichever query happens to run first and distorts its number.
-    try SparkEntry.queries("q_pricing_summary")(spark, sfDir).count()
+    // Run to the full result (noop sink): a count() lets Catalyst prune
+    // every aggregate expression, and would never warm the money path.
+    try SparkEntry.queries("q_pricing_summary")(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
     // Shared staged artifacts (interchange transform, similarity and
     // shingle indexes, cluster map) are built once per JVM — pay that

@@ -26,8 +26,9 @@ object SparkEntry {
   private def transformed(s: SparkSession, d: String): DataFrame =
     Transform.transform(Listings.raw(s, d))
 
-  /** Root of the stage tier. Default: the per-JVM tmpdir — ephemeral,
-    * wiped by [[cleanupStages]], the always-correct tier. Setting
+  /** Root of the stage tier. Default: the tmpdir, one subdirectory per
+    * JVM ([[ownTmpStageDir]]) — ephemeral, wiped by [[cleanupStages]],
+    * the always-correct tier. Setting
     * `SPARK_GRAFT_STAGE_ROOT` (env; the `graft.stage.root` system
     * property wins over it, for in-JVM tests) promotes the tier to a
     * PERSISTENT directory that outlives the JVM: the staged indexes
@@ -54,7 +55,33 @@ object SparkEntry {
     * say so rather than let a reader assume the tmp-tier contract. */
   private[graft] def stageRootIsPersistent: Boolean = persistentRoot
   private def stageDir(d: String): String =
-    s"$stageRoot/graft_stage/${d.hashCode.toHexString}"
+    if (persistentRoot) s"$stageRoot/graft_stage/${d.hashCode.toHexString}"
+    else s"${ownTmpStageDir.getPath}/${d.hashCode.toHexString}"
+
+  /** The tmp tier, shared by every JVM with this tmpdir. Each JVM keeps
+    * its stages in its own subdirectory ([[ownTmpStageDir]]), so
+    * neither a build nor a [[cleanupStages]] in one JVM touches another
+    * JVM's stages. Nothing is lost: the tmp tier rebuilds any complete
+    * dir its own memo does not know anyway. */
+  private def tmpStageRoot: java.io.File =
+    new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_stage")
+
+  /** A JVM's subdirectory name on the tmp tier: its pid and start time,
+    * so a later process that reuses the pid does not inherit it. */
+  private[graft] def jvmStageTag(p: ProcessHandle): String = {
+    import scala.jdk.OptionConverters._
+    s"jvm-${p.pid}-${p.info.startInstant.toScala.fold(0L)(_.toEpochMilli)}"
+  }
+  private[graft] lazy val ownTmpStageDir: java.io.File =
+    new java.io.File(tmpStageRoot, jvmStageTag(ProcessHandle.current()))
+
+  /** Whether a tmp-tier subdirectory belongs to a live process. */
+  private def stageTagAlive(tag: String): Boolean = {
+    import scala.jdk.OptionConverters._
+    """jvm-(\d+)-\d+""".r.unapplySeq(tag).flatMap(_.head.toLongOption)
+      .flatMap(ProcessHandle.of(_).toScala)
+      .exists(p => p.isAlive && jvmStageTag(p) == tag)
+  }
   private def stagePath(d: String, name: String): String = {
     ensureStageDirValid(d)
     s"${stageDir(d)}/$name"
@@ -160,23 +187,26 @@ object SparkEntry {
 
   /** Always-run stage-cache cleanup (the reference's ALL_DONE
     * cleanup_files_task, dags/dags.py:121-134, applied to this
-    * engine's interchange artifacts): delete the whole per-tmpdir
-    * stage root — including dirs left behind by PREVIOUS JVMs, which
-    * no memo tracks — and clear this JVM's memo. Delete failures are
-    * skip-and-continue, like the reference's. Safe to call between
-    * query batches IN THIS JVM: the next staged query transparently
-    * rebuilds. NOT safe while another JVM sharing the tmpdir is
-    * mid-run — its own memo would still mark the deleted paths as
-    * built (concurrent JVMs already stomp each other's stage dirs via
-    * overwrite-on-first-use; this cleanup is an end-of-run task, like
-    * the reference's). Covers the TMP tier only: a persistent stage
-    * root ([[stageRoot]]) deliberately survives — its staleness is
-    * bounded by the per-dataset manifest check instead — while every
-    * in-JVM memo still drops, so the next access re-validates. */
+    * engine's interchange artifacts): delete this JVM's tmp-tier
+    * subdirectory and those of JVMs that are no longer alive (no memo
+    * tracks those), and clear this JVM's memo. A live JVM's
+    * subdirectory is never touched, so cleanup is safe while other
+    * JVMs share the tmpdir; entries of any other name are left alone
+    * too. Delete failures are skip-and-continue, like the
+    * reference's. Safe to call between query batches IN THIS JVM: the
+    * next staged query transparently rebuilds. Covers the TMP tier
+    * only: a persistent stage root ([[stageRoot]]) deliberately
+    * survives — its staleness is bounded by the per-dataset manifest
+    * check instead — while every in-JVM memo still drops, so the next
+    * access re-validates. */
   def cleanupStages(): Unit = stagedOnce.synchronized {
-    try org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_stage"))
-    catch { case scala.util.control.NonFatal(_) => () }
+    val own = ownTmpStageDir.getName
+    Option(tmpStageRoot.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.getName == own || (f.getName.startsWith("jvm-") && !stageTagAlive(f.getName)))
+      .foreach { f =>
+        try org.apache.commons.io.FileUtils.deleteDirectory(f)
+        catch { case scala.util.control.NonFatal(_) => () }
+      }
     stagedOnce.clear()
     stageReads.synchronized(stageReads.clear())
     validatedDatasets.clear()

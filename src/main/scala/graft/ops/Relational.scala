@@ -11,9 +11,11 @@ import graft.Tables
   * engine adds over the star schema.
   *
   * Determinism-for-oracle notes (driver hash-compares vs DuckDB):
-  *  - Money arithmetic is done in DECIMAL so sums are exact and
-  *    order-independent, then cast to double for output — both engines
-  *    produce bit-identical doubles.
+  *  - Money sums are exact and order-independent on integer units:
+  *    the money kernel ([[cents]], [[sumMoney]]) turns each ≤2-decimal
+  *    money double into exact integer cents, sums them as bigint and
+  *    divides once at the end. The oracles keep their DECIMAL(18,2)
+  *    casts, so every Verify run proves the two bit-equal.
   *  - Every query's output is a deterministic *set* (no LIMIT without a
   *    total order).
   *
@@ -37,27 +39,53 @@ import graft.Tables
   */
 object Relational {
 
-  /** Exact decimal view of a money double, for order-independent sums. */
-  private def dec(c: Column): Column = c.cast("decimal(18,2)")
+  /** Money kernel, step 1 (per row): a money double's exact integer
+    * cents. Rounds half away from zero, sign(x)·⌊|x|·100 + ½⌋, which is
+    * the unscaled value of `CAST(x AS DECIMAL(18,2))` (HALF_UP, away
+    * from zero) for every x with at most two decimals and
+    * |x| < 2^53/100. The money domain is exactly that: MoneySpec checks
+    * every money column of the fixtures (l_quantity, l_extendedprice,
+    * l_discount, o_totalprice, c_acctbal, s_acctbal, p_retailprice)
+    * against the cast with zero mismatches. The sign split matters for
+    * the negative account balances: a bare ⌊x·100 + ½⌋ rounds a
+    * negative half-cent toward zero, where the cast rounds away. On
+    * non-negative inputs it is that bare floor, the rule the offer-book
+    * and part-value queries share with their FLOOR-based oracles. */
+  private[graft] def cents(c: Column): Column = {
+    def halfUp(x: Column): Column = floor(x * lit(1.0e2) + lit(5.0e-1))
+    when(c < lit(0.0), -halfUp(-c)).otherwise(halfUp(c))
+  }
 
-  /** Discounted revenue term with COMPACT precision: (12,2) × (5,2) →
-    * DECIMAL(18,4), which Spark stores as an unscaled Long — the
-    * multiply and the partial sums stay on the primitive fast path.
-    * The (18,2)×(18,2) form produces DECIMAL(37,4), forcing Java
-    * BigDecimal per row across the whole fact table. Bounds: TPC-H
-    * extendedprice < 1e6 (fits (12,2) with 4 digits spare at any SF);
-    * discount ∈ [0,1) fits (4,2). The exact rational value — and so
-    * the final double — is identical either way, which is why the
-    * oracle SQL can keep its wider types. */
-  private def discounted(price: Column, discount: Column): Column =
-    price.cast("decimal(12,2)") *
-      (lit(1).cast("decimal(4,2)") - discount.cast("decimal(4,2)"))
+  /** price × (1 − discount) in exact 1e-4 units (scale 4): integer
+    * cents times integer (100 − discount cents), the exact product the
+    * oracle's DECIMAL(18,2) factors multiply to. */
+  private def netUnits(price: Column, discount: Column): Column =
+    cents(price) * (lit(100L) - cents(discount))
 
-  /** Round-half-up integer-cents view of a money double
-    * (⌊x·100 + ½⌋) — the single-sourced rule the offer-book and
-    * part-value queries share with their oracles. */
-  private def cents(c: Column): Column =
-    floor(c * lit(1.0e2) + lit(5.0e-1)).cast("long")
+  /** Money kernel, step 2 (sum): integer units summed on Spark's
+    * primitive bigint aggregate, then [[money]]. DECIMAL(18,2) inputs
+    * summed as DECIMAL(28,2) buffers instead pay BigInteger round-trips
+    * per row (any precision above 18 is stored as bytes).
+    * Overflow bound: |Σ| < 2^63 units per group — ≈9e9 max-value
+    * lineitem rows (1.05e9 units each) for the scale-4 product, 10×
+    * fewer at scale 5. Past it the session's ANSI arithmetic (Spark 4's
+    * default, which [[graft.GraftSession]] keeps) raises
+    * ARITHMETIC_OVERFLOW; the sum never wraps silently. Bit-identity
+    * with the DECIMAL result needs the tighter |Σ| < 2^53 units
+    * (≈9e11 money at scale 4); the largest fixture sum,
+    * q_pricing_summary's sum_disc_price at sf0.1 (2.7e13 units), stays
+    * 330× under it. */
+  private[graft] def sumMoney(units: Column, scale: Int = 2): Column = money(sum(units), scale)
+
+  /** Money kernel, step 3 (result): a sum of exact integer units at
+    * `scale` (2 for cents, 4 for a cents × cents product) back to a
+    * money double by ONE IEEE division, `Σ.cast(double) / 10^scale`.
+    * While |Σ| < 2^53 both operands are exact doubles and the quotient
+    * is correctly rounded, so it is bit-identical to `CAST(SUM(CAST(x
+    * AS DECIMAL(18,2))) AS DOUBLE)` in Spark and to DuckDB's own
+    * decimal→double cast, which computes this same quotient. */
+  private def money(units: Column, scale: Int): Column =
+    units.cast("double") / lit(math.pow(10, scale))
 
   /** TPC-H Q1-shaped pricing summary: the canonical wide aggregation.
     * Whole-stage-codegen'd hash aggregate with map-side partial agg. */
@@ -66,10 +94,10 @@ object Relational {
       .filter(col("l_shipdate") <= lit("1998-09-01").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
-        sum(dec(col("l_quantity"))).cast("double").as("sum_qty"),
-        sum(dec(col("l_extendedprice"))).cast("double").as("sum_base_price"),
-        sum(discounted(col("l_extendedprice"), col("l_discount")))
-          .cast("double").as("sum_disc_price"),
+        sumMoney(cents(col("l_quantity"))).as("sum_qty"),
+        sumMoney(cents(col("l_extendedprice"))).as("sum_base_price"),
+        sumMoney(netUnits(col("l_extendedprice"), col("l_discount")), 4)
+          .as("sum_disc_price"),
         count(lit(1)).as("count_order"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
   }
@@ -86,8 +114,8 @@ object Relational {
     li.join(p, li("l_partkey") === p("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(
-        sum(discounted(col("l_extendedprice"), col("l_discount")))
-          .cast("double").as("revenue"),
+        sumMoney(netUnits(col("l_extendedprice"), col("l_discount")), 4)
+          .as("revenue"),
         count(lit(1)).as("n_items"))
       .orderBy(col("p_brand"))
   }
@@ -105,8 +133,8 @@ object Relational {
       .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
       .groupBy(col("r_name"), col("n_name"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount")))
-        .cast("double").as("revenue"))
+      .agg(sumMoney(netUnits(col("l_extendedprice"), col("l_discount")), 4)
+        .as("revenue"))
       .orderBy(col("r_name"), col("n_name"))
   }
 
@@ -147,7 +175,7 @@ object Relational {
       .orderBy(col("o_orderdate"), col("o_orderkey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.orders(spark, dir)
-      .withColumn("cum_spend", sum(dec(col("o_totalprice"))).over(w).cast("double"))
+      .withColumn("cum_spend", money(sum(cents(col("o_totalprice"))).over(w), 2))
       .select(col("o_custkey"), col("o_orderkey"), col("cum_spend"))
       .orderBy(col("o_custkey"), col("o_orderkey"))
   }
@@ -280,7 +308,7 @@ object Relational {
   def cubeRevenue(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
       .cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(sum(dec(col("o_totalprice"))).cast("double").as("total"),
+      .agg(sumMoney(cents(col("o_totalprice"))).as("total"),
            count(lit(1)).as("n"))
       .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
 
@@ -300,7 +328,7 @@ object Relational {
   def rollupRevenue(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
       .rollup(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(sum(dec(col("o_totalprice"))).cast("double").as("total"),
+      .agg(sumMoney(cents(col("o_totalprice"))).as("total"),
            count(lit(1)).as("n"))
       .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
 
@@ -324,7 +352,7 @@ object Relational {
     val wide = Tables.orders(spark, dir)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).cast("double").as("n_orders"),
-           sum(dec(col("o_totalprice"))).cast("double").as("revenue"),
+           sumMoney(cents(col("o_totalprice"))).as("revenue"),
            max(col("o_totalprice")).cast("double").as("max_price"))
     wide.unpivot(
         Array(col("o_orderstatus")),
@@ -369,7 +397,7 @@ object Relational {
     Tables.orders(spark, dir)
       .groupBy(year(col("o_orderdate")).as("y"), month(col("o_orderdate")).as("m"))
       .agg(count(lit(1)).as("n_orders"),
-           sum(dec(col("o_totalprice"))).cast("double").as("revenue"))
+           sumMoney(cents(col("o_totalprice"))).as("revenue"))
       .orderBy(col("y"), col("m"))
 
   /** As-of join composed from built-ins (Spark has no native ASOF):
@@ -398,17 +426,17 @@ object Relational {
     * partial agg on (key, salt) then final agg on key. With a skewed
     * key distribution this splits each hot key across `salts` reducers
     * in phase 1; the result is provably identical to the direct groupBy
-    * (the oracle checks it against the plain SQL). Decimal sums keep
-    * the two-phase reassociation exact. */
+    * (the oracle checks it against the plain SQL). Integer-cent sums
+    * keep the two-phase reassociation exact. */
   def saltedRevenueByFlag(spark: SparkSession, dir: String, salts: Int = 8): DataFrame = {
     val partial = Tables.lineitem(spark, dir)
       .withColumn("salt", pmod(col("l_orderkey"), lit(salts)))
       .groupBy(col("l_returnflag"), col("salt"))
-      .agg(sum(dec(col("l_extendedprice"))).as("rev_part"),
+      .agg(sum(cents(col("l_extendedprice"))).as("rev_part"),
            count(lit(1)).as("n_part"))
     partial
       .groupBy(col("l_returnflag"))
-      .agg(sum(col("rev_part")).cast("double").as("revenue"),
+      .agg(sumMoney(col("rev_part")).as("revenue"),
            sum(col("n_part")).as("n_items"))
       .orderBy(col("l_returnflag"))
   }
@@ -464,13 +492,13 @@ object Relational {
     * whole-partition window computes the average and filters in ONE
     * shuffle on o_custkey with no join at all (the oracle keeps the
     * relational join form, proving the two equivalent every run).
-    * Decimal-exact sum / count, cast to double at the end, for
-    * cross-engine bit-identical averages. */
+    * Exact integer-cent sum, turned into money once and divided by the
+    * count, for cross-engine bit-identical averages. */
   def aboveAvgOrders(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
     val w = Window.partitionBy(col("o_custkey"))
     o.withColumn("avg_price",
-        sum(dec(col("o_totalprice"))).over(w).cast("double") / count(lit(1)).over(w))
+        money(sum(cents(col("o_totalprice"))).over(w), 2) / count(lit(1)).over(w))
       .filter(col("o_totalprice") > col("avg_price"))
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .orderBy(col("o_orderkey"))
@@ -491,8 +519,8 @@ object Relational {
     val oSeg = o.join(c, o("o_custkey") === c("c_custkey"), "left_semi")
     li.join(oSeg, li("l_orderkey") === oSeg("o_orderkey"))
       .groupBy(col("o_orderkey"), col("o_orderdate"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount")))
-        .cast("double").as("revenue"))
+      .agg(sumMoney(netUnits(col("l_extendedprice"), col("l_discount")), 4)
+        .as("revenue"))
       .orderBy(desc("revenue"), col("o_orderkey"))
       .limit(10)
       .select(col("o_orderkey"),
@@ -517,8 +545,8 @@ object Relational {
       .join(c, o("o_custkey") === c("c_custkey"))
       .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount")))
-             .cast("double").as("lost_revenue"),
+      .agg(sumMoney(netUnits(col("l_extendedprice"), col("l_discount")), 4)
+             .as("lost_revenue"),
            count(lit(1)).as("n_items"))
       .orderBy(desc("lost_revenue"), col("c_custkey"))
       .limit(20)
@@ -526,7 +554,7 @@ object Relational {
 
   /** TPC-H Q14 shape (promo revenue share): one month of lineitem
     * joined to the broadcast part dimension, promo share of revenue as
-    * a single global aggregate. Both revenue sums are decimal-exact
+    * a single global aggregate. Both revenue sums are integer-exact
     * (order-independent) and cast to double only at the end; the final
     * percentage is two IEEE ops evaluated in the same order by both
     * engines. The promo sum is CASE-NULL (sum skips non-promo rows) —
@@ -538,11 +566,10 @@ object Relational {
     val p = Tables.part(spark, dir)
     li.join(p, li("l_partkey") === p("p_partkey"))
       .agg(
-        sum(when(col("p_type") === "PROMO",
-          discounted(col("l_extendedprice"), col("l_discount"))))
-          .cast("double").as("promo_revenue"),
-        sum(discounted(col("l_extendedprice"), col("l_discount")))
-          .cast("double").as("total_revenue"))
+        sumMoney(when(col("p_type") === "PROMO",
+          netUnits(col("l_extendedprice"), col("l_discount"))), 4).as("promo_revenue"),
+        sumMoney(netUnits(col("l_extendedprice"), col("l_discount")), 4)
+          .as("total_revenue"))
       .select(col("promo_revenue"), col("total_revenue"),
         (lit(100.0) * col("promo_revenue") / col("total_revenue")).as("promo_pct"))
   }
@@ -572,11 +599,11 @@ object Relational {
     * attach to that sliver — orders via an orderkey join that AQE can
     * broadcast (the survivor side is tiny), customer size-gated
     * (un-hinted; the optimizer broadcasts it at fixture scale).
-    * Decimal-exact quantity sums. */
+    * Integer-exact quantity sums. */
   def largeVolumeCustomers(spark: SparkSession, dir: String): DataFrame = {
     val big = Tables.lineitem(spark, dir)
       .groupBy(col("l_orderkey"))
-      .agg(sum(dec(col("l_quantity"))).cast("double").as("total_qty"))
+      .agg(sumMoney(cents(col("l_quantity"))).as("total_qty"))
       .filter(col("total_qty") > 250.0)
     val o = Tables.orders(spark, dir)
     val c = Tables.customer(spark, dir)
@@ -598,8 +625,8 @@ object Relational {
               col("l_shipdate") <  lit("1998-04-01").cast("timestamp"))
     val sup = Tables.supplier(spark, dir)
     val rev = li.groupBy(col("l_suppkey"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount")))
-        .cast("double").as("total_revenue"))
+      .agg(sumMoney(netUnits(col("l_extendedprice"), col("l_discount")), 4)
+        .as("total_revenue"))
     rev.withColumn("mx", max(col("total_revenue")).over(Window.partitionBy()))
       .filter(col("total_revenue") === col("mx"))
       .join(sup, col("l_suppkey") === sup("s_suppkey"))
@@ -631,8 +658,8 @@ object Relational {
         li("l_suppkey") === s("s_suppkey") && c("c_nationkey") === s("s_nationkey"))
       .join(broadcast(asiaNations), c("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount")))
-        .cast("double").as("revenue"))
+      .agg(sumMoney(netUnits(col("l_extendedprice"), col("l_discount")), 4)
+        .as("revenue"))
       .orderBy(desc("revenue"))
   }
 
@@ -647,8 +674,8 @@ object Relational {
               col("l_shipdate") <  lit("1998-01-01").cast("timestamp") &&
               col("l_discount").between(0.05, 0.07) &&
               col("l_quantity") < 24)
-      .agg(sum(dec(col("l_extendedprice")) * dec(col("l_discount")))
-             .cast("double").as("revenue_delta"),
+      .agg(sumMoney(cents(col("l_extendedprice")) * cents(col("l_discount")), 4)
+             .as("revenue_delta"),
            count(lit(1)).as("n_items"))
   }
 
@@ -677,8 +704,8 @@ object Relational {
               (col("supp_nation") === "NATION_19" && col("cust_nation") === "NATION_18"))
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("l_shipdate")).as("l_year"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount")))
-        .cast("double").as("revenue"))
+      .agg(sumMoney(netUnits(col("l_extendedprice"), col("l_discount")), 4)
+        .as("revenue"))
       .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
   }
 
@@ -687,7 +714,7 @@ object Relational {
     * filter broadcasts (1/6 of part), the customer side is pruned to
     * the region via broadcast nation/region, and the supplier nation
     * arrives as a broadcast dimension column. Share = conditional
-    * decimal sum / total decimal sum, divided once in double — both
+    * exact sum / total exact sum, divided once in double — both
     * engines evaluate the identical two operands. */
   def marketShare(spark: SparkSession, dir: String): DataFrame = {
     val p = Tables.part(spark, dir).filter(col("p_type") === "STANDARD")
@@ -711,11 +738,9 @@ object Relational {
       .join(c, o("o_custkey") === c("c_custkey"))
       .groupBy(year(col("o_orderdate")).as("o_year"))
       .agg(
-        sum(when(col("supp_nation") === "NATION_3",
-          discounted(col("l_extendedprice"), col("l_discount"))))
-          .cast("double").as("nat_rev"),
-        sum(discounted(col("l_extendedprice"), col("l_discount")))
-          .cast("double").as("tot_rev"),
+        sumMoney(when(col("supp_nation") === "NATION_3",
+          netUnits(col("l_extendedprice"), col("l_discount"))), 4).as("nat_rev"),
+        sumMoney(netUnits(col("l_extendedprice"), col("l_discount")), 4).as("tot_rev"),
         count(lit(1)).as("n_items"))
       .select(col("o_year"), (col("nat_rev") / col("tot_rev")).as("mkt_share"),
         col("n_items"))
@@ -726,8 +751,9 @@ object Relational {
     * and order year for one part family. The schema has no partsupp /
     * ps_supplycost, so cost is proxied as half the part's retail price
     * per unit — the shape (multi-fact join, name LIKE filter,
-    * nation×year rollup) is the point. All money terms stay DECIMAL
-    * through the subtraction (scales align exactly in both engines);
+    * nation×year rollup) is the point. All money terms are exact
+    * integers at scale 5 through the subtraction (the oracle's DECIMAL
+    * terms align to the same exact value);
     * the part-name filter broadcasts, supplier/nation broadcast, and
     * lineitem⋈orders is the only fact-fact shuffle. */
   def productProfit(spark: SparkSession, dir: String): DataFrame = {
@@ -737,15 +763,15 @@ object Relational {
     val n  = Tables.nation(spark, dir)
     val li = Tables.lineitem(spark, dir)
     val o  = Tables.orders(spark, dir)
-    val cost = col("p_retailprice").cast("decimal(12,2)") *
-      lit(0.5).cast("decimal(2,1)") * col("l_quantity").cast("decimal(12,2)")
+    // retail × 0.5 × quantity in exact 1e-5 units: cents × 5 × cents
+    val cost = cents(col("p_retailprice")) * lit(5L) * cents(col("l_quantity"))
     li.join(p, li("l_partkey") === p("p_partkey"))
       .join(s, li("l_suppkey") === s("s_suppkey"))
       .join(o, li("l_orderkey") === o("o_orderkey"))
       .join(broadcast(n), s("s_nationkey") === n("n_nationkey"))
       .groupBy(col("n_name").as("nation"), year(col("o_orderdate")).as("o_year"))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount")) - cost)
-        .cast("double").as("profit"))
+      .agg(sumMoney(netUnits(col("l_extendedprice"), col("l_discount")) * lit(10L) - cost, 5)
+        .as("profit"))
       .orderBy(col("nation"), col("o_year"))
   }
 
@@ -775,7 +801,7 @@ object Relational {
     * parts — so the brand broadcast-semi-join runs FIRST and the
     * average is a window over the filtered slice (one shuffle on
     * partkey) instead of a self-join against a full-table aggregate.
-    * The cutoff is 0.2 × (exact decimal sum / count) evaluated in
+    * The cutoff is 0.2 × (exact integer-cent sum / count) evaluated in
     * double — identical operand order in both engines. */
   def smallQtyRevenue(spark: SparkSession, dir: String): DataFrame = {
     val pB = Tables.part(spark, dir).filter(col("p_brand") === "Brand#3")
@@ -784,10 +810,10 @@ object Relational {
     val w  = Window.partitionBy(col("l_partkey"))
     li.join(pB, li("l_partkey") === pB("p_partkey"), "left_semi")
       .withColumn("qty_cut",
-        lit(0.2) * (sum(dec(col("l_quantity"))).over(w).cast("double") /
+        lit(0.2) * (money(sum(cents(col("l_quantity"))).over(w), 2) /
           count(lit(1)).over(w)))
       .filter(col("l_quantity") < col("qty_cut"))
-      .agg((sum(dec(col("l_extendedprice"))).cast("double") / lit(7.0))
+      .agg((sumMoney(cents(col("l_extendedprice"))) / lit(7.0))
              .as("avg_yearly"),
            count(lit(1)).as("n_items"))
   }
@@ -809,8 +835,8 @@ object Relational {
       .filter((box1 && col("l_quantity").between(1, 11)) ||
               (box2 && col("l_quantity").between(10, 20)) ||
               (box3 && col("l_quantity").between(20, 30)))
-      .agg(sum(discounted(col("l_extendedprice"), col("l_discount")))
-             .cast("double").as("revenue"),
+      .agg(sumMoney(netUnits(col("l_extendedprice"), col("l_discount")), 4)
+             .as("revenue"),
            count(lit(1)).as("n_items"))
   }
 
@@ -859,7 +885,7 @@ object Relational {
     val nats = Seq(1, 2, 3, 4, 5, 6, 7)
     val cN = Tables.customer(spark, dir).filter(col("c_nationkey").isin(nats: _*))
     val avgbal = cN.filter(col("c_acctbal") > 0.0)
-      .agg((sum(dec(col("c_acctbal"))).cast("double") / count(lit(1))).as("a"))
+      .agg((sumMoney(cents(col("c_acctbal"))) / count(lit(1))).as("a"))
     val recent = Tables.orders(spark, dir)
       .filter(col("o_orderdate") >= lit("2000-02-01").cast("timestamp"))
       .select(col("o_custkey")).distinct()
@@ -868,7 +894,7 @@ object Relational {
       .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("numcust"),
-           sum(dec(col("c_acctbal"))).cast("double").as("totacctbal"))
+           sumMoney(cents(col("c_acctbal"))).as("totacctbal"))
       .orderBy(col("c_nationkey"))
   }
 

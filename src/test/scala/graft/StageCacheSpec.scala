@@ -1,41 +1,57 @@
 package graft
 
-/** Per-JVM stage cache lifecycle: build → cleanup (always-run) → rebuild. */
+/** Per-JVM stage cache lifecycle on the tmp tier: build → cleanup
+  * (always-run; this JVM's and dead JVMs' stage dirs only) → rebuild. */
 class StageCacheSpec extends SparkSpec {
 
-  test("cleanupStages deletes every materialized stage dir and the next query rebuilds") {
+  test("cleanupStages deletes this JVM's stage dir and the next query rebuilds") {
     // force at least one staged artifact into existence
     val before = SparkEntry.queries("q_dedup_minhash")(spark, sf001).count()
-    val stageRoot = new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_stage")
-    assert(stageRoot.exists() && stageRoot.listFiles().nonEmpty,
+    val own = SparkEntry.ownTmpStageDir
+    assert(own.exists() && own.listFiles().nonEmpty,
       "expected stage dirs on disk after a staged query")
     SparkEntry.cleanupStages()
-    assert(!stageRoot.exists(),
-      "cleanup must remove the stage root, stale prior-JVM dirs included")
+    assert(!own.exists(), "cleanup must remove this JVM's stage dir")
     // cache memo cleared → the same query transparently rebuilds
     assert(SparkEntry.queries("q_dedup_minhash")(spark, sf001).count() === before)
   }
 
+  test("cleanupStages keeps a live JVM's stage dir and removes it once that JVM is gone") {
+    // another process's subdirectory of the shared tmp tier, holding a
+    // committed stage
+    val other = new ProcessBuilder("sleep", "60").start()
+    val dir = new java.io.File(SparkEntry.ownTmpStageDir.getParentFile,
+      SparkEntry.jvmStageTag(other.toHandle))
+    try {
+      val marker = new java.io.File(dir, "ds/stage/_SUCCESS")
+      assert(marker.getParentFile.mkdirs() && marker.createNewFile())
+      SparkEntry.cleanupStages()
+      assert(marker.exists(), "cleanup must never touch a live JVM's stages")
+      other.destroy()
+      other.waitFor()
+      SparkEntry.cleanupStages()
+      assert(!dir.exists(), "cleanup must remove the stages of a JVM that is gone")
+    } finally {
+      other.destroyForcibly()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
+
   test("a stage dir without its _SUCCESS marker is rebuilt, not reused") {
     val before = SparkEntry.queries("q_dedup_minhash")(spark, sf001).count()
-    val stageRoot = new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_stage")
-    val markers = {
+    def markers(): Seq[java.io.File] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(stageRoot).filter(_.getName == "_SUCCESS")
+      walk(SparkEntry.ownTmpStageDir).filter(_.getName == "_SUCCESS")
     }
-    assert(markers.nonEmpty, "committed parquet stages must carry _SUCCESS")
+    val committed = markers()
+    assert(committed.nonEmpty, "committed parquet stages must carry _SUCCESS")
     // simulate a truncated/in-flight overwrite: the commit marker is
     // gone but the dir (and the JVM memo entry) remain
-    markers.foreach(m => assert(m.delete()))
+    committed.foreach(m => assert(m.delete()))
     assert(SparkEntry.queries("q_dedup_minhash")(spark, sf001).count() === before,
       "incomplete stage dirs must transparently rebuild")
-    val rewritten = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(stageRoot).count(_.getName == "_SUCCESS")
-    }
-    assert(rewritten === markers.size, "rebuild must recommit every stage")
+    assert(markers().size === committed.size, "rebuild must recommit every stage")
   }
 
   test("stage names are globally unique per builder: no two ops may claim one name") {

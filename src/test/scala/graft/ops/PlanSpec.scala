@@ -63,6 +63,35 @@ class PlanSpec extends SparkSpec {
       s"expected a partial (map-side) aggregate:\n$plan")
   }
 
+  test("money sums aggregate bigint cents, with no DECIMAL(28,x) buffer") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Sum}
+    import org.apache.spark.sql.types.LongType
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    // every query whose money sums run on the Relational money kernel
+    val moneyQueries = Seq("q_pricing_summary", "q_revenue_by_brand", "q_revenue_by_nation",
+      "q_window_running", "q_cube", "q_rollup", "q_unpivot", "q_orders_by_month",
+      "q_agg_salted", "q_above_avg", "q_shipping_priority", "q_returned_items",
+      "q_promo_revenue", "q_top_supplier", "q_large_volume_customer",
+      "q_local_supplier_volume", "q_forecast_revenue", "q_volume_shipping",
+      "q_market_share", "q_product_profit", "q_small_qty_revenue",
+      "q_disjunctive_revenue", "q_dormant_customers")
+    moneyQueries.foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf001)
+      df.collect()  // AQE finalizes this queryExecution's plan
+      val plan = df.queryExecution.executedPlan
+      val sums = aqe.collectWithSubqueries(plan) { case p => p }
+        .flatMap(_.expressions.flatMap(_.collect {
+          case AggregateExpression(s: Sum, _, _, _, _) => s
+        }))
+      assert(sums.nonEmpty, s"$q plans no sum:\n$plan")
+      assert(sums.forall(_.dataType == LongType),
+        s"$q sums over ${sums.map(_.dataType).distinct.mkString(", ")}:\n$plan")
+      val text = plan.toString
+      assert(!text.contains("decimal(28") && !text.contains("DecimalType(28"),
+        s"$q keeps a DECIMAL(28,x) buffer:\n$text")
+    }
+  }
+
   test("weighted sample plans as TakeOrderedAndProject, not a global sort or window") {
     val plan = planOf("q_sample_weighted")
     assert(plan.contains("TakeOrderedAndProject"), s"expected TakeOrdered:\n$plan")
