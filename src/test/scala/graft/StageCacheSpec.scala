@@ -4,13 +4,15 @@ package graft
   * (always-run; this JVM's and dead JVMs' stage dirs only) → rebuild. */
 class StageCacheSpec extends SparkSpec {
 
-  test("cleanupStages deletes this JVM's stage dir and the next query rebuilds") {
-    // force at least one staged artifact into existence
+  test("cleanupStages deletes every materialized stage dir and the next query rebuilds") {
+    // force at least one staged artifact into existence; this JVM
+    // materializes every stage under its own tmp-tier dir
     val before = SparkEntry.queries("q_dedup_minhash")(spark, sf001).count()
     val own = SparkEntry.ownTmpStageDir
-    assert(own.exists() && own.listFiles().nonEmpty,
-      "expected stage dirs on disk after a staged query")
+    val materialized = Option(own.listFiles()).toSeq.flatten
+    assert(materialized.nonEmpty, "expected stage dirs on disk after a staged query")
     SparkEntry.cleanupStages()
+    assert(materialized.forall(!_.exists()), "cleanup must remove every stage dir this JVM built")
     assert(!own.exists(), "cleanup must remove this JVM's stage dir")
     // cache memo cleared → the same query transparently rebuilds
     assert(SparkEntry.queries("q_dedup_minhash")(spark, sf001).count() === before)
