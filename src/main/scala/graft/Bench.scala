@@ -320,7 +320,7 @@ object Bench {
     // (still-loaded) run stays self-adjudicating. An IN-JVM retry-min
     // of polluted first runs was considered and REJECTED: codegen and
     // timed-alias stage builds are unrepeatable inside one JVM
-    // (writeStageOnce memoizes; the JIT cache persists), so a warm
+    // (a committed stage is adopted; the JIT cache persists), so a warm
     // retry measures ~steady and min(first, retry) would silently
     // replace the architectural first-run cost with the steady number
     // — for q_pca_power_iter (first 3.11 / steady 0.17, QUIET) that
@@ -431,7 +431,7 @@ object Bench {
     // cross-round record; shipping a known-polluted number with only
     // a flag burned judge time two rounds running. First-run cells
     // are NOT retimed: codegen and timed-alias stage builds are
-    // unrepeatable inside one JVM (writeStageOnce memoizes), so a
+    // unrepeatable inside one JVM (a committed stage is adopted), so a
     // warm retry would silently replace the architectural first-run
     // cost with a ~steady number (see the midrun-gate note above).
     var retimeBudgetSec = sys.env.get("SPARK_GRAFT_RETIME_WAIT_BUDGET_SEC")
@@ -475,7 +475,7 @@ object Bench {
           firstPrior.get(r.name).exists(p => r.first > 3.0 * p + 0.3) ||
           (!firstPrior.contains(r.name) && r.load >= quietBelow))
     // SELF-HEALING retime for FIRST-run cells (r14): the in-JVM
-    // objection above (writeStageOnce memoizes, the JIT cache
+    // objection above (a committed stage is adopted, the JIT cache
     // persists — a warm retry measures ~steady) does NOT apply to a
     // FRESH CHILD JVM, where codegen and stage builds are cold again.
     // The r13 driver artifact shipped q_ulm_prune at 137.5 s first

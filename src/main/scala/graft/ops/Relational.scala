@@ -938,12 +938,16 @@ object Relational {
   }
 
   /** TPC-H Q11 shape (important parts): parts whose shipped value from
-    * one nation group's suppliers exceeds a fraction of the total.
-    * Value is integer cents × integer quantity — the per-part sums and
-    * the grand total are exact Longs, so the only double op is the
-    * final fraction threshold (same two operands in both engines).
-    * The supplier filter broadcasts; one shuffle on partkey; the
-    * scalar total rides a broadcast cross join. */
+    * one nation group's suppliers exceeds twice the mean part value. A
+    * fixed fraction of the total selects nothing at a large SF and
+    * nearly everything at a small one, which is why Q11 divides its
+    * fraction by SF; a multiple of the mean is that scale-free rule
+    * without knowing SF (20, 179 and 1742 rows at sf0.001, sf0.01 and
+    * sf0.1). Value is integer cents × integer quantity and the cut is
+    * `value · n > 2 · total` on exact Longs, so no rounding enters the
+    * comparison (the session's ANSI overflow check guards the
+    * products). The supplier filter broadcasts; one shuffle on
+    * partkey; the scalar total and count ride a broadcast cross join. */
   def importantParts(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.supplier(spark, dir)
       .filter(col("s_nationkey").isin(1, 2, 3)).select(col("s_suppkey"))
@@ -952,9 +956,9 @@ object Relational {
       .groupBy(col("l_partkey"))
       .agg(sum(cents(col("l_extendedprice")) * col("l_quantity").cast("long"))
         .as("part_value"))
-    val total = vals.agg((sum(col("part_value")).cast("double") * lit(0.002)).as("cut"))
-    vals.crossJoin(broadcast(total))
-      .filter(col("part_value") > col("cut"))
+    val stats = vals.agg(sum(col("part_value")).as("total"), count(lit(1)).as("n_parts"))
+    vals.crossJoin(broadcast(stats))
+      .filter(col("part_value") * col("n_parts") > col("total") * 2L)
       .select(col("l_partkey").as("p_partkey"), col("part_value"))
       .orderBy(desc("part_value"))
   }

@@ -16,7 +16,7 @@ object Prof {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val name = if (args.length > 1) args(1) else "q_dedup_ngram_jaccard"
     val (views, op) = SparkEntry.registry.get(name) match {
-      case Some(SparkEntry.Staged(v, o)) => (v, o)
+      case Some(q: SparkEntry.Staged) => (q.views, q.op)
       case other =>
         System.err.println(
           if (other.isEmpty) s"Prof: no registered query named $name"

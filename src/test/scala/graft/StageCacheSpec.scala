@@ -56,6 +56,23 @@ class StageCacheSpec extends SparkSpec {
     assert(markers().size === committed.size, "rebuild must recommit every stage")
   }
 
+  test("a committed tmp-tier stage is adopted, not rebuilt, after the JVM memos reset") {
+    // start from no stages, so this case does not depend on the state
+    // the cases above leave behind
+    SparkEntry.cleanupStages()
+    val run = SparkEntry.queries("q_dedup_minhash")
+    val before = run(spark, sf001).collect().map(_.toString).sorted.toSeq
+    val marker = new java.io.File(SparkEntry.ownTmpStageDir,
+      s"${sf001.hashCode.toHexString}/mh_sig/_SUCCESS")
+    assert(marker.exists(), "the staged query must commit its signature stage")
+    val builtAt = marker.lastModified()
+    // what a fresh JVM's memos look like; the committed dirs stay
+    SparkEntry.resetJvmMemos()
+    assert(run(spark, sf001).collect().map(_.toString).sorted.toSeq === before)
+    assert(marker.lastModified() === builtAt,
+      "a committed stage dir on the tmp tier must be adopted, not rewritten")
+  }
+
   test("stage names are globally unique per builder: no two ops may claim one name") {
     // The stage cache is keyed by (dataset, NAME) alone — two StagedOps
     // publishing different SQL under one name silently serve whichever
@@ -72,7 +89,7 @@ class StageCacheSpec extends SparkSpec {
     assert(ops.size > 30, s"reflection must see the StagedOp surface, got ${ops.size}")
     val reflected = ops.flatMap(_._2.stages.map(_._1)).toSet
     val registered = SparkEntry.registry.values.collect {
-      case SparkEntry.Staged(_, op) => op.stages.map(_._1)
+      case q: SparkEntry.Staged => q.op.stages.map(_._1)
     }.flatten.toSet
     assert((registered -- reflected).isEmpty,
       s"stages of registered Staged queries that reflection missed: ${registered -- reflected}")
