@@ -1,36 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** Headline subset for the final (compact) metric line: one per
-    * operator family plus the historically slowest queries. The full
-    * per-query map is still printed (earlier line) and written to
-    * bench_full.json — this subset only bounds the FINAL line's length
-    * so it survives a bounded log-tail capture (the per-round driver
-    * keeps ~2000 chars; a 145-query map alone is larger than that, and
-    * three rounds of BENCH_r{N}.json came back `parsed: null`).
-    * Trimmed in round 7 to fit the first/steady pair per query into
-    * the same budget. */
-  private val headline = Seq(
-    "q_pricing_summary", "q_revenue_by_nation", "q_shipping_priority",
-    "q_market_share", "q_merge_scd2",
-    "q_dedup_minhash", "q_dedup_cluster", "q_dedup_prefix",
-    "q_dedup_simhash_pairs", "q_dedup_embedding_cosine",
-    "q_ann_ivf", "q_pagerank_loop", "q_text_tfidf",
-    "q_contamination_bloom", "q_events_sessionize",
-    "q_ann_ivfpq", "q_dedup_cluster_delta", "q_bpe_encode",
-    "q_global_rownum", "q_pca_deflate", "q_pca_power_iter")
-
-  /** Steady-run watchlist for the compact line: the queries whose
-    * first-vs-steady split past verdicts actually adjudicated
-    * (iterative builds, megaplan codegen, staged-chain billing).
-    * Every query's steady number is in bench_full.json — the compact
-    * line only carries the ones a cross-round reader needs, to stay
-    * inside the driver's ~2000-char log-tail window. */
-  private val steadyWatch = Seq(
-    "q_dedup_cluster", "q_dedup_cluster_delta", "q_ann_ivfpq",
-    "q_dedup_prefix", "q_pca_deflate", "q_pca_power_iter",
-    "q_pagerank_loop", "q_text_tfidf")
-
   /** Per-query quiet-history priors from the LAST committed
     * bench_full.json (read from disk BEFORE this run overwrites it —
     * with a clean tree that is exactly the committed artifact). The
@@ -168,7 +138,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val cpusN = cpus.trim.toIntOption.getOrElse(-1)
     // --only q_a,q_b: filtered single sweep (the CHILD mode of the
     // first-run healing pass below, also the incremental tool's timing
@@ -603,14 +573,16 @@ object Bench {
       try java.nio.file.Files.writeString(repoRootFile("bench_full.json"), full)
       catch { case scala.util.control.NonFatal(_) => () }
       // FINAL line, emitted last so a tail-bounded log capture ends with a
-      // complete, parseable record: headline queries only, plus every
-      // errored query (a failure must stay visible even off-headline).
-      // `queries` stays the first-run map (the number every prior round
-      // reported); `queries_steady` is the repeat-run dataflow cost.
+      // complete, parseable record: the rows marked for it
+      // (SparkEntry.BenchMark), plus every errored query (a failure must
+      // stay visible even off-headline). `queries` stays the first-run
+      // map (the number every prior round reported); `queries_steady`
+      // is the repeat-run dataflow cost.
+      def mark(r: R) = SparkEntry.registry(r.name).bench
       val compact = results.filter(r =>
-        headline.contains(r.name) || r.err1.isDefined || r.err2.isDefined)
+        mark(r).headline || r.err1.isDefined || r.err2.isDefined)
       val compactSteady = results.filter(r =>
-        steadyWatch.contains(r.name) && r.err1.isEmpty && r.err2.isEmpty)
+        mark(r).steady && r.err1.isEmpty && r.err2.isEmpty)
       // steady_suspect + retimed + first_retimed ride the compact line
       // too: normally empty (a quiet run); when non-empty they are
       // exactly the evidence a log-tail reader needs — which cells were

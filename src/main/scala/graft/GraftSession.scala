@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One local-session recipe for every driver-contract main (Verify,
-  * Bench) and dev tool (Prof, TimeQ, Explain, PlanDump), so they all
+  * Bench) and dev tool (Prof, TimeQ, PlanDump, ScanAudit), so they all
   * execute under the SAME session config as the correctness-verified
   * runs — previously each main carried its own copy-pasted builder and
   * Bench/TimeQ had silently dropped the UTC session timezone, meaning
@@ -17,6 +17,11 @@ import org.apache.spark.sql.SparkSession
   * externally-built sessions).
   */
 object GraftSession {
+  /** The core count every main runs with: `SPARK_GRAFT_CPUS`, or this
+    * machine's available processors when it is unset. */
+  val cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   def local(cpus: String, shuffle: String = null): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")

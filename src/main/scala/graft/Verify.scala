@@ -18,13 +18,13 @@ object Verify {
     *    (a rate/metric column that never fires);
     *  - `all_constant` — ≥2 rows but every column single-valued (the
     *    result is one row stuttered).
-    * Exceptions live on [[SparkEntry.allowDegenerate]] with a comment
-    * per entry; allowlisted hits are still REPORTED (under
+    * Exceptions are each row's [[SparkEntry.Query.excuses]], with a
+    * comment on the row; excused hits are still REPORTED (under
     * `allowlisted`) so the artifact shows what was excused. One
     * aggregate pass per query over the (small, already-written)
     * result — countDistinct ignores NULLs, so all-NULL reads as
     * distinct 0. */
-  private def degeneracy(df: org.apache.spark.sql.DataFrame, rows: Long): Seq[String] = {
+  private[graft] def degeneracy(df: org.apache.spark.sql.DataFrame, rows: Long): Seq[String] = {
     if (rows == 0) return Nil
     val fields = df.schema.fields.toSeq
     val numeric = fields.filter(_.dataType match {
@@ -51,13 +51,19 @@ object Verify {
     perCol ++ (if (allConstant) Seq("all_constant") else Nil)
   }
 
+  /** `flags` split into (excused, flagged) by `q`'s row. Exact match
+    * only: a bare column name would excuse EVERY flag kind for that
+    * column (an all_zero excuse silently covering a later all_NULL
+    * regression). */
+  private[graft] def excused(q: SparkEntry.Query, flags: Seq[String]): (Seq[String], Seq[String]) =
+    flags.partition(q.excuses)
+
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [comma-separated query-name filter (local dev)]
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     val rowCounts = scala.collection.mutable.Map.empty[String, Long]
     val degFlags = scala.collection.mutable.Map.empty[String, Seq[String]]
@@ -78,7 +84,7 @@ object Verify {
         // oracle is a VACUOUS pass (r9 shipped one — q_cms_topusers
         // proved only that nobody was frequent). Count the written
         // parquet (footer-cheap) so emptiness is visible in the
-        // artifact, and flag any empty query not explicitly allowed.
+        // artifact, and flag every empty query.
         val written = spark.read.parquet(s"$outDir/$name")
         val rows = written.count()
         rowCounts(name) = rows
@@ -89,32 +95,22 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val flaggedEmpty = rowCounts.collect {
-      case (n, 0L) if !SparkEntry.allowEmpty(n) => n
-    }.toSeq.sorted
+    val flaggedEmpty = rowCounts.collect { case (n, 0L) => n }.toSeq.sorted
     flaggedEmpty.foreach { n =>
       System.err.println(
-        s"[verify] VACUOUS: $n returned 0 rows and is not on " +
-          "SparkEntry.allowEmpty — its oracle pass proves nothing")
+        s"[verify] VACUOUS: $n returned 0 rows — its oracle pass proves nothing")
     }
-    // degeneracy split: allowlisted hits stay visible but don't flag
+    // degeneracy split: excused hits stay visible but don't flag
     val (degAllowed, degFlagged) = degFlags.toSeq.sortBy(_._1).map {
       case (name, flags) =>
-        // exact-match only: a bare column name in the allowlist would
-        // excuse EVERY flag kind for that column (an all_zero excuse
-        // silently covering a later all_NULL regression), so entries
-        // must be fully-qualified flag strings (`all_zero:col`) or "*"
-        val allow = SparkEntry.allowDegenerate.getOrElse(name, Set.empty)
-        val (ok, bad) = flags.partition { f =>
-          allow.contains("*") || allow.contains(f)
-        }
+        val (ok, bad) = excused(SparkEntry.registry(name), flags)
         (name -> ok, name -> bad)
     }.unzip
     val degBad = degFlagged.filter(_._2.nonEmpty)
     degBad.foreach { case (n, fs) =>
       System.err.println(
-        s"[verify] DEGENERATE: $n — ${fs.mkString(", ")} (not on " +
-          "SparkEntry.allowDegenerate; an oracle pass on a constant/" +
+        s"[verify] DEGENERATE: $n — ${fs.mkString(", ")} (not in " +
+          "its row's excuses; an oracle pass on a constant/" +
           "all-NULL metric proves nothing)")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -143,8 +139,8 @@ object Verify {
       flaggedEmpty.map(q).mkString("\"flagged_empty\": [", ",", "]}")
     Files.writeString(Paths.get(s"$outDir/row_counts.json"), countsJson)
     // the degeneracy sidecar: `flagged` must stay empty (the gate);
-    // `allowlisted` shows what was excused and why a reader should
-    // check SparkEntry.allowDegenerate's comments
+    // `allowlisted` shows what was excused; each excuse's reason is
+    // the comment on its SparkEntry.registry row
     def degMap(xs: Seq[(String, Seq[String])]): String =
       xs.map { case (n, fs) =>
         s"${q(n)}: ${fs.map(q).mkString("[", ",", "]")}"

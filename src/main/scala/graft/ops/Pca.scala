@@ -94,7 +94,7 @@ object PcaLoop {
 
   /** Per-invocation token: salts the global-temp-view and scratch-view
     * names so two concurrent invocations over the same matrix table on
-    * one SparkContext cannot race on create/drop (the abMonitor
+    * one SparkContext cannot race on create/drop (the abMonitorBatch
     * view-salting rule, applied here after the r13 advice). */
   private val invocations = new java.util.concurrent.atomic.AtomicLong(0L)
 

@@ -1987,7 +1987,7 @@ object StreamingOps {
       .getOrElse(sys.error(s"ab-monitor: $root/ab_users missing after publish"))
     // foreachBatch gotcha: register the view on the DataFrame's OWN
     // session (a micro-batch clone) and run the SQL there too.
-    // The view name carries (root, batchSeq) so two abMonitor streams
+    // The view name carries (root, batchSeq) so two abMonitorBatch calls
     // sharing one session can't race on a fixed name, and the drop is
     // try/finally so a failing SQL or publish can't leak the view for
     // the session's lifetime (unsigned hex of root.hashCode keeps the
@@ -2008,17 +2008,6 @@ object StreamingOps {
     }
   }
 
-  /** The streaming wrapper: each micro-batch of raw events folds into
-    * the conversion state and appends its z row. */
-  def abMonitor(events: DataFrame, stateRoot: String, checkpointDir: String) = {
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        abMonitorBatch(batch.sparkSession, batch, batchId, stateRoot)
-      }
-  }
-
   /** Streaming twin of the PPJoin prefix-filter dedup
     * ([[graft.ops.SqlOps.dedupPrefixDelta]]'s per-batch form): each
     * arriving micro-batch of admitted doc ids PREFIX-PROBES the
@@ -2030,7 +2019,7 @@ object StreamingOps {
     * is a pure function of the delivered doc set, so at-least-once
     * redelivery re-derives the same rows and the fold is a no-op —
     * the ingest-artifact discipline. The SQL is
-    * [[graft.ops.SqlOps.prefixProbeBody]] VERBATIM (the abMonitor
+    * [[graft.ops.SqlOps.prefixProbeBody]] VERBATIM (the abMonitorBatch
     * shared-pieces protocol): stream and batch cannot drift on
     * prefix length, length filter, or the position-filter α;
     * StreamingSpec asserts the folded set equals the batch probe

@@ -18,7 +18,7 @@ object PlanDump {
     val names = args.drop(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
-    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     def plan(n: String): String = {
       val df = SparkEntry.queries(n)(spark, sfDir)
       df.queryExecution.explainString(

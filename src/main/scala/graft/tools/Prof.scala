@@ -23,8 +23,7 @@ object Prof {
           else s"Prof: $name is not a staged query; Prof profiles only the stages of a Staged row")
         sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.GraftSession.local(cpus)
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     graft.functions.GraftFunctions.registerAll(spark)
     views.foreach(v => graft.Tables(spark, sfDir, v).createOrReplaceTempView(v))
 

@@ -1,7 +1,7 @@
 package graft.tools
 object ScanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.local("8")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     val sfDir = "/root/testdata/sf0.001"
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

@@ -33,7 +33,7 @@ object TimeQ {
     val prewarm = flags.contains("--prewarm")
     val sfDir = rest(0)
     val names = rest.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.cpus
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val spark = graft.GraftSession.local(cpus, shuffle)
     if (cold) graft.SparkEntry.cleanupStages()

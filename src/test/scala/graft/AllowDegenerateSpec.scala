@@ -1,7 +1,7 @@
 package graft
 
-/** The SF-edge `allowDegenerate` entries excuse a zero column at one
-  * oracle SF only because a sibling SF exercises it. Each entry's
+/** An SF-edge excuse on a registry row excuses a zero column at one
+  * oracle SF only because a sibling SF exercises it. Each excuse's
   * comment names that sibling; this spec runs the query there and
   * asserts the column is live, so the excuse cannot outlive its
   * evidence. */
@@ -9,9 +9,9 @@ class AllowDegenerateSpec extends SparkSpec {
   private val sf01 = s"${new java.io.File(sf001).getParent}/sf0.01"
 
   /** The non-NULL values of `column` in query `q`'s result at sf0.01,
-    * after checking that the entry being justified is still allowlisted. */
+    * after checking that the excuse being justified is still on its row. */
   private def valuesAtSf01(q: String, column: String): Seq[Double] = {
-    assert(SparkEntry.allowDegenerate.get(q).exists(_.contains(s"all_zero:$column")),
+    assert(SparkEntry.registry(q).excuses.contains(s"all_zero:$column"),
       s"$q no longer excuses all_zero:$column; drop its case here")
     SparkEntry.queries(q)(spark, sf01).select(column).collect().toSeq
       .filterNot(_.isNullAt(0)).map(_.getAs[Number](0).doubleValue)

@@ -11,10 +11,8 @@ class OpsSpec extends SparkSpec {
   private def run(name: String) = SparkEntry.queries(name)(spark, sf001)
 
   test("every registered query returns rows at sf0.001") {
-    val allowEmpty = Set("q_anti_join") // selective NOT EXISTS may be empty at tiny sf
     SparkEntry.queries.keys.foreach { name =>
-      val n = run(name).count()
-      assert(allowEmpty(name) || n > 0, s"$name returned 0 rows")
+      assert(run(name).count() > 0, s"$name returned 0 rows")
     }
   }
 

@@ -127,7 +127,8 @@ def main(argv):
     # Fold the Verify degeneracy sidecars into the committed artifact
     # (r13 verdict #3: the gate was only readable by re-running Verify).
     # `flagged` must be {} at every leg; `allowlisted` stays visible so
-    # a reader can check each excuse against SparkEntry.allowDegenerate.
+    # a reader can check each excuse against the comment on its
+    # SparkEntry.registry row.
     def degeneracy(out_dir):
         p = f"{out_dir}/degeneracy.json"
         if not os.path.exists(p):
